@@ -130,7 +130,7 @@ object Queries {
       |SELECT doc_id, drop_reason, drop_reason IS NULL AS keep FROM reasons""".stripMargin
 
   // ---- q3: PII/toxicity scrub chain with planted entities (SURVEY §7.1;
-  //          counts staged exactly like Scrubber.scrubCounts) ----
+  //          counts staged exactly like Scrubber.scrubCountsScala) ----
   private def plantedCol: Column = {
     val id = col("doc_id")
     concat(col("text"),
@@ -147,10 +147,10 @@ object Queries {
   private def q3(s: SparkSession, dir: String): DataFrame = {
     val aug = plantedCol
     // ONE fused matcher sweep per category (scrubWithCounts — fuzz-verified
-    // identical to the staged Column chain by ScrubberSpec/
-    // CaptionFeaturesSpec) instead of ~12 regexp passes per row across the
-    // scrub chain + four staged count chains; null text → null struct →
-    // null outputs, matching scrub(null)/element_at(scrubCounts(null))
+    // identical to scrubScala + scrubCountsScala by CaptionFeaturesSpec)
+    // instead of ~12 regexp passes per row across the scrub chain + four
+    // staged count chains; null text → null struct → null outputs, matching
+    // scrub(null)
     val scrubUdf = udf { (text: String) =>
       if (text == null) null
       else {
@@ -318,10 +318,10 @@ object Queries {
 
   private def q9(s: SparkSession, dir: String): DataFrame = {
     val base = t(s, dir, "documents")
-    // all five marker counts in ONE tokenization pass (JIT'd UDF): the
-    // five per-language TF.markerHits columns each re-split and re-filtered
-    // the text through interpreted array lambdas — 5× the tokenization for
-    // the same counts. Tokenizer contract identical (lowercase, java-regex
+    // all five marker counts in ONE tokenization pass (JIT'd UDF): five
+    // per-language marker Columns each re-split and re-filtered the text
+    // through interpreted array lambdas — 5× the tokenization for the same
+    // counts. Tokenizer contract identical (lowercase, java-regex
     // \s runs, empties dropped); null text → null struct → null hits,
     // exactly like size(filter(split(null))). Counts unchanged.
     val sets: Array[Set[String]] = langMarkers.map(_._2.toSet).toArray
@@ -568,11 +568,14 @@ object Queries {
     *
     * Returns (lookup frame of (idx, <keyCol>), n = lookup size).
     */
-  private def boundedLookup(df: DataFrame, keyCol: String,
+  private[graft] def boundedLookup(df: DataFrame, keyCol: String,
       cap: Long, qname: String): (DataFrame, Long) = {
+    // count_distinct ignores NULL, but the lookup keeps a NULL key as one
+    // more slot: count it here too, so this guard and the require on n
+    // below agree at the cap boundary
     if (df.count() > cap)
-      require(df.select(count_distinct(col(keyCol))).head().getLong(0) <= cap,
-        s"$qname lookup side unexpectedly large")
+      require(df.select(count_distinct(col(keyCol)) + max(col(keyCol).isNull).cast("long"))
+        .head().getLong(0) <= cap, s"$qname lookup side unexpectedly large")
     // the appended null carries the key column's OWN type (from the schema,
     // not a hand-written string that could drift from the parquet and
     // silently coerce the whole key array)
@@ -623,24 +626,28 @@ object Queries {
   //          distinct, map-side partial) instead of two separate
   //          distinct-shuffled scans; exploding the two tiny sets rebuilds
   //          the identical cross product ----
-  private def q20(s: SparkSession, dir: String): DataFrame =
+  private def q20(s: SparkSession, dir: String): DataFrame = {
     // collect_set DROPS nulls where SELECT DISTINCT keeps one — a null flag
     // per column re-appends the null element so the one-scan shape stays
     // byte-equivalent to the oracle's DISTINCT even on null-bearing data
-    // (max over zero rows is null → otherwise-branch → empty set, matching)
-    t(s, dir, "lineitem")
+    // (max over zero rows is null → otherwise-branch → empty set, matching).
+    // The appended null carries the flag column's own type, as in
+    // boundedLookup.
+    val lineitem = t(s, dir, "lineitem")
+    def withNull(set: String, flag: String, c: String): Column =
+      when(col(flag), array_append(col(set), lit(null).cast(lineitem.schema(c).dataType)))
+        .otherwise(col(set))
+    lineitem
       .agg(collect_set(col("l_returnflag")).as("__rfs"),
         max(col("l_returnflag").isNull).as("__rfn"),
         collect_set(col("l_linestatus")).as("__lss"),
         max(col("l_linestatus").isNull).as("__lsn"))
-      .select(
-        explode(when(col("__rfn"), array_append(col("__rfs"), lit(null).cast("string")))
-          .otherwise(col("__rfs"))).as("l_returnflag"),
+      .select(explode(withNull("__rfs", "__rfn", "l_returnflag")).as("l_returnflag"),
         col("__lss"), col("__lsn"))
       .select(col("l_returnflag"),
-        explode(when(col("__lsn"), array_append(col("__lss"), lit(null).cast("string")))
-          .otherwise(col("__lss"))).as("l_linestatus"))
+        explode(withNull("__lss", "__lsn", "l_linestatus")).as("l_linestatus"))
       .crossJoin(t(s, dir, "region").select(col("r_name")).distinct())
+  }
 
   private val q20Sql =
     """SELECT l_returnflag, l_linestatus, r_name

@@ -5,7 +5,7 @@ import graft.pipeline._
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val cores = args(0).toInt
-    val stage = args(1) // gen | score | full
+    val stage = args(1) // gen | full
     val rows = 8000000L
     val spark = GraftSession.builder(s"local[$cores]", cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -14,7 +14,6 @@ object ScaleProbe {
       val c = SyntheticImages.generate(spark, n, 42, cores * 4)
       val df = stage match {
         case "gen" => c.toDF()
-        case "score" => QualityFilter.scoreCols(spark, c.toDF())
         case "full" => QualityFilter.run(spark, c)
       }
       df.write.mode("overwrite").format("noop").save()

@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * 21-110`); we keep both and add the near-dup family it lacks.
   *
   * Portability: where an operator is also exposed as a driver-checked oracle
-  * query, hashes are md5-derived ([[TF.portableHash]]) so DuckDB computes the
-  * same values. Spark-only paths (Bloom) use xxhash64 — faster, codegen'd.
+  * query, hashes are md5-derived (`md5(TF.normalized(text))`) so DuckDB
+  * computes the same values. Spark-only paths (Bloom) use faster xxhash64.
   */
 object Dedup {
 

@@ -15,7 +15,8 @@ package graft.functions
   *    Character.isWhitespace, which adds unicode spaces)
   *  - symbol = any char outside [A-Za-z0-9 \t\n\r] (note: \x0B and \f ARE
   *    symbols, matching the rule regex class)
-  *  - char run = >= maxRun identical consecutive chars (regex (.)\1{n-1,})
+  *  - char run = >= maxRun identical consecutive chars, line terminators
+  *    included (regex ([\s\S])\1{n-1,})
   */
 final case class CaptionFeatures(
     len: Int,

@@ -44,33 +44,6 @@ object Scrubber {
   def scrub(text: Column): Column =
     allPatterns.foldLeft(text) { case (c, (_, pat, rep)) => regexp_replace(c, pat, rep) }
 
-  /** Per-category match counts as MAP<STRING,INT>. Counted BEFORE any
-    * replacement of the same category, but AFTER prior categories' scrubs —
-    * identical staging to [[scrub]] so counts agree with what was replaced.
-    */
-  def scrubCounts(text: Column): Column = {
-    // stage i = text after scrubbing categories < i
-    val staged = allPatterns.scanLeft(text) { case (c, (_, pat, rep)) =>
-      regexp_replace(c, pat, rep)
-    }
-    val counts = allPatterns.zip(staged).map { case ((_, pat, _), stage) =>
-      coalesce(regexp_count(stage, lit(pat)), lit(0))
-    }
-    map_from_arrays(
-      array(allPatterns.map(p => lit(p._1)): _*),
-      array(counts: _*))
-  }
-
-  /** Total scrubbed-entity count (int) — cheaper column for metrics. */
-  def scrubTotal(text: Column): Column = {
-    val staged = allPatterns.scanLeft(text) { case (c, (_, pat, rep)) =>
-      regexp_replace(c, pat, rep)
-    }
-    allPatterns.zip(staged)
-      .map { case ((_, pat, _), stage) => coalesce(regexp_count(stage, lit(pat)), lit(0)) }
-      .reduce(_ + _)
-  }
-
   // ---- pure-Scala twin (the oracle path; java.util.regex == Spark's
   //      engine, so behavior is identical by construction) ----
 
@@ -84,6 +57,10 @@ object Scrubber {
       p.matcher(t).replaceAll(java.util.regex.Matcher.quoteReplacement(r))
     }
 
+  /** Per-category match counts. Counted BEFORE any replacement of the same
+    * category, but AFTER prior categories' scrubs — identical staging to
+    * [[scrubScala]] so counts agree with what was replaced.
+    */
   def scrubCountsScala(text: String): Map[String, Int] =
     if (text == null) compiled.map { case (n, _, _) => n -> 0 }.toMap
     else {
@@ -100,7 +77,7 @@ object Scrubber {
   /** FUSED single-pass scrub+count — the pipeline hot path. One matcher
     * sweep per category (find + appendReplacement counts and replaces in
     * the same pass), ~2× fewer regex passes than scrubScala +
-    * scrubCountsScala and ~3× fewer than the staged Column chain. Output is
+    * scrubCountsScala. Output is
     * IDENTICAL to (scrubScala, scrubCountsScala) — fuzz-verified by
     * ScrubberSpec.
     *

@@ -41,31 +41,6 @@ object TextFunctions {
     when(n > 0, symbols.cast("double") / n.cast("double"))
   }
 
-  /** Mean token length — short-gibberish / over-long-token detector. */
-  def meanTokenLength(text: Column): Column = {
-    val ts = tokens(text)
-    when(size(ts) > 0,
-      aggregate(ts, lit(0), (acc, t) => acc + length(t)).cast("double") / size(ts).cast("double"))
-  }
-
-  /** Longest run of a single repeated character (e.g. "aaaaaa") detected via
-    * backreference regex — 1 if such a run of >= `n` exists, else 0.
-    * `[\s\S]` (not `.`) so line-terminator runs count too, matching the
-    * single-scan extractor (CaptionFeatures) and the pure-Scala oracle —
-    * the streaming and batch paths must agree on newline-run captions.
-    */
-  def hasCharRun(text: Column, n: Int): Column =
-    text.rlike(s"([\\s\\S])\\1{${n - 1},}")
-
-  /** Stopword hit count for a marker list: number of tokens that are in the
-    * list. Basis of the SQL-expressible language heuristic.
-    */
-  def markerHits(text: Column, markers: Seq[String]): Column = {
-    val lowered = lower(text)
-    val toks = filter(split(lowered, "\\s+"), t => length(t) > 0)
-    size(filter(toks, t => t.isin(markers.map(lit): _*)))
-  }
-
   /** Document fingerprint: 64-bit hex of md5 over whitespace-normalized,
     * lowercased text. md5 is identical across Spark/DuckDB → oracle-portable
     * (unlike xxhash64 which only Spark has).
@@ -122,25 +97,5 @@ object TextFunctions {
       }
     }
     h
-  }
-
-  /** Portable 63-bit positive hash from md5 (same value in Spark, DuckDB and
-    * plain Scala): first 15 hex digits as a base-16 long. Used wherever the
-    * oracle must reproduce a hash; xxhash64 stays for Spark-only paths (it is
-    * faster and codegen'd).
-    */
-  def portableHash(s: Column): Column =
-    conv(substring(md5(s), 1, 15), 16, 10).cast("long")
-
-  /** Word n-gram shingles of the normalized text, e.g. n=3 →
-    * ["a b c", "b c d", ...]; empty array when fewer than n tokens.
-    * Built with sequence+transform (no UDF, no explode needed).
-    */
-  def shingles(text: Column, n: Int): Column = {
-    val toks = tokens(normalized(text))
-    val k = size(toks) - (n - 1)
-    when(k > 0,
-      transform(sequence(lit(1), k), i => concat_ws(" ", slice(toks, i, lit(n)))))
-      .otherwise(array().cast("array<string>"))
   }
 }

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.util.Jsons
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
@@ -46,19 +47,11 @@ object RunReport {
       if (in == 0) 0.0 else totals.getLong(3).toDouble / in)
   }
 
-  private def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
   def toJson(s: Summary): String = {
     def m(mp: Map[String, Long]) =
       mp.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""${jsonEscape(k)}":$v""" }.mkString("{", ",", "}")
-    s"""{"run_id":"${jsonEscape(s.runId)}","rows_in":${s.rowsIn},"rows_out":${s.rowsOut},""" +
+        .map { case (k, v) => s"""${Jsons.quote(k)}:$v""" }.mkString("{", ",", "}")
+    s"""{"run_id":${Jsons.quote(s.runId)},"rows_in":${s.rowsIn},"rows_out":${s.rowsOut},""" +
       f""""keep_rate":${s.keepRate}%.6f,"partitions":${s.partitions},""" +
       f""""max_partition_share":${s.maxPartitionShare}%.6f,""" +
       s""""drop_reasons":${m(s.dropReasons)},"scrub_counts":${m(s.scrubCounts)}}"""

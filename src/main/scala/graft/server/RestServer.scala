@@ -1,6 +1,7 @@
 package graft.server
 
 import graft.plan.PlanRunner
+import graft.util.Jsons
 import org.apache.spark.sql.SparkSession
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -53,14 +54,6 @@ final class RestServer(spark: SparkSession, port: Int = 0,
     ex.close()
   }
 
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
   def start(): RestServer = {
     server.createContext("/", (ex: com.sun.net.httpserver.HttpExchange) => {
       // the plan-builder page (reference core/ui/); unknown paths 404 so
@@ -85,19 +78,19 @@ final class RestServer(spark: SparkSession, port: Int = 0,
           catch { case e: Exception => Left(e) }
         parsed match {
           case Left(e) =>
-            respond(ex, 400, s"""{"error":"invalid plan: ${esc(String.valueOf(e.getMessage))}"}""")
+            respond(ex, 400, s"""{"error":"invalid plan: ${Jsons.escape(String.valueOf(e.getMessage))}"}""")
           case Right(plan) =>
             try {
               val o = PlanRunner.run(spark, plan)
               val vs = o.validations.map(v =>
-                s"""{"rule":"${esc(v.rule)}","total":${v.total},"errors":${v.errors},"success":${v.success}}""")
+                s"""{"rule":${Jsons.quote(v.rule)},"total":${v.total},"errors":${v.errors},"success":${v.success}}""")
                 .mkString("[", ",", "]")
               respond(ex, 200,
-                s"""{"plan":"${esc(o.plan)}","rows_in":${o.rowsIn},"rows_out":${o.rowsOut},""" +
+                s"""{"plan":${Jsons.quote(o.plan)},"rows_in":${o.rowsIn},"rows_out":${o.rowsOut},""" +
                   s""""success":${o.success},"validations":$vs}""")
             } catch {
               case e: Exception =>
-                respond(ex, 500, s"""{"error":"${esc(String.valueOf(e.getMessage))}"}""")
+                respond(ex, 500, s"""{"error":${Jsons.quote(String.valueOf(e.getMessage))}}""")
             }
         }
       }
@@ -108,12 +101,12 @@ final class RestServer(spark: SparkSession, port: Int = 0,
       try {
         (ex.getRequestMethod, segs) match {
           case ("GET", Array()) =>
-            respond(ex, 200, store.list().map(n => s""""${esc(n)}"""").mkString("[", ",", "]"))
+            respond(ex, 200, store.list().map(Jsons.quote).mkString("[", ",", "]"))
           case ("PUT", Array(name)) =>
             store.save(name, new String(ex.getRequestBody.readAllBytes(), UTF_8))
-            respond(ex, 200, s"""{"saved":"${esc(name)}"}""")
+            respond(ex, 200, s"""{"saved":${Jsons.quote(name)}}""")
           case ("GET", Array(name)) => store.get(name) match {
-            case Some(text) => respond(ex, 200, s"""{"name":"${esc(name)}","plan":"${esc(text)}"}""")
+            case Some(text) => respond(ex, 200, s"""{"name":${Jsons.quote(name)},"plan":${Jsons.quote(text)}}""")
             case None => respond(ex, 404, """{"error":"not found"}""")
           }
           case ("DELETE", Array(name)) =>
@@ -134,7 +127,7 @@ final class RestServer(spark: SparkSession, port: Int = 0,
                     val o = graft.plan.MultiPlanRunner.run(
                       spark, graft.plan.MultiPlanRunner.parseJson(json))
                     val counts = o.insertOrder.map(t =>
-                      s""""${esc(t)}":${o.counts(t)}""").mkString("{", ",", "}")
+                      s"""${Jsons.quote(t)}:${o.counts(t)}""").mkString("{", ",", "}")
                     (o.plan, o.success, s""""counts":$counts""")
                   } else {
                     val o = PlanRunner.run(spark, PlanRunner.parseJson(json))
@@ -144,19 +137,19 @@ final class RestServer(spark: SparkSession, port: Int = 0,
                 store.recordRun(name, runId, if (success) "success" else "failed",
                   System.currentTimeMillis())
                 respond(ex, 200,
-                  s"""{"plan":"${esc(planName)}","run_id":"$runId","success":$success,$detail}""")
+                  s"""{"plan":${Jsons.quote(planName)},"run_id":"$runId","success":$success,$detail}""")
               } catch {
                 case e: Exception =>
                   store.recordRun(name, runId, "error",
                     System.currentTimeMillis(), String.valueOf(e.getMessage))
-                  respond(ex, 500, s"""{"error":"${esc(String.valueOf(e.getMessage))}"}""")
+                  respond(ex, 500, s"""{"error":${Jsons.quote(String.valueOf(e.getMessage))}}""")
               }
           }
           case _ => respond(ex, 405, """{"error":"unsupported"}""")
         }
       } catch {
         case e: IllegalArgumentException =>
-          respond(ex, 400, s"""{"error":"${esc(String.valueOf(e.getMessage))}"}""")
+          respond(ex, 400, s"""{"error":${Jsons.quote(String.valueOf(e.getMessage))}}""")
       }
     })
     server.createContext("/runs", (ex: com.sun.net.httpserver.HttpExchange) =>
@@ -167,12 +160,12 @@ final class RestServer(spark: SparkSession, port: Int = 0,
         val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
         val samples = Preview.preview(spark, body)
         val json = samples.map { s =>
-          s"""{"dataset":"${esc(s.dataset)}","rows":${s.rows.mkString("[", ",", "]")}}"""
+          s"""{"dataset":${Jsons.quote(s.dataset)},"rows":${s.rows.mkString("[", ",", "]")}}"""
         }.mkString("[", ",", "]")
         respond(ex, 200, s"""{"samples":$json}""")
       } catch {
         case e: Exception =>
-          respond(ex, 400, s"""{"error":"${esc(String.valueOf(e.getMessage))}"}""")
+          respond(ex, 400, s"""{"error":${Jsons.quote(String.valueOf(e.getMessage))}}""")
       }
     })
     server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))

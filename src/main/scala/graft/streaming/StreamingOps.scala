@@ -8,38 +8,24 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 /** Structured Streaming surface. The reference has NO real streaming — its
   * "streaming" is rate-controlled batch delivery (SURVEY §2.8) — so this
-  * module is the Spark-first upgrade: the same declarative rule set runs
-  * unchanged on `readStream` sources because [[RuleEngine.annotate]] is a
-  * stateless projection; watermarked windowed aggregation and
+  * module is the Spark-first upgrade: the batch quality filter
+  * ([[QualityFilter.runDF]]) runs unchanged on `readStream` sources because
+  * it is a stateless projection; watermarked windowed aggregation and
   * `flatMapGroupsWithState` cover the stateful shapes the reference's
   * duration/rate execution strategies approximate.
   */
 object StreamingOps {
 
-  /** The quality-filter rule annotation applied to a STREAMING DataFrame of
-    * scored image rows — identical code path to batch (one projection; no
-    * state, no watermark needed).
-    */
-  def annotateStream(stream: DataFrame, cfg: FilterConfig = FilterConfig()): DataFrame =
-    RuleEngine.annotate(stream, QualityFilter.rules(cfg))
-
   /** The COMPLETE quality-filter stage on a streaming frame with the
-    * input_hint schema: score (langid + perplexity via the columnar UDF —
-    * stateless, stream-legal) → annotate → scrub kept captions. Identical
-    * semantics to the batch [[QualityFilter.runDF]] rule-for-rule (the
-    * newline-run parity spec pins the two paths); only the feature
-    * evaluation differs (Column regexes here vs the fused single-scan
-    * extractor in batch).
+    * input_hint schema: the batch [[QualityFilter.runDF]] itself (score →
+    * annotate → scrub kept captions), so stream and batch share one plan
+    * and cannot drift apart rule-for-rule.
     */
   def filterStream(
       spark: SparkSession,
       stream: DataFrame,
-      cfg: FilterConfig = FilterConfig()): DataFrame = {
-    val scored = QualityFilter.scoreCols(spark, stream)
-    val annotated = annotateStream(scored, cfg)
-    annotated.withColumn("scrubbed_caption",
-      when(col(RuleEngine.KeepCol), graft.functions.Scrubber.scrub(col("caption"))))
-  }
+      cfg: FilterConfig = FilterConfig()): DataFrame =
+    QualityFilter.runDF(spark, stream, cfg)
 
   /** Windowed drop-reason counts with a watermark — streaming analog of the
     * per-partition metrics table (FIXTURES F4): one metrics row per

@@ -64,4 +64,18 @@ class QueriesNullSpec extends SparkSuite {
     (3L to 5L).foreach(k => assert(rows(k) == lookup((k % 3).toInt)))
     (0L to 2L).foreach(k => assert(rows(k).exists(_.startsWith("INVALID_"))))
   }
+
+  test("boundedLookup: a NULL key counts toward the cap in the guard as in the lookup") {
+    // 4 rows > cap 3, so the guard runs: 2 distinct keys + NULL = 3 slots fit
+    val fits = Seq(Option(1L), Option(1L), Option(2L), None).toDF("k")
+    val (lookup, n) = Queries.boundedLookup(fits, "k", 3L, "qb")
+    assert(n == 3)
+    assert(lookup.orderBy("idx").collect().map(r => Option(r.get(1))).toSeq ==
+      Seq(Option(1L), Option(2L), None))
+    // 3 distinct keys + NULL = 4 slots > cap 3: the guard rejects it before
+    // the lookup materializes (the post-collect check would append ": 4")
+    val over = Seq(Option(1L), Option(2L), Option(3L), None).toDF("k")
+    val e = intercept[IllegalArgumentException](Queries.boundedLookup(over, "k", 3L, "qb"))
+    assert(e.getMessage == "requirement failed: qb lookup side unexpectedly large")
+  }
 }

@@ -21,13 +21,11 @@ class ScrubberSpec extends SparkSuite {
 
   test("Spark scrub == pure-Scala scrub == expected, with counts") {
     val df = cases.map(_._1).toDF("t")
-      .select(col("t"), Scrubber.scrub(col("t")).as("s"), Scrubber.scrubCounts(col("t")).as("c"))
+      .select(col("t"), Scrubber.scrub(col("t")).as("s"))
     val rows = df.collect()
     cases.zip(rows).foreach { case ((in, expOut, expCounts), row) =>
       assert(row.getString(1) == expOut, s"spark scrub of '$in'")
       assert(Scrubber.scrubScala(in) == expOut, s"scala scrub of '$in'")
-      val gotCounts = row.getMap[String, Int](2)
-      expCounts.foreach { case (k, v) => assert(gotCounts(k) == v, s"count $k for '$in'") }
       val scalaCounts = Scrubber.scrubCountsScala(in)
       expCounts.foreach { case (k, v) => assert(scalaCounts(k) == v, s"scala count $k for '$in'") }
     }

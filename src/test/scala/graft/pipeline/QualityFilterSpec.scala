@@ -77,42 +77,22 @@ class QualityFilterSpec extends SparkSuite {
     assert(r.contains("[EMAIL]"))
   }
 
-  test("mapPartitions scoring and columnar UDF scoring produce identical results") {
-    val ds = SyntheticImages.generate(spark, 800L, seed = 3L, partitions = 5)
-    val viaMp = QualityFilter.score(spark, ds).toDF()
-      .select("image_id", "lang", "lang_conf", "ppl")
-      .collect().map(r => r.getString(0) -> ((r.getString(1), r.getDouble(2), r.getDouble(3)))).toMap
-    val viaCols = QualityFilter.scoreCols(spark, ds.toDF())
-      .select("image_id", "lang", "lang_conf", "ppl")
-      .collect().map(r => r.getString(0) -> ((r.getString(1), r.getDouble(2), r.getDouble(3))))
-    assert(viaCols.length == 800)
-    viaCols.foreach { case (id, v) =>
-      val m = viaMp(id)
-      // NaN-safe exact comparison (null captions → NaN ppl on both paths)
-      assert(m._1 == v._1 && m._2 == v._2 &&
-        (m._3 == v._3 || (m._3.isNaN && v._3.isNaN)), s"scoring mismatch for $id: $m vs $v")
-    }
-  }
-
-  test("streaming Column rules() and batch runDF agree on newline-run captions") {
-    // ADVICE round 1: hasCharRun used `.` (skips \n) while the single-scan
-    // extractor counted newline runs — the two engine paths disagreed.
+  test("runDF drop reasons match the oracle on newline-run captions") {
+    // line-terminator runs count as char runs (a `.`-based regex would skip
+    // \n): runDF must fail them on the char-run rule exactly as the oracle does
     import graft.SharedSpark.spark.implicits._
-    import graft.rules.RuleEngine
-    val df = Seq(
-      ("n1", Array[Byte](1), 100, 100, "png", "some caption text here\n\n\n\n\n\n\nafter the gap words", 1L),
-      ("n2", Array[Byte](1), 100, 100, "png", "a normal caption with plenty of words to pass checks", 2L),
-      ("n3", Array[Byte](1), 100, 100, "png", "carriage\r\r\r\r\r\r\rreturn run caption with words", 3L),
-    ).toDF("image_id", "bytes", "w", "h", "fmt", "caption", "phash")
-    def reasons(d: org.apache.spark.sql.DataFrame) =
-      d.select("image_id", "drop_reason").collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-    val batch = reasons(QualityFilter.runDF(spark, df))
-    val streaming = reasons(RuleEngine.annotate(
-      QualityFilter.scoreCols(spark, df), QualityFilter.rules(FilterConfig())))
-    assert(batch == streaming)
-    assert(batch("n1") == "caption_char_run" && batch("n3") == "caption_char_run")
-    assert(batch("n2") == null)
+    import graft.corpus.ImageRow
+    val rows = Seq(
+      ImageRow("n1", Array[Byte](1), 100, 100, "png", "some caption text here\n\n\n\n\n\n\nafter the gap words", 1L),
+      ImageRow("n2", Array[Byte](1), 100, 100, "png", "a normal caption with plenty of words to pass checks", 2L),
+      ImageRow("n3", Array[Byte](1), 100, 100, "png", "carriage\r\r\r\r\r\r\rreturn run caption with words", 3L),
+    )
+    val got = QualityFilter.runDF(spark, rows.toDF())
+      .select("image_id", "drop_reason").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    rows.foreach(r => assert(got(r.image_id) == Oracle.dropReason(r, FilterConfig()).orNull, r.image_id))
+    assert(got("n1") == "caption_char_run" && got("n3") == "caption_char_run")
+    assert(got("n2") == null)
   }
 
   test("runDF plan compiles under Janino (no interpreted fallback on the hot path)") {

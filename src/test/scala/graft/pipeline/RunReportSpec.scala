@@ -24,6 +24,10 @@ class RunReportSpec extends SparkSuite {
     // driver-style parse check: well-formed JSON with expected keys
     assert(json.contains("\"run_id\":\"r9\"") && json.contains("\"drop_reasons\":{"))
     assert(json.contains("\"max_partition_share\":"))
+    // a run id with a quote, a backslash and a control char stays valid JSON
+    val odd = "r\"9\\\n"
+    val parsed = org.json4s.jackson.JsonMethods.parse(RunReport.toJson(s.copy(runId = odd)))
+    assert((parsed \ "run_id") == org.json4s.JString(odd))
     val html = Files.readString(Paths.get(dir, "_report_r9.html"))
     assert(html.startsWith("<!DOCTYPE html>") && html.contains("Run r9")
       && html.contains("Drop reasons") && html.contains(s.rowsOut.toString))

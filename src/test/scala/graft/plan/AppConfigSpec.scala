@@ -11,10 +11,17 @@ import org.apache.spark.sql.functions._
 class AppConfigSpec extends SparkSuite {
   private val s = graft.SharedSpark.spark
 
+  /** Parses a conf from the reference checkout; cancels the test (like the
+    * sibling specs' `assume`) when the checkout is not present. */
+  private def referenceConf(parse: => AppConfig.Conf): AppConfig.Conf =
+    try parse catch {
+      case _: java.nio.file.NoSuchFileException => cancel("reference checkout not present")
+    }
+
   test("the reference's SHIPPED application.confs parse: flags, folders, runtime, connections") {
-    val shipped = AppConfig.parse(java.nio.file.Files.readString(
+    val shipped = referenceConf(AppConfig.parse(java.nio.file.Files.readString(
       java.nio.file.Paths.get("/root/reference/app/src/main/resources/application.conf")),
-      env = _ => None)
+      env = _ => None))
     assert(shipped.flags("enableCount") && !shipped.flags("enableRecordTracking"))
     assert(shipped.folders("planFilePath").endsWith("customer-create-plan.yaml"))
     assert(shipped.master.contains("local[*]"))
@@ -22,13 +29,69 @@ class AppConfigSpec extends SparkSuite {
     assert(shipped.runtimeConfig("spark.driver.memory") == "6g")
     assert(shipped.runtimeConfig("spark.sql.shuffle.partitions") == "10")
 
-    val mysql = AppConfig.parse(java.nio.file.Files.readString(
+    val mysql = referenceConf(AppConfig.parse(java.nio.file.Files.readString(
       java.nio.file.Paths.get("/root/reference/app/src/test/resources/sample/conf/mysql.conf")),
-      env = _ => None)
+      env = _ => None))
     val conn = mysql.connections("mysql")
     assert(conn("format") == "jdbc", conn.toString)
     assert(conn("url") == "jdbc:mysql://localhost:3306/customer")
     assert(conn("driver") == "com.mysql.cj.jdbc.Driver")
+  }
+
+  // inline twins of the reference's shipped confs (app/src/main/resources/
+  // application.conf, sample/conf/mysql.conf): the same directive shapes
+  private val appConf =
+    """flags {
+      |    enableCount = true
+      |    enableCount = ${?ENABLE_COUNT}
+      |    enableRecordTracking = false
+      |}
+      |
+      |folders {
+      |    # plan + task locations
+      |    planFilePath = "app/src/test/resources/sample/plan/customer-create-plan.yaml"
+      |    planFilePath = ${?PLAN_FILE_PATH}
+      |    taskFolderPath = "app/src/test/resources/sample/task"
+      |}
+      |
+      |runtime {
+      |    master = "local[*]"
+      |    master = ${?DATA_CATERER_MASTER}
+      |    config {
+      |        "spark.driver.memory" = "6g",
+      |        "spark.sql.shuffle.partitions" = "10",
+      |    }
+      |}
+      |""".stripMargin
+
+  private val mysqlConf =
+    """jdbc {
+      |    mysql {
+      |        url = "jdbc:mysql://localhost:3306/customer"
+      |        url = ${?MYSQL_URL}
+      |        user = "root"   // inline comment
+      |        driver = "com.mysql.cj.jdbc.Driver"
+      |    }
+      |}
+      |""".stripMargin
+
+  test("application.conf shapes parse: flags, folders, runtime, named connections") {
+    val conf = AppConfig.parse(appConf, env = _ => None)
+    assert(conf.flags("enableCount") && !conf.flags("enableRecordTracking"))
+    assert(conf.folders("planFilePath").endsWith("customer-create-plan.yaml"))
+    assert(conf.folders("taskFolderPath") == "app/src/test/resources/sample/task")
+    assert(conf.master.contains("local[*]"))
+    // quoted runtime.config keys keep their dots; trailing commas tolerated
+    assert(conf.runtimeConfig == Map(
+      "spark.driver.memory" -> "6g", "spark.sql.shuffle.partitions" -> "10"))
+    // a set env var overrides the default line above it
+    assert(AppConfig.parse(appConf, env = k => Option.when(k == "DATA_CATERER_MASTER")("yarn"))
+      .master.contains("yarn"))
+
+    // `//` inside a quoted value is data, after it a comment
+    val conn = AppConfig.parse(mysqlConf, env = _ => None).connections("mysql")
+    assert(conn == Map("format" -> "jdbc", "url" -> "jdbc:mysql://localhost:3306/customer",
+      "user" -> "root", "driver" -> "com.mysql.cj.jdbc.Driver"), conn.toString)
   }
 
   test("env substitution: ${?X} applies only when set, ${X} is mandatory") {
@@ -83,17 +146,24 @@ class AppConfigSpec extends SparkSuite {
     assert(back.columns.sameElements(Array("account_id")))
   }
 
+  test("the reference's docker application.conf registers its connections") {
+    val docker = referenceConf(AppConfig.parse(java.nio.file.Files.readString(
+      java.nio.file.Paths.get("/root/reference/example/docker/data/custom/application.conf")),
+      env = _ => None))
+    assert(docker.connections.contains("csv") || docker.connections.contains("json")
+      || docker.connections.nonEmpty, docker.connections.keySet.toString)
+  }
+
   test("parser edges: empty connections, dotted block keys, dotted option keys") {
     // the reference's docker conf declares EMPTY connections (`csv { csv { } }`)
     // — they still register with their format (ConfigParser.scala:70-78)
-    val docker = AppConfig.parse(java.nio.file.Files.readString(
-      java.nio.file.Paths.get("/root/reference/example/docker/data/custom/application.conf")),
-      env = _ => None)
-    assert(docker.connections.contains("csv") || docker.connections.contains("json")
-      || docker.connections.nonEmpty, docker.connections.keySet.toString)
     val conf = AppConfig.parse(
       """csv {
         |  files {
+        |  }
+        |}
+        |json {
+        |  json {
         |  }
         |}
         |a.b {
@@ -109,6 +179,7 @@ class AppConfigSpec extends SparkSuite {
         |}
         |""".stripMargin, env = _ => None)
     assert(conf.connections("files") == Map("format" -> "csv"))
+    assert(conf.connections("json") == Map("format" -> "json"))
     // dotted block key pushes two segments and '}' pops both
     assert(conf.get("a", "b", "x").contains("1"))
     assert(conf.flags("enableCount"))

@@ -1,32 +1,39 @@
 package graft.streaming
 
 import graft.SparkSuite
-import graft.pipeline.{QualityFilter, ScoredImage}
+import graft.corpus.ImageRow
+import graft.pipeline.{Oracle, QualityFilter}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 class StreamingOpsSpec extends SparkSuite {
   import graft.SharedSpark.spark.implicits._
 
-  private def scored(id: String, caption: String, w: Int = 100, h: Int = 100) =
-    ScoredImage(id, Array[Byte](1, 2), w, h, "png", caption, 0L, "en", 0.9, 100.0)
+  private def img(id: String, caption: String, w: Int = 100, h: Int = 100) =
+    ImageRow(id, Array[Byte](1, 2), w, h, "png", caption, 0L)
 
   test("quality rules run unchanged on a stream (stateless projection)") {
     implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[ScoredImage]
-    val annotated = StreamingOps.annotateStream(mem.toDF())
-    val q = annotated.writeStream.format("memory").queryName("ann").outputMode("append").start()
-    mem.addData(
-      scored("a", "a clear photo of a cat on the table"),
-      scored("b", null),
-      scored("c", "ok ok ok ok ok ok ok ok ok ok ok ok"))
+    val mem = MemoryStream[ImageRow]
+    val filtered = StreamingOps.filterStream(spark, mem.toDF())
+    val q = filtered.writeStream.format("memory").queryName("ann").outputMode("append").start()
+    val rows = Seq(
+      img("a", "a clear photo of a cat on the table"),
+      img("b", null),
+      img("c", "ok ok ok ok ok ok ok ok ok ok ok ok"))
+    mem.addData(rows)
     q.processAllAvailable()
-    val out = spark.table("ann").select("image_id", "drop_reason")
-      .as[(String, String)].collect().toMap
+    val out = spark.table("ann").select("image_id", "drop_reason", "scrub_counts")
+      .collect().map(r => r.getString(0) -> r).toMap
     q.stop()
-    assert(out("a") == null)
-    assert(out("b") == "caption_missing")
-    assert(out("c") == "caption_repetitive")
+    rows.foreach { r =>
+      val exp = Oracle.label(r)
+      assert(out(r.image_id).getString(1) == exp.drop_reason, r.image_id)
+      // the batch stage's scrub counts ride along: present exactly on kept rows
+      assert(out(r.image_id).isNullAt(2) != exp.keep, r.image_id)
+    }
+    assert(out("b").getString(1) == "caption_missing")
+    assert(out("c").getString(1) == "caption_repetitive")
   }
 
   test("full quality filter on a stream matches the batch pipeline row-for-row") {
@@ -55,54 +62,51 @@ class StreamingOpsSpec extends SparkSuite {
     implicit val sqlCtx = spark.sqlContext
     val out = java.nio.file.Files.createTempDirectory("graft_stream_out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt").toString
-    val mem = MemoryStream[Long]
-    val filtered = StreamingOps.annotateStream(
-      mem.toDF().selectExpr("value AS phony").select(
-        org.apache.spark.sql.functions.concat(lit("id"), col("phony")).as("image_id"),
-        lit(Array[Byte](1)).as("bytes"), lit(100).as("w"), lit(100).as("h"),
-        lit("png").as("fmt"),
-        org.apache.spark.sql.functions.concat(
-          lit("a valid caption with plenty of words number "), col("phony")).as("caption"),
-        col("phony").as("phash"), lit("en").as("lang"), lit(0.9).as("lang_conf"),
-        lit(100.0).as("ppl")))
+    val rows = (1 to 150).map(i => img(s"id$i", s"a valid caption with plenty of words number $i"))
+    val mem = MemoryStream[ImageRow]
+    val filtered = StreamingOps.filterStream(spark, mem.toDF())
     val q1 = StreamingOps.checkpointedParquetSink(filtered, out, ckpt)
-    mem.addData(1L to 100L: _*)
+    mem.addData(rows.take(100))
     q1.processAllAvailable()
     q1.stop() // simulated shutdown
-    mem.addData(101L to 150L: _*)
+    mem.addData(rows.drop(100))
     // restart with the SAME checkpoint: only the new offsets process
     val q2 = StreamingOps.checkpointedParquetSink(filtered, out, ckpt)
     q2.processAllAvailable()
     q2.stop()
-    val rows = spark.read.parquet(out).select("image_id").collect().map(_.getString(0))
-    assert(rows.length == 150, s"expected exactly-once 150 rows, got ${rows.length}")
-    assert(rows.distinct.length == 150)
+    val written = spark.read.parquet(out).select("image_id", "keep")
+      .collect().map(r => r.getString(0) -> r.getBoolean(1))
+    assert(written.length == 150, s"expected exactly-once 150 rows, got ${written.length}")
+    assert(written.map(_._1).distinct.length == 150)
+    val expected = rows.map(r => r.image_id -> Oracle.label(r).keep).toMap
+    written.foreach { case (id, keep) => assert(keep == expected(id), s"keep mismatch for $id") }
   }
 
   test("watermarked windowed drop counts") {
     implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(String, java.sql.Timestamp)]
-    val base = mem.toDF().toDF("caption", "ts")
-      .withColumn("image_id", lit("x"))
-      .withColumn("bytes", lit(Array[Byte](1))).withColumn("w", lit(100))
-      .withColumn("h", lit(100)).withColumn("fmt", lit("png"))
-      .withColumn("phash", lit(0L)).withColumn("lang", lit("en"))
-      .withColumn("lang_conf", lit(0.9)).withColumn("ppl", lit(100.0))
-    val counts = StreamingOps.windowedDropCounts(
-      StreamingOps.annotateStream(base), "ts")
+    val mem = MemoryStream[(ImageRow, java.sql.Timestamp)]
+    val filtered = StreamingOps.filterStream(spark,
+      mem.toDF().select(col("_1.*"), col("_2").as("ts")))
+    val counts = StreamingOps.windowedDropCounts(filtered, "ts")
     val q = counts.writeStream.format("memory").queryName("wc").outputMode("append").start()
     val t0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:10")
     val t1 = java.sql.Timestamp.valueOf("2026-01-01 00:00:30")
     val late = java.sql.Timestamp.valueOf("2026-01-01 00:10:00") // advances watermark, closes window
-    mem.addData(("a good photo of a cat on a table", t0), (null.asInstanceOf[String], t1))
+    val firstWindow = Seq(img("x", "a good photo of a cat on a table"), img("y", null))
+    mem.addData((firstWindow(0), t0), (firstWindow(1), t1))
     q.processAllAvailable()
-    mem.addData(("advance the watermark far beyond the first window", late))
+    mem.addData((img("z", "advance the watermark far beyond the first window"), late))
     q.processAllAvailable()
-    mem.addData(("and once more to emit finalized windows", java.sql.Timestamp.valueOf("2026-01-01 00:20:00")))
+    mem.addData((img("w", "and once more to emit finalized windows"),
+      java.sql.Timestamp.valueOf("2026-01-01 00:20:00")))
     q.processAllAvailable()
-    val rows = spark.table("wc").select("reason", "n").as[(String, Long)].collect().toMap
+    val rows = spark.table("wc")
+      .where(col("window.start") === java.sql.Timestamp.valueOf("2026-01-01 00:00:00"))
+      .select("reason", "n").as[(String, Long)].collect().toMap
     q.stop()
-    assert(rows.get("__kept__").contains(1L))
+    val expected = firstWindow.map(r => Option(Oracle.label(r).drop_reason).getOrElse("__kept__"))
+      .groupBy(identity).map { case (k, v) => k -> v.size.toLong }
+    assert(rows == expected)
     assert(rows.get("caption_missing").contains(1L))
   }
 }

@@ -235,17 +235,11 @@ object Dedup {
     // anti-join: the earlier window-count formulation shuffled AND sorted
     // the full banded row set per consuming branch (both self-join sides
     // re-derived the window); this shape never moves the banded rows at all
-    val overKeys = banded.groupBy(col("band"), col("bkey"))
+    val overKeys = overCapKeys(banded.groupBy(col("band"), col("bkey"))
       .agg(count(lit(1)).as("__bn"))
       .where(col("__bn") > maxBucket)
-      .select(col("band"), col("bkey"))
-      // persisted: BOTH self-join sides anti-join against these keys and
-      // Spark does not reuse the broadcast stage (probed: ReusedExchange=0
-      // in the executed plan), so without the cache the count aggregation —
-      // a full pass over the banded set — runs once per side. The cached
-      // frame itself is tiny (over-cap keys only; typically empty).
-      .persist()
-    val bandedCapped = applyBucketCap(banded, overKeys, Seq("band", "bkey"))
+      .select(col("band"), col("bkey")))
+    val bandedCapped = overKeys.fold(banded)(banded.join(_, Seq("band", "bkey"), "left_anti"))
     val a = bandedCapped.select(
       col("band"), col("bkey"), col("id").as("a_id"), col("sig").as("a_sig"))
     val b = bandedCapped.select(
@@ -360,23 +354,24 @@ object Dedup {
   /** Hamming distance between two 64-bit simhashes as a Column. */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** Size-adaptive bucket-cap anti-join shared by [[minhashCandidates]] and
-    * [[phashNearDup]]: `overKeys` (the persisted over-cap bucket key list)
-    * is materialized once and its SIZE picks the plan — zero keys (the
-    * common case) drops the anti-join entirely; a small list broadcasts; a
-    * pathological list falls back to a shuffle anti-join (the
+  /** Over-cap bucket keys for [[minhashCandidates]] and [[phashNearDup]],
+    * read with ONE bounded collect whose size picks the plan: no keys (the
+    * common case) → None, and the caller drops the anti-join entirely; up
+    * to 1M keys → a local relation, broadcast into the anti-join; more (the
     * rows/maxBucket worst case can exceed driver/broadcast limits at 10^12
-    * banded rows — a forced broadcast would be a driver cliff where the
-    * pre-r6 window formulation degraded gracefully).
+    * banded rows) → the key frame itself, for a shuffle anti-join. Nothing
+    * is persisted: both self-join sides read the local relation, so the
+    * count aggregation runs once and no cached frame outlives the call.
     */
-  private def applyBucketCap(banded: DataFrame, overKeys: DataFrame,
-      joinCols: Seq[String]): DataFrame = {
-    val nOver = overKeys.count()
-    if (nOver == 0) { overKeys.unpersist(); banded }
-    else if (nOver <= 1000000L)
-      banded.join(broadcast(overKeys), joinCols, "left_anti")
-    else banded.join(overKeys, joinCols, "left_anti")
+  private def overCapKeys(overKeys: DataFrame): Option[DataFrame] = {
+    val got = overKeys.limit(MaxLocalKeys + 1).collect()
+    if (got.isEmpty) None
+    else if (got.length <= MaxLocalKeys)
+      Some(broadcast(overKeys.sparkSession.createDataFrame(
+        java.util.Arrays.asList(got: _*), overKeys.schema)))
+    else Some(overKeys)
   }
+  private final val MaxLocalKeys = 1000000
 
   // ---------- perceptual-hash (phash) near-dup ----------
 
@@ -387,7 +382,18 @@ object Dedup {
     * segment, so per-band equi-joins find every qualifying pair and the
     * O(n²) all-pairs never materializes. `maxBucket` caps degenerate
     * segments (e.g. the all-black-thumbnail hash) like
-    * [[minhashCandidates]]. Returns (a_id, b_id, dist).
+    * [[minhashCandidates]]. Returns (a_id, b_id, dist), one row per pair
+    * (`idCol` is a key).
+    *
+    * A pair within maxHamming collides on every band where its hashes'
+    * XOR has a zero segment, and the join meets it once per such band. It
+    * is kept only on its LOWEST uncapped colliding band: a row on band b
+    * survives when every band b' < b either has a non-zero XOR segment or
+    * is over the cap. Both docs share a colliding segment, so one doc's
+    * capped-band mask decides for both. That is the capped pair set (q28:
+    * `count(*) OVER (band, seg) <= maxBucket`, then DISTINCT) without a
+    * dedup shuffle; the mask is a constant 0, and costs no join, unless
+    * some bucket is over the cap.
     */
   def phashNearDup(
       df: DataFrame,
@@ -400,40 +406,40 @@ object Dedup {
     val width = bits / bands
     require(width > 0 && bands * width <= 64, s"bad banding: $bits bits / $bands bands")
     val mask = (1L << width) - 1
+    def segment(h: Column, band: Column): Column =
+      call_function("shiftrightunsigned", h, band * width).bitwiseAND(lit(mask))
     val base = df.select(col(idCol).as("a_id"), col(phashCol).cast("long").as("a_ph"))
     val banded = base
       .withColumn("band", explode(array((0 until bands).map(lit): _*)))
-      .withColumn("seg",
-        call_function("shiftrightunsigned", col("a_ph"), col("band") * width).bitwiseAND(lit(mask)))
-    // over-cap segments via partial-agg counts + broadcast anti-join (≤
-    // rows/maxBucket keys by construction) — same shape as
-    // [[minhashCandidates]]'s cap: no shuffle/sort of the banded rows
-    val overSegs = banded.groupBy(col("band"), col("seg"))
+      .withColumn("seg", segment(col("a_ph"), col("band")))
+    // over-cap segments via partial-agg counts (≤ rows/maxBucket keys by
+    // construction) — same shape as [[minhashCandidates]]'s cap: no
+    // shuffle/sort of the banded rows
+    val overSegs = overCapKeys(banded.groupBy(col("band"), col("seg"))
       .agg(count(lit(1)).as("__bc"))
       .where(col("__bc") > maxBucket)
-      .select(col("band"), col("seg"))
-      // persisted for the same reason as [[minhashCandidates]]'s overKeys:
-      // both self-join sides consume it, the broadcast stage is NOT reused
-      // (probed), and the count agg is a full pass over the banded rows
-      .persist()
-    val capped = applyBucketCap(banded, overSegs, Seq("band", "seg"))
+      .select(col("band"), col("seg")))
+    val capped = overSegs.fold(banded)(banded.join(_, Seq("band", "seg"), "left_anti"))
+    // bit b' set = the hash's band-b' segment is over the cap
+    val left = overSegs.fold(capped.withColumn("cap", lit(0L))) { keys =>
+      val caps = banded.join(keys, Seq("band", "seg"), "left_semi")
+        .groupBy(col("a_ph"))
+        .agg(bit_or(call_function("shiftleft", lit(1L), col("band"))).as("cap"))
+      capped.join(caps, Seq("a_ph"), "left")
+        .withColumn("cap", coalesce(col("cap"), lit(0L)))
+    }
     val right = capped.select(
       col("band"), col("seg"), col("a_id").as("b_id"), col("a_ph").as("b_ph"))
-    // dist is computed and filtered BEFORE the multi-band dedup: bit_count
-    // is ~one instruction per collision row, while the old
-    // distinct-then-filter shape pushed EVERY band collision (with both
-    // 8-byte hashes) through the distinct's exchange and only then dropped
-    // the far-apart pairs — the vast majority at realistic thresholds. Now
-    // only qualifying rows (bounded by the true near-dup pair count × bands)
-    // reach the shuffle, and they are narrower. Equivalent set: dist is a
-    // function of the pair, so distinct(a_id, b_id, dist) == the old
-    // distinct-on-pair, and filter/distinct commute.
-    capped.join(right, Seq("band", "seg"))
+    val xor = col("a_ph").bitwiseXOR(col("b_ph"))
+    val lowestBand = (0 until bands - 1).foldLeft(lit(true)) { (acc, j) =>
+      acc && (col("band") <= j || segment(xor, lit(j)) =!= 0 ||
+        col("cap").bitwiseAND(lit(1L << j)) =!= 0)
+    }
+    left.join(right, Seq("band", "seg"))
       .where(col("a_id") < col("b_id"))
       .withColumn("dist", hamming64(col("a_ph"), col("b_ph")).cast("int"))
-      .where(col("dist") <= maxHamming)
+      .where(col("dist") <= maxHamming && lowestBand)
       .select(col("a_id"), col("b_id"), col("dist"))
-      .distinct() // a pair can collide on several bands
   }
 
   /** Connected components over an undirected candidate-pair edge list
@@ -474,6 +480,11 @@ object Dedup {
     * reach the fixpoint rather than returning wrong labels.
     *
     * Scale shape:
+    *  - a forest pre-pass contracts each input partition to a spanning
+    *    forest first ([[SpanningForest]]: one union-find `mapPartitions`,
+    *    no shuffle, never more rows out than in, bounded memory per task).
+    *    Near-dup cliques arrive as k(k-1)/2 pairs and leave as k - 1
+    *    edges: the q28-shaped 620k-pair list becomes ~30k edges;
     *  - no step materializes neighborhood lists or pair products; phase-2
     *    edge counts never grow (each input edge yields exactly one output);
     *  - shuffle width is sized from the observed edge count (~250k
@@ -483,6 +494,9 @@ object Dedup {
     *    SparkContext, shared cache/SharedState), so the CALLER's conf is
     *    never touched; explicit per-join repartition was measured 35%
     *    slower (loses map-side partial combines and AQE's freedom);
+    *  - the loop's input width follows the same rule: the persisted edge
+    *    list is coalesced to ⌈edges / 250k⌉ partitions, since at these
+    *    sizes a round's cost is per-task overhead;
     *  - convergence detection rides each round's own materialization via
     *    Observation — no extra pass.
     */
@@ -496,17 +510,18 @@ object Dedup {
   private[graft] def connectedComponentsStats(edges: DataFrame,
       maxIter: Int = 30): (DataFrame, Int, Int) = {
     val spark = edges.sparkSession
-    // both orientations in ONE pass over the edge list (a union of two
-    // selects would re-derive the typically-expensive unpersisted upstream
-    // candidate-pair pipeline once per branch — q31's edges are the whole
-    // q28 banded join). NOT deduped: phase 1's min-aggregation is
-    // idempotent under duplicate edges, and phase 2 starts with its own
-    // distinct at contraction — a dedup pass here would cost one extra
-    // full-edge-list shuffle for nothing. Self-loop input edges are KEPT:
-    // a node appearing only as (a, a) must still come back labeled a
-    // (phase 1's id universe derives from these endpoints; phase 2 drops
+    // both orientations in ONE pass over the partition-contracted edge list
+    // (a union of two selects would re-derive the typically-expensive
+    // unpersisted upstream candidate-pair pipeline once per branch — q31's
+    // edges are the whole q28 banded join). NOT deduped: phase 1's
+    // min-aggregation is idempotent under duplicate edges, and phase 2
+    // starts with its own distinct at contraction — a dedup pass here would
+    // cost one extra full-edge-list shuffle for nothing. Self-loop input
+    // edges are KEPT (the forest keeps a self-loop-only node as (a, a)): a
+    // node appearing only as (a, a) must still come back labeled a (phase
+    // 1's id universe derives from these endpoints; phase 2 drops
     // self-loops at contraction, where the node is already registered).
-    val eA = edges
+    val eA = spanningForest(edges)
       .select(explode(array(
         struct(col("a_id").as("src"), col("b_id").as("dst")),
         struct(col("b_id").as("src"), col("a_id").as("dst")))).as("e"))
@@ -516,8 +531,10 @@ object Dedup {
     val p = math.max(2, math.min((m0 / 250000L + 1).toInt, 10000))
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.shuffle.partitions", p.toString)
-    val sym = org.apache.spark.sql.GraftSqlBridge.withSession(eA, s2)
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
+    // the loop's input width by the same ~250k-edges rule as p: at these
+    // sizes a round costs per-task overhead, not per-edge work
+    val width = math.max(1L, (m0 + 249999L) / 250000L).toInt
+    val sym = org.apache.spark.sql.GraftSqlBridge.withSession(eA.coalesce(width), s2)
 
     // ---- phase 1: fused min-propagation + pointer jump ----
     def propRound(l: DataFrame, withJump: Boolean): DataFrame = {
@@ -570,7 +587,6 @@ object Dedup {
       labels = updated
       done = changed == 0
       rounds += 1
-      if (debug) System.err.println(s"[cc] prop round=$rounds changed=$changed")
     }
 
     // ---- phase 2: contract by labels, finish with star contraction ----
@@ -631,7 +647,6 @@ object Dedup {
         freeCheckpoint(large)
         cur = stepped
         rounds += 1
-        if (debug) System.err.println(s"[cc] star round=$rounds edges=${sig._1}")
         // identical (count, checksum) across a full large+small round =
         // fixpoint (the star ops are deterministic functions of the set)
         starDone = sig == prevSig
@@ -669,6 +684,26 @@ object Dedup {
     df.queryExecution.analyzed.collect {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }.foreach(_.unpersist(false))
+
+  /** Each input partition's edges contracted to a spanning forest
+    * ([[SpanningForest]]): `(x, component min)` per non-root node, never
+    * more rows than the partition held. Integral ids are held as longs and
+    * cast back to their common type; other id types pass through as is.
+    */
+  private[dedup] def spanningForest(edges: DataFrame): DataFrame = {
+    import org.apache.spark.sql.types._
+    val ends = edges.select(col("a_id"), col("b_id"))
+    ends.select(coalesce(col("a_id"), col("b_id"))).schema.head.dataType match {
+      case idType @ (ByteType | ShortType | IntegerType | LongType) =>
+        val asLong = StructType(Seq(
+          StructField("a_id", LongType), StructField("b_id", LongType)))
+        ends.select(col("a_id").cast(LongType), col("b_id").cast(LongType))
+          .mapPartitions(SpanningForest.contract)(
+            org.apache.spark.sql.Encoders.row(asLong))
+          .select(col("a_id").cast(idType), col("b_id").cast(idType))
+      case _ => ends
+    }
+  }
 
   // ---------- n-gram Jaccard ----------
 

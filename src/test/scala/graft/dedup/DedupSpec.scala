@@ -141,6 +141,52 @@ class DedupSpec extends SparkSuite {
     assert(banded == expected)
   }
 
+  private def phashCorpus = spark.range(300).select(col("id"),
+    xxhash64(col("id") % 37).bitwiseXOR(
+      when(col("id") % 2 === 1, expr("shiftleft(1L, cast(id % 48 as int))")).otherwise(0L))
+      .as("ph"))
+
+  test("phashNearDup: a pair whose lowest colliding band is capped comes back once, from a later band") {
+    // maxBucket 6 caps the exact-hash buckets (~8 docs per id % 37 class)
+    // on some bands but not others: the lowest-uncapped-band rule must give
+    // q28's cap semantics (count per (band, seg) <= maxBucket, then
+    // DISTINCT) — checked against a brute force of exactly that
+    val maxBucket = 6
+    val got = Dedup.phashNearDup(phashCorpus, "id", "ph", maxHamming = 3, maxBucket = maxBucket)
+      .as[(Long, Long, Int)].collect()
+    assert(got.map(p => (p._1, p._2)).distinct.length == got.length)
+    val docs = phashCorpus.as[(Long, Long)].collect()
+    def seg(h: Long, b: Int) = (h >>> (b * 16)) & 0xffffL
+    val bucket = (for ((_, h) <- docs; b <- 0 until 4) yield (b, seg(h, b)))
+      .groupBy(identity).map { case (k, v) => k -> v.length }
+    def uncapped(h: Long, b: Int) = bucket((b, seg(h, b))) <= maxBucket
+    def colliding(x: Long, y: Long) = (0 until 4).filter(b => seg(x, b) == seg(y, b))
+    val near = for {
+      (i, x) <- docs; (j, y) <- docs if i < j
+      if java.lang.Long.bitCount(x ^ y) <= 3
+    } yield (i, j, x, y)
+    val expected = near.collect { case (i, j, x, y) if colliding(x, y).exists(uncapped(x, _)) =>
+      (i, j, java.lang.Long.bitCount(x ^ y))
+    }.toSet
+    assert(got.toSet == expected)
+    // the fixture does exercise the case: some expected pairs' lowest
+    // colliding band is capped, and the cap drops some near pairs entirely
+    assert(near.exists { case (_, _, x, y) =>
+      val c = colliding(x, y); !uncapped(x, c.head) && c.exists(uncapped(x, _)) })
+    assert(expected.size < near.length)
+  }
+
+  test("phashNearDup: capped calls leave no cached frame behind") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    // twenty different inputs: the cache would dedupe identical plans
+    (1 to 20).foreach { i =>
+      val in = phashCorpus.where(col("id") =!= i)
+      assert(Dedup.phashNearDup(in, "id", "ph", maxHamming = 3, maxBucket = 6).count() > 0)
+    }
+    assert(sc.getPersistentRDDs.size == before)
+  }
+
   test("connectedComponents: clusters labeled by smallest member") {
     // components: {1,2,3,4} (chain), {10,11}, singleton edges only
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("a_id", "b_id")
@@ -148,6 +194,14 @@ class DedupSpec extends SparkSuite {
     val labels = Dedup.connectedComponents(edges)
       .as[(Long, Long)].collect().toMap
     assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
+    // int ids go through the forest as longs and come back as ints; ids it
+    // cannot hold as longs skip it and get the same smallest-member labels
+    val ints = Dedup.connectedComponents(Seq((3, 2), (2, 1), (7, 8)).toDF("a_id", "b_id"))
+    assert(ints.schema("label").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(ints.as[(Int, Int)].collect().toMap == Map(1 -> 1, 2 -> 1, 3 -> 1, 7 -> 7, 8 -> 7))
+    val named = Seq(("b", "c"), ("a", "b"), ("x", "y")).toDF("a_id", "b_id")
+    assert(Dedup.connectedComponents(named).as[(String, String)].collect().toMap ==
+      Map("a" -> "a", "b" -> "a", "c" -> "a", "x" -> "x", "y" -> "x"))
     // the edge-count shuffle sizing lives in a CLONED session — the
     // caller's conf is untouched during AND after the run
     assert(spark.conf.get("spark.sql.shuffle.partitions") == confBefore)
@@ -164,8 +218,10 @@ class DedupSpec extends SparkSuite {
 
   test("connectedComponents fails loudly when maxIter is below what the graph needs") {
     // a 7-node chain contracts in 4 star rounds; maxIter=2 must throw, not
-    // silently return partially-contracted (wrong) labels
-    val chain = (1L until 7L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    // silently return partially-contracted (wrong) labels. One edge per
+    // input partition: the per-partition forest cannot shorten the chain
+    val chain = spark.sparkContext.parallelize((1L until 7L).map(i => (i, i + 1)), 6)
+      .toDF("a_id", "b_id")
     val e = intercept[IllegalStateException](Dedup.connectedComponents(chain, maxIter = 2))
     assert(e.getMessage.contains("did not converge"))
     // and a sufficient maxIter converges to the single min label
@@ -179,7 +235,9 @@ class DedupSpec extends SparkSuite {
     // contraction finishes the contracted graph logarithmically (measured:
     // 19 total) — maxIter=22 converging AT ALL is the proof; the loop
     // throws past maxIter rather than returning partial labels.
-    val path = (0L until 1000L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    // round-robin puts consecutive path edges in different partitions, so
+    // the per-partition forest cannot shorten the path: the loop gets it all
+    val path = (0L until 1000L).map(i => (i, i + 1)).toDF("a_id", "b_id").repartition(8)
     val (ldf, rounds, _) = Dedup.connectedComponentsStats(path, maxIter = 22)
     val labels = ldf.as[(Long, Long)].collect()
     assert(labels.length == 1001 && labels.forall(_._2 == 0L))
@@ -198,8 +256,10 @@ class DedupSpec extends SparkSuite {
     val a = 6364136223846793005L % P
     def perm(c: org.apache.spark.sql.Column) =
       pmod(c % P * (a % P) + 1442695040888963407L % P, lit(P))
+    // scattered one edge per partition in turn, as in the 1000-edge path
     val ppath = spark.range(0, n - 1)
       .select(perm(col("id")).as("a_id"), perm(col("id") + 1).as("b_id"))
+      .repartition(8)
     val (labels, rounds, _) = Dedup.connectedComponentsStats(ppath, maxIter = 20)
     assert(rounds <= 20)
     val l = labels.cache()
@@ -234,10 +294,66 @@ class DedupSpec extends SparkSuite {
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
     val expected = edges.flatMap(e => Seq(e._1, e._2)).distinct.map(x => x -> find(x)).toMap
-    val got = Dedup.connectedComponents(edges.toSeq.toDF("a_id", "b_id"), maxIter = 24)
-      .as[(Long, Long)].collect().toMap
-    assert(got.size == expected.size)
-    assert(got == expected)
+    // the per-partition forest sees the edges as one partition and as
+    // eight: the labels must not depend on how the input is split
+    Seq(1, 8).foreach { parts =>
+      val in = edges.toSeq.toDF("a_id", "b_id").repartition(parts)
+      val got = Dedup.connectedComponents(in, maxIter = 24).as[(Long, Long)].collect().toMap
+      assert(got.size == expected.size, s"$parts partitions")
+      assert(got == expected, s"$parts partitions")
+    }
+  }
+
+  test("connectedComponents: an edge with a NULL endpoint connects nothing") {
+    // a NULL endpoint joins no label, so (2, NULL) and (NULL, 3) do not
+    // connect 2 and 3; the NULL itself comes back labelled with the
+    // smallest label among its partners
+    val edges = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), None), (None, Some(3L)), (Some(3L), Some(4L)),
+      (Some(7L), None)).toDF("a_id", "b_id").repartition(2)
+    val got = Dedup.connectedComponents(edges).as[(Option[Long], Long)].collect().toMap
+    assert(got == Map(Some(1L) -> 1L, Some(2L) -> 1L, Some(3L) -> 3L, Some(4L) -> 3L,
+      Some(7L) -> 7L, None -> 1L))
+  }
+
+  test("spanningForest: never more rows than its input, fewer on redundant edges") {
+    // a path is a tree: every edge is needed, so the forest keeps the count
+    val n = 4096L
+    val P = java.math.BigInteger.valueOf(n).nextProbablePrime().longValueExact()
+    val a = 6364136223846793005L % P
+    def perm(c: org.apache.spark.sql.Column) =
+      pmod(c % P * (a % P) + 1442695040888963407L % P, lit(P))
+    val ppath = spark.range(0, n - 1)
+      .select(perm(col("id")).as("a_id"), perm(col("id") + 1).as("b_id"))
+    assert(Dedup.spanningForest(ppath).count() == n - 1)
+    // a 40-node clique (780 edges) in one partition: 39 edges to node 0;
+    // self-loops survive as (a, a) only where the node has no other edge
+    val clique = (for (i <- 0L until 40L; j <- i + 1 until 40L) yield (i, j)) ++
+      Seq((5L, 5L), (99L, 99L))
+    val forest = Dedup.spanningForest(clique.toDF("a_id", "b_id").coalesce(1))
+      .as[(Long, Long)].collect().toSet
+    assert(forest == (1L until 40L).map(_ -> 0L).toSet + (99L -> 99L))
+  }
+
+  test("SpanningForest: a flush past MaxNodes keeps the component exact") {
+    // a path given in both orientations: every second edge re-states a
+    // known connection. It spans two flushes, and the union of the two
+    // per-chunk forests must still be one component rooted at 0
+    val n = SpanningForest.MaxNodes + 1000L
+    val rows = (0L until n).iterator.flatMap(i =>
+      Iterator(org.apache.spark.sql.Row(i, i + 1), org.apache.spark.sql.Row(i + 1, i)))
+    val out = SpanningForest.contract(rows).map(r => (r.getLong(0), r.getLong(1))).toArray
+    assert(out.length < n + 10) // the repeats are gone: ~n edges, not 2n
+    val parent = scala.collection.mutable.LongMap[Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElse(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    out.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    assert((0L to n).forall(find(_) == 0L))
   }
 
   test("size-gated newRows: anti-join path above the sketch gate, exact semantics") {

@@ -2,9 +2,11 @@ package graft
 
 import graft.functions.{Scrubber, TextFunctions => TF}
 import graft.rules.{Rule, RuleEngine}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Operator queries over the driver's parquet tables, each with a
   * DuckDB-portable oracle SQL twin. Column names are aliased identically on
@@ -547,12 +549,14 @@ object Queries {
   // ---- q18: FK distributed-sampling join: broadcast indexed lookup,
   //          row-identity-keyed assignment (DistributedSamplingStrategy) ----
   /** One-scan bounded lookup build shared by q18/q33: contiguous ordered
-    * index on the SMALL (lookup) side only, built with sorted-array +
-    * posexplode instead of a global row_number window — map-side partial
-    * collect_SET (dedup inside the aggregation), one tiny merged row, no
+    * index on the SMALL (lookup) side only, built from a sorted key array
+    * instead of a global row_number window — map-side partial collect_SET
+    * (dedup inside the aggregation), one tiny merged row, no
     * single-partition sort of row data, and ONE pass over the table (the
     * earlier distinct().count() + distinct().agg(collect_list) shape
-    * scanned and shuffled it twice).
+    * scanned and shuffled it twice). The array is collected and indexed as
+    * a local relation: the lookup is broadcast anyway, so it is held in
+    * full either way, and nothing is persisted.
     *
     * Null parity: collect_set DROPS a NULL key that the oracle's SELECT
     * DISTINCT keeps, so a null flag from the same aggregation re-appends it
@@ -584,13 +588,13 @@ object Queries {
       .agg(sort_array(collect_set(col(keyCol))).as("__k0"),
         max(col(keyCol).isNull).as("__kn"))
       .select(when(col("__kn"), array_append(col("__k0"), lit(null).cast(keyType)))
-        .otherwise(col("__k0")).as("__ks"))
-      .persist()
-    val n = keys.select(size(col("__ks"))).head().getInt(0).toLong
+        .otherwise(col("__k0")))
+      .head().getSeq[Any](0)
+    val n = keys.length.toLong
     require(n <= cap, s"$qname lookup side unexpectedly large: $n")
-    val lookup = keys
-      .select(posexplode(col("__ks")).as(Seq("idx", keyCol)))
-      .select(col("idx").cast("long").as("idx"), col(keyCol))
+    val lookup = df.sparkSession.createDataFrame(
+      keys.zipWithIndex.map { case (k, i) => Row(i.toLong, k) }.asJava,
+      StructType(Seq(StructField("idx", LongType, nullable = false), StructField(keyCol, keyType))))
     (lookup, n)
   }
 

@@ -2,19 +2,29 @@ package graft.pipeline
 
 import graft.functions.Scrubber
 import graft.rules.RuleEngine
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, Row, SaveMode}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import scala.collection.immutable.ListMap
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Per-partition lineage + metrics rows (FIXTURES.md F4; north rule "every
   * partition emits a lineage + metrics row"). The analog of the reference's
   * per-run SinkResult/ValidationResult report rows
-  * (`api/.../model/ResultModels.scala`), but emitted distributedly as a
-  * DataFrame instead of collected on the driver.
+  * (`api/.../model/ResultModels.scala`).
   *
-  * Two hash-aggregations over the (already computed) annotated frame:
-  * groupBy(partition_id, drop_reason) → counts, then re-group to one row per
-  * partition with a drop_reasons map. Cardinality is #partitions × #rules —
-  * trivial at any scale; map-side partial aggregation makes the shuffle tiny.
+  * Two ways to the same table:
+  *  - [[writeWithMetrics]], the commit path: the rows are tallied by an
+  *    observed aggregate inside the data write itself (one job over the
+  *    rows, no cache, no shuffle), then written as a one-task local
+  *    relation.
+  *  - [[partitionMetrics]], the reference: two hash-aggregations over an
+  *    annotated frame, groupBy(partition_id, drop_reason) → counts, then
+  *    re-group to one row per partition with a drop_reasons map. Specs check
+  *    the commit path against it.
   */
 object Metrics {
 
@@ -48,9 +58,104 @@ object Metrics {
       .withColumn("finished_at", current_timestamp())
   }
 
+  /** Writes `annotated` (parquet, overwrite) to `dataDir` and its metrics
+    * table to `metricsDir`, the table counted in the data write itself.
+    *
+    * `bucket = None`: the frame carries an int `bucket` column and both
+    * tables are written `partitionBy("bucket")`, with rows per (bucket,
+    * partition). `Some(b)`: the frame is bucket `b` alone, the two
+    * directories are that bucket's own, and the rows are per partition.
+    *
+    * The data write is the only job over the rows. `partition_id` is
+    * computed in a projection below the observed aggregate: evaluated inside
+    * it, `spark_partition_id()` reads 0 on every task. A failed write throws
+    * before the metrics are written.
+    */
+  def writeWithMetrics(annotated: DataFrame, runId: String, dataDir: String, metricsDir: String,
+      bucket: Option[Int]): Unit = {
+    val partitionCols = if (bucket.isEmpty) Seq("bucket") else Nil
+    val obs = Observation()
+    annotated.withColumn("partition_id", spark_partition_id())
+      .observe(obs, tally(bucket.fold(col("bucket"))(lit(_)), col("partition_id"),
+        col(RuleEngine.DropReasonCol), col("scrub_counts")).as("tally"))
+      .drop("partition_id")
+      .write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(dataDir)
+
+    val rows = obs.get("tally").asInstanceOf[Seq[Row]].map { t =>
+      Row(t.getInt(0), t.getInt(1), t.getLong(2), t.getLong(3),
+        ListMap(t.getMap[String, Long](4).toSeq.sortBy(_._1): _*),
+        ListMap(Scrubber.categoryNames.toSeq.zip(t.getSeq[Long](5)): _*))
+    }
+    val metrics = annotated.sparkSession.createDataFrame(rows.asJava, tallySchema)
+      .coalesce(1) // a local relation: one task writes it
+      .withColumn("run_id", lit(runId))
+      .withColumn("finished_at", current_timestamp())
+    (if (bucket.isEmpty) metrics else metrics.drop("bucket"))
+      .write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(metricsDir)
+  }
+
+  private val tallySchema = StructType(Seq(
+    StructField("bucket", IntegerType), StructField("partition_id", IntegerType),
+    StructField("rows_in", LongType), StructField("rows_out", LongType),
+    StructField("drop_reasons", MapType(StringType, LongType)),
+    StructField("scrub_counts", MapType(StringType, LongType))))
+
+  /** The metrics table as read back from the bucket-partitioned root: the
+    * partition column `bucket` comes last. */
+  private[pipeline] val tableSchema: StructType = StructType(tallySchema.tail ++ Seq(
+    StructField("run_id", StringType), StructField("finished_at", TimestampType),
+    tallySchema.head))
+
+  /** One (bucket, partition)'s counts; `scrub_counts` in
+    * `Scrubber.categoryNames` order. */
+  private[pipeline] final case class Tally(bucket: Int, partition_id: Int, rows_in: Long, rows_out: Long,
+      drop_reasons: Map[String, Long], scrub_counts: Seq[Long])
+
+  private final class Group extends Serializable {
+    var rowsIn, rowsOut = 0L
+    val reasons = mutable.HashMap.empty[String, Long]
+    val scrubs = new Array[Long](Scrubber.categoryNames.length)
+
+    def add(o: Group): Unit = {
+      rowsIn += o.rowsIn
+      rowsOut += o.rowsOut
+      o.reasons.foreach { case (r, n) => reasons(r) = reasons.getOrElse(r, 0L) + n }
+      for (i <- scrubs.indices) scrubs(i) += o.scrubs(i)
+    }
+  }
+
+  /** The commit tally: input (bucket, partition_id, drop_reason — NULL when
+    * kept —, scrub_counts — NULL when dropped), buffer one [[Group]] per
+    * (bucket, partition), keyed `bucket << 32 | partition_id`. Its size is
+    * the number of groups, never the number of rows.
+    */
+  private object TallyAgg
+      extends Aggregator[(Int, Int, String, Map[String, Int]), mutable.LongMap[Group], Seq[Tally]] {
+    def zero: mutable.LongMap[Group] = mutable.LongMap.empty
+    def reduce(b: mutable.LongMap[Group], in: (Int, Int, String, Map[String, Int])): mutable.LongMap[Group] = {
+      val g = b.getOrElseUpdate(in._1.toLong << 32 | (in._2 & 0xffffffffL), new Group)
+      g.rowsIn += 1
+      if (in._3 == null) g.rowsOut += 1
+      else g.reasons(in._3) = g.reasons.getOrElse(in._3, 0L) + 1
+      if (in._4 != null)
+        for (i <- g.scrubs.indices) g.scrubs(i) += in._4.getOrElse(Scrubber.categoryNames(i), 0)
+      b
+    }
+    def merge(a: mutable.LongMap[Group], b: mutable.LongMap[Group]): mutable.LongMap[Group] = {
+      b.foreach { case (k, g) => a.get(k).fold(a(k) = g)(_.add(g)) }
+      a
+    }
+    def finish(b: mutable.LongMap[Group]): Seq[Tally] = b.toSeq.map { case (k, g) =>
+      Tally((k >> 32).toInt, k.toInt, g.rowsIn, g.rowsOut, g.reasons.toMap, g.scrubs.toSeq)
+    }
+    def bufferEncoder: Encoder[mutable.LongMap[Group]] = Encoders.javaSerialization
+    def outputEncoder: Encoder[Seq[Tally]] = ExpressionEncoder[Seq[Tally]]()
+  }
+  private val tally = udaf(TallyAgg, Encoders.product[(Int, Int, String, Map[String, Int])])
+
   /** Whole-run totals from the per-partition rows (driver-readable summary). */
   def summary(metrics: DataFrame): (Long, Long) = {
-    val row = metrics.agg(sum("rows_in"), sum("rows_out")).head()
+    val row = metrics.agg(coalesce(sum("rows_in"), lit(0L)), coalesce(sum("rows_out"), lit(0L))).head()
     (row.getLong(0), row.getLong(1))
   }
 }

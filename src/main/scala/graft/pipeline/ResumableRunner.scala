@@ -1,8 +1,9 @@
 package graft.pipeline
 
 import graft.corpus.ImageRow
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
@@ -12,10 +13,12 @@ import scala.jdk.CollectionConverters._
   * The work unit is a BUCKET = `pmod(xxhash64(image_id), numBuckets)` — row-
   * identity-keyed, so bucket membership is independent of input partitioning
   * (the reference's determinism trick, `provider/DataGenerator.scala:44-52`).
-  * Per bucket: filter → pipeline → write data dir → write metrics → append
-  * the bucket to the manifest, in that order (write-audit-publish: a crash
-  * between data write and manifest append re-runs the bucket into the same
-  * overwritten directory — idempotent, no duplicates; SURVEY §7.4.5). On an
+  * Per bucket: filter → pipeline → write data dir, counting the metrics in
+  * that same write ([[Metrics.writeWithMetrics]]: one job over the rows, no
+  * cache) → write metrics → append the bucket to the manifest, in that order
+  * (write-audit-publish: a crash between data write and manifest append
+  * re-runs the bucket into the same overwritten directory — idempotent, no
+  * duplicates; SURVEY §7.4.5). On an
   * Iceberg deployment each append is one snapshot commit and the manifest is
   * the snapshot summary property; here (no Iceberg jars in the sandbox) the
   * same protocol runs over parquet dirs + a manifest file, behind this one
@@ -73,16 +76,8 @@ final class ResumableRunner(
     var processed = 0
     todo.foreach { bucket =>
       if (processed >= failAfter) return processed
-      val bucketed = bucketSlice(staging, bucket)
-      val result = QualityFilter.run(spark, bucketed, cfg)
-      // cache: the annotated frame feeds both the data write and the
-      // metrics aggregation (reference's caching discipline, SURVEY §4)
-      result.persist()
-      try {
-        result.write.mode(SaveMode.Overwrite).parquet(s"$outDir/data/bucket=$bucket")
-        Metrics.partitionMetrics(result, runId)
-          .write.mode(SaveMode.Overwrite).parquet(s"$outDir/metrics/bucket=$bucket")
-      } finally result.unpersist()
+      Metrics.writeWithMetrics(QualityFilter.run(spark, bucketSlice(staging, bucket), cfg), runId,
+        s"$outDir/data/bucket=$bucket", s"$outDir/metrics/bucket=$bucket", Some(bucket))
       markDone(bucket)
       processed += 1
     }
@@ -111,13 +106,12 @@ final class ResumableRunner(
     * filter skips every other bucket's files at planning time.
     */
   private[pipeline] def bucketSlice(staging: String, bucket: Int): Dataset[ImageRow] = {
-    import org.apache.spark.sql.Encoders
     val rowSchema = Encoders.product[ImageRow].schema
     // explicit schema: when every remaining bucket is row-EMPTY (small
     // inputs), staging holds only _SUCCESS and schema inference would throw
     // UNABLE_TO_INFER_SCHEMA on every resume — an unrecoverable loop
     spark.read
-      .schema(rowSchema.add("bucket", org.apache.spark.sql.types.IntegerType))
+      .schema(rowSchema.add("bucket", IntegerType))
       .parquet(staging)
       .where(col("bucket") === bucket)
       .select(rowSchema.fieldNames.map(col): _*)
@@ -134,19 +128,20 @@ final class ResumableRunner(
   private def runFresh(input: Dataset[ImageRow], runId: String): Int = {
     val withBucket = input.toDF().withColumn(
       "bucket", pmod(xxhash64(col("image_id")), lit(numBuckets)).cast("int"))
-    val result = QualityFilter.runDF(spark, withBucket, cfg)
-    result.persist()
-    try {
-      result.write.mode(SaveMode.Overwrite).partitionBy("bucket")
-        .parquet(s"$outDir/data")
-      Metrics.partitionMetrics(result, runId, extraKeys = Seq("bucket"))
-        .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-        .parquet(s"$outDir/metrics")
-    } finally result.unpersist()
+    Metrics.writeWithMetrics(QualityFilter.runDF(spark, withBucket, cfg), runId,
+      s"$outDir/data", s"$outDir/metrics", None)
     (0 until numBuckets).foreach(markDone)
     numBuckets
   }
 
-  def readOutput(): DataFrame = spark.read.parquet(s"$outDir/data")
-  def readMetrics(): DataFrame = spark.read.parquet(s"$outDir/metrics")
+  // explicit schemas: a run over an empty input commits directories that
+  // hold no data file, and schema inference would throw
+  // UNABLE_TO_INFER_SCHEMA on them
+  def readOutput(): DataFrame = {
+    val empty = spark.emptyDataset(Encoders.product[ImageRow])
+    spark.read
+      .schema(QualityFilter.run(spark, empty, cfg).schema.add("bucket", IntegerType))
+      .parquet(s"$outDir/data")
+  }
+  def readMetrics(): DataFrame = spark.read.schema(Metrics.tableSchema).parquet(s"$outDir/metrics")
 }

@@ -27,11 +27,12 @@ object RunReport {
       maxPartitionShare: Double = 0.0)
 
   def summarize(metrics: DataFrame, runId: String): Summary = {
+    // coalesce: over zero metrics rows (an empty input) the sums are NULL
     val totals = metrics.agg(
-      sum("rows_in").as("in"),
-      sum("rows_out").as("out"),
+      coalesce(sum("rows_in"), lit(0L)).as("in"),
+      coalesce(sum("rows_out"), lit(0L)).as("out"),
       count(lit(1)).as("parts"),
-      max("rows_in").as("maxin")).head()
+      coalesce(max("rows_in"), lit(0L)).as("maxin")).head()
     val reasons = metrics
       .select(explode(col("drop_reasons")))
       .groupBy("key").agg(sum("value").as("n"))

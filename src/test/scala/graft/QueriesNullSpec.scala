@@ -78,4 +78,15 @@ class QueriesNullSpec extends SparkSuite {
     val e = intercept[IllegalArgumentException](Queries.boundedLookup(over, "k", 3L, "qb"))
     assert(e.getMessage == "requirement failed: qb lookup side unexpectedly large")
   }
+
+  test("boundedLookup: repeated calls leave no cached frame behind") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    // twenty different inputs: the cache would dedupe identical plans
+    (1 to 20).foreach { i =>
+      val (lookup, n) = Queries.boundedLookup((0L until i.toLong).toDF("k"), "k", 100L, "qb")
+      assert(n == i && lookup.count() == i)
+    }
+    assert(sc.getPersistentRDDs.size == before)
+  }
 }

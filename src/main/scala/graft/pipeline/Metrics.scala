@@ -28,9 +28,9 @@ import scala.jdk.CollectionConverters._
   */
 object Metrics {
 
-  /** `extraKeys`: additional lineage dimensions (e.g. the bucket id in the
-    * single-scan fresh path) carried through both aggregations, so one pass
-    * emits per-(bucket, partition) rows instead of one job per bucket.
+  /** `extraKeys`: additional lineage dimensions (e.g. the runner's bucket
+    * id) carried through both aggregations, so one pass emits per-(bucket,
+    * partition) rows instead of one job per bucket.
     */
   def partitionMetrics(annotated: DataFrame, runId: String, extraKeys: Seq[String] = Nil): DataFrame = {
     val withPid = annotated.withColumn("partition_id", spark_partition_id())
@@ -58,41 +58,40 @@ object Metrics {
       .withColumn("finished_at", current_timestamp())
   }
 
-  /** Writes `annotated` (parquet, overwrite) to `dataDir` and its metrics
-    * table to `metricsDir`, the table counted in the data write itself.
-    *
-    * `bucket = None`: the frame carries an int `bucket` column and both
-    * tables are written `partitionBy("bucket")`, with rows per (bucket,
-    * partition). `Some(b)`: the frame is bucket `b` alone, the two
-    * directories are that bucket's own, and the rows are per partition.
+  /** Writes `annotated` (parquet) to `dataDir` and its metrics table, one row
+    * per (bucket, partition), to `metricsDir`, the table counted in the data
+    * write itself. The frame carries an int `bucket` column; both tables are
+    * written `partitionBy("bucket")` with dynamic partition overwrite, so each
+    * bucket that has rows in `annotated` replaces its own directory and every
+    * other bucket's directory stays as it is.
     *
     * The data write is the only job over the rows. `partition_id` is
     * computed in a projection below the observed aggregate: evaluated inside
     * it, `spark_partition_id()` reads 0 on every task. A failed write throws
     * before the metrics are written.
     */
-  def writeWithMetrics(annotated: DataFrame, runId: String, dataDir: String, metricsDir: String,
-      bucket: Option[Int]): Unit = {
-    val partitionCols = if (bucket.isEmpty) Seq("bucket") else Nil
+  def writeWithMetrics(annotated: DataFrame, runId: String, dataDir: String, metricsDir: String): Unit = {
     val obs = Observation()
-    annotated.withColumn("partition_id", spark_partition_id())
-      .observe(obs, tally(bucket.fold(col("bucket"))(lit(_)), col("partition_id"),
+    overwriteBuckets(annotated.withColumn("partition_id", spark_partition_id())
+      .observe(obs, tally(col("bucket"), col("partition_id"),
         col(RuleEngine.DropReasonCol), col("scrub_counts")).as("tally"))
-      .drop("partition_id")
-      .write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(dataDir)
+      .drop("partition_id"), dataDir)
 
     val rows = obs.get("tally").asInstanceOf[Seq[Row]].map { t =>
       Row(t.getInt(0), t.getInt(1), t.getLong(2), t.getLong(3),
         ListMap(t.getMap[String, Long](4).toSeq.sortBy(_._1): _*),
         ListMap(Scrubber.categoryNames.toSeq.zip(t.getSeq[Long](5)): _*))
     }
-    val metrics = annotated.sparkSession.createDataFrame(rows.asJava, tallySchema)
+    overwriteBuckets(annotated.sparkSession.createDataFrame(rows.asJava, tallySchema)
       .coalesce(1) // a local relation: one task writes it
       .withColumn("run_id", lit(runId))
-      .withColumn("finished_at", current_timestamp())
-    (if (bucket.isEmpty) metrics else metrics.drop("bucket"))
-      .write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(metricsDir)
+      .withColumn("finished_at", current_timestamp()), metricsDir)
   }
+
+  // the writer option, not the session conf: the caller's conf stays as it is
+  private def overwriteBuckets(df: DataFrame, dir: String): Unit =
+    df.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+      .partitionBy("bucket").parquet(dir)
 
   private val tallySchema = StructType(Seq(
     StructField("bucket", IntegerType), StructField("partition_id", IntegerType),

@@ -31,8 +31,8 @@ final case class FilterConfig(
   * per row (SURVEY §7.1: replaces the reference's per-rule
   * `where(!expr).count()` loop with a single `select`).
   *
-  * [[runDF]] is the only engine path: batch ([[run]]), resume
-  * ([[ResumableRunner]]) and streaming
+  * [[runDF]] is the only engine path: batch ([[run]]), the bucketed
+  * runner ([[ResumableRunner]]) and streaming
   * ([[graft.streaming.StreamingOps.filterStream]]) all call it. The
   * pure-Scala [[Oracle]] is the independent reference it is checked against.
   */

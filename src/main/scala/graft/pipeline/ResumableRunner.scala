@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.corpus.ImageRow
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 import java.nio.file.{Files, Paths, StandardOpenOption}
@@ -13,20 +13,27 @@ import scala.jdk.CollectionConverters._
   * The work unit is a BUCKET = `pmod(xxhash64(image_id), numBuckets)` — row-
   * identity-keyed, so bucket membership is independent of input partitioning
   * (the reference's determinism trick, `provider/DataGenerator.scala:44-52`).
-  * Per bucket: filter → pipeline → write data dir, counting the metrics in
-  * that same write ([[Metrics.writeWithMetrics]]: one job over the rows, no
-  * cache) → write metrics → append the bucket to the manifest, in that order
-  * (write-audit-publish: a crash between data write and manifest append
-  * re-runs the bucket into the same overwritten directory — idempotent, no
-  * duplicates; SURVEY §7.4.5). On an
-  * Iceberg deployment each append is one snapshot commit and the manifest is
+  * A run takes the buckets the manifest lacks, runs the pipeline over them
+  * once, writes data and metrics `partitionBy(bucket)` in one observed write
+  * ([[Metrics.writeWithMetrics]]: one job over the rows, no cache), and only
+  * then appends those buckets to the manifest (write-audit-publish, SURVEY
+  * §7.4.5). The write overwrites partitions dynamically, so it replaces the
+  * directories of the buckets it writes and leaves committed buckets as they
+  * are: a crash before the manifest append re-runs the same buckets into the
+  * same directories — idempotent, no duplicates. On an Iceberg deployment the
+  * write is one `overwritePartitions()` snapshot commit and the manifest is
   * the snapshot summary property; here (no Iceberg jars in the sandbox) the
   * same protocol runs over parquet dirs + a manifest file, behind this one
   * class so the swap is local.
   *
+  * The bucket count is part of the output's layout: it is recorded in
+  * `_buckets` before the first data write, and a run with another count is
+  * rejected before it writes anything (a partition overwrite never removes
+  * the other layout's directories, so mixing counts would duplicate rows).
+  *
   * At 100 TB the bucket predicate would be pushed into the table scan
-  * (Iceberg partition pruning on a bucket-partitioned table); the mechanism —
-  * idempotent per-bucket commit + manifest skip — is identical.
+  * (Iceberg partition pruning on a bucket-partitioned table); the protocol —
+  * idempotent partition overwrite + manifest skip — is identical.
   */
 final class ResumableRunner(
     spark: SparkSession,
@@ -34,104 +41,53 @@ final class ResumableRunner(
     numBuckets: Int,
     cfg: FilterConfig = FilterConfig()) {
 
+  require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
+
   private val manifestPath = Paths.get(outDir, "_manifest")
+  private val layoutPath = Paths.get(outDir, "_buckets")
 
   def completedBuckets: Set[Int] =
     if (!Files.exists(manifestPath)) Set.empty
     else Files.readAllLines(manifestPath).asScala.filter(_.nonEmpty).map(_.toInt).toSet
 
-  private def markDone(bucket: Int): Unit = {
-    Files.createDirectories(manifestPath.getParent)
-    Files.write(manifestPath, s"$bucket\n".getBytes,
+  /** One append for all of `buckets`, made after their data is in place. */
+  private def markDone(buckets: Seq[Int]): Unit =
+    Files.write(manifestPath, buckets.map(b => s"$b\n").mkString.getBytes,
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-  }
 
-  /** Runs all not-yet-completed buckets; returns the number processed this
-    * invocation. `failAfter` aborts after that many buckets (test hook for
-    * crash-resume semantics; forcing it below numBuckets also forces the
-    * per-bucket path, since the fresh path commits all-or-nothing).
-    *
-    * Fresh run (empty manifest) = ONE scan: pipeline once, write
-    * `partitionBy(bucket)`, commit every bucket. Round 1 filtered the input
-    * per bucket, and since `pmod(xxhash64(image_id), n)` cannot be pushed
-    * into a parquet scan, 16 buckets meant 16 full scans of the input —
-    * O(numBuckets × 100 TB). Per-bucket scan+filter is now the RESUME path
-    * only, where it re-reads the input once per *remaining* bucket (on an
-    * Iceberg bucket-partitioned table the predicate prunes to the bucket's
-    * files and even that cost disappears).
-    */
-  def run(input: Dataset[ImageRow], runId: String, failAfter: Int = Int.MaxValue): Int = {
-    val done = completedBuckets
-    if (done.isEmpty && failAfter >= numBuckets) return runFresh(input, runId)
-    val todo = (0 until numBuckets).filterNot(done)
-    // STAGE the remaining input once, laid out by bucket: `pmod(xxhash64)`
-    // can't push into a parquet scan, so reading per-bucket from the raw
-    // input costs one FULL scan per remaining bucket — O(todo × 100 TB)
-    // after a crash at bucket 3/16. One scan-and-repartitionByDir here turns
-    // every per-bucket read below into a PARTITION-PRUNED scan of exactly
-    // that bucket's files (spec-asserted: selectedPartitions == 1). This is
-    // precisely what an Iceberg bucket-partitioned table gives for free; the
-    // staging dir is the sandbox stand-in and is removed on completion.
-    val staging = stageRemaining(input, todo)
-    var processed = 0
-    todo.foreach { bucket =>
-      if (processed >= failAfter) return processed
-      Metrics.writeWithMetrics(QualityFilter.run(spark, bucketSlice(staging, bucket), cfg), runId,
-        s"$outDir/data/bucket=$bucket", s"$outDir/metrics/bucket=$bucket", Some(bucket))
-      markDone(bucket)
-      processed += 1
+  /** Records the bucket count on the first run; throws if an earlier run
+    * recorded another one. */
+  private def checkLayout(): Unit =
+    if (Files.exists(layoutPath)) {
+      val recorded = new String(Files.readAllBytes(layoutPath)).trim.toInt
+      if (recorded != numBuckets) throw new IllegalArgumentException(
+        s"$outDir holds $recorded buckets, this run asks for $numBuckets")
+    } else {
+      Files.createDirectories(layoutPath.getParent)
+      Files.write(layoutPath, s"$numBuckets\n".getBytes)
     }
-    // all remaining buckets committed — the staging copy has served its
-    // purpose (a later resume would re-stage whatever is still missing)
-    graft.util.Fs.deleteRecursively(Paths.get(staging))
-    processed
-  }
 
-  /** One scan of `input` filtered to the still-missing buckets, written
-    * `partitionBy(bucket)` so each bucket's rows land in their own
-    * directory. Overwrite mode makes a crash mid-staging self-healing: the
-    * next resume re-stages from scratch.
+  /** Runs the pipeline over every bucket the manifest lacks and commits them
+    * together; returns the number of buckets committed by this invocation
+    * (0 when the manifest is complete).
+    *
+    * A fresh run and a resume are the same run: ONE scan of `input`, filtered
+    * to the missing buckets, pipeline once, one data write. (A read per
+    * bucket would be a full scan per bucket: `pmod(xxhash64(image_id), n)`
+    * cannot be pushed into a parquet scan.) To recompute committed buckets,
+    * delete their lines from the manifest.
     */
-  private def stageRemaining(input: Dataset[ImageRow], todo: Seq[Int]): String = {
-    val staging = s"$outDir/_resume_staging"
-    input.toDF()
+  def run(input: Dataset[ImageRow], runId: String): Int = {
+    checkLayout()
+    val todo = (0 until numBuckets).filterNot(completedBuckets)
+    if (todo.isEmpty) return 0
+    val missing = input.toDF()
       .withColumn("bucket", pmod(xxhash64(col("image_id")), lit(numBuckets)).cast("int"))
       .where(col("bucket").isin(todo: _*))
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(staging)
-    staging
-  }
-
-  /** Pruned read of one staged bucket, restored to the input row type.
-    * `bucket` is a PARTITION column of the staging layout, so the equality
-    * filter skips every other bucket's files at planning time.
-    */
-  private[pipeline] def bucketSlice(staging: String, bucket: Int): Dataset[ImageRow] = {
-    val rowSchema = Encoders.product[ImageRow].schema
-    // explicit schema: when every remaining bucket is row-EMPTY (small
-    // inputs), staging holds only _SUCCESS and schema inference would throw
-    // UNABLE_TO_INFER_SCHEMA on every resume — an unrecoverable loop
-    spark.read
-      .schema(rowSchema.add("bucket", IntegerType))
-      .parquet(staging)
-      .where(col("bucket") === bucket)
-      .select(rowSchema.fieldNames.map(col): _*)
-      .as(Encoders.product[ImageRow])
-  }
-
-
-  /** Single-scan fresh path: one pipeline pass over the whole input, data and
-    * metrics written `partitionBy(bucket)`, manifest committed for all
-    * buckets afterwards (write-audit-publish: a crash anywhere before the
-    * manifest append leaves the manifest empty, so the re-run overwrites the
-    * same directories — idempotent).
-    */
-  private def runFresh(input: Dataset[ImageRow], runId: String): Int = {
-    val withBucket = input.toDF().withColumn(
-      "bucket", pmod(xxhash64(col("image_id")), lit(numBuckets)).cast("int"))
-    Metrics.writeWithMetrics(QualityFilter.runDF(spark, withBucket, cfg), runId,
-      s"$outDir/data", s"$outDir/metrics", None)
-    (0 until numBuckets).foreach(markDone)
-    numBuckets
+    Metrics.writeWithMetrics(QualityFilter.runDF(spark, missing, cfg), runId,
+      s"$outDir/data", s"$outDir/metrics")
+    markDone(todo)
+    todo.size
   }
 
   // explicit schemas: a run over an empty input commits directories that

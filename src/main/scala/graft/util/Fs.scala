@@ -3,7 +3,7 @@ package graft.util
 import java.nio.file.{Files, Path}
 
 /** Local-filesystem helpers shared by every surface that manages its own
-  * scratch dirs (resume staging, preview copies) — one recursive delete
+  * scratch dirs (preview copies, benchmark output) — one recursive delete
   * instead of per-module private copies.
   */
 object Fs {

@@ -4,27 +4,48 @@ import graft.SparkSuite
 import graft.corpus.SyntheticImages
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 
 class ResumableRunnerSpec extends SparkSuite {
 
   private def cachedFrames: Int = spark.sparkContext.getPersistentRDDs.size
 
+  /** The state a crash leaves between committing `keep` and the rest: the
+    * manifest lists only `keep`, whatever the directories hold. */
+  private def cutManifest(out: String, keep: Seq[Int]): Unit =
+    Files.write(Paths.get(out, "_manifest"), keep.map(b => s"$b\n").mkString.getBytes)
+
+  /** Runs `body` in a job group; returns its result and its job count. */
+  private def withJobCount[T](group: String)(body: => T): (T, Int) = {
+    spark.sparkContext.setJobGroup(group, group)
+    try {
+      val res = body
+      (res, spark.sparkContext.statusTracker.getJobIdsForGroup(group).length)
+    } finally spark.sparkContext.clearJobGroup()
+  }
+
+  private def withBucket(corpus: DataFrame, buckets: Int): DataFrame =
+    corpus.withColumn("bucket", pmod(xxhash64(col("image_id")), lit(buckets)).cast("int"))
+
   test("crash between buckets → resume completes without duplicates or loss") {
     val out = Files.createTempDirectory("graft_resume").toString
     val corpus = SyntheticImages.generate(spark, 1500L, seed = 7L, partitions = 6)
-    val runner = new ResumableRunner(spark, out, numBuckets = 4)
     val cached = cachedFrames
+    assert(new ResumableRunner(spark, out, numBuckets = 4).run(corpus, "run0") == 4)
 
-    // simulated crash after 2 of 4 buckets
-    assert(runner.run(corpus, "run1", failAfter = 2) == 2)
-    assert(runner.completedBuckets.size == 2)
+    // simulated crash after 2 of 4 buckets: the manifest lists 0 and 1, and
+    // bucket 2's data directory holds a stray file from the failed write
+    cutManifest(out, Seq(0, 1))
+    val stray = Files.list(Paths.get(out, "data", "bucket=0")).iterator().asScala
+      .find(_.toString.endsWith(".parquet")).get
+    Files.copy(stray, Paths.get(out, "data", "bucket=2", "part-stray.parquet"))
 
     // resume with a fresh runner (new process in real life)
     val resumed = new ResumableRunner(spark, out, numBuckets = 4)
     assert(resumed.run(corpus, "run1") == 2)
     assert(resumed.completedBuckets == Set(0, 1, 2, 3))
-    assert(cachedFrames == cached, "the per-bucket path left a cached frame behind")
+    assert(cachedFrames == cached, "the run left a cached frame behind")
 
     val output = resumed.readOutput()
     assert(output.count() == 1500L)
@@ -43,28 +64,35 @@ class ResumableRunnerSpec extends SparkSuite {
 
   test("fresh run is a single scan (bounded job count), equivalent to per-bucket output") {
     val corpus = SyntheticImages.generate(spark, 1500L, seed = 7L, partitions = 6)
-    val buckets = 8 // per-bucket path would launch >= 2 jobs per bucket (16+)
+    val buckets = 8 // a bucket at a time would launch >= 2 jobs per bucket (16+)
 
     val freshOut = Files.createTempDirectory("graft_fresh").toString
     val cached = cachedFrames
-    spark.sparkContext.setJobGroup("graft_fresh_run", "fresh path")
     val runner = new ResumableRunner(spark, freshOut, numBuckets = buckets)
-    assert(runner.run(corpus, "runF") == buckets)
-    spark.sparkContext.clearJobGroup()
-    val jobs = spark.sparkContext.statusTracker.getJobIdsForGroup("graft_fresh_run")
-    info(s"fresh-path jobs: ${jobs.length}")
+    val (processed, jobs) = withJobCount("graft_fresh_run")(runner.run(corpus, "runF"))
+    assert(processed == buckets)
+    info(s"fresh-run jobs: $jobs")
     // one job writes the data and counts the metrics, one writes the metrics
-    assert(jobs.length <= 2, s"fresh path ran ${jobs.length} jobs — not single-scan")
-    assert(cachedFrames == cached, "the fresh path left a cached frame behind")
+    assert(jobs <= 2, s"fresh run ran $jobs jobs — not single-scan")
+    assert(cachedFrames == cached, "the fresh run left a cached frame behind")
     assert(runner.completedBuckets == (0 until buckets).toSet)
     assert(runner.run(corpus, "runF") == 0) // idempotent no-op
 
-    // equivalence with the per-bucket (resume) path on the same input
-    val bucketOut = Files.createTempDirectory("graft_bucketed").toString
-    val r2 = new ResumableRunner(spark, bucketOut, numBuckets = buckets)
-    r2.run(corpus, "runB", failAfter = buckets - 1) // force per-bucket path
-    r2.run(corpus, "runB")
-    def key(df: org.apache.spark.sql.DataFrame) = df
+    // a resume after a crash that committed 3 of 8 buckets: the other five
+    // buckets' directories are gone, so the resume alone must write them
+    val resumeOut = Files.createTempDirectory("graft_resumed").toString
+    new ResumableRunner(spark, resumeOut, numBuckets = buckets).run(corpus, "runB")
+    cutManifest(resumeOut, 0 until 3)
+    for (table <- Seq("data", "metrics"); b <- 3 until buckets)
+      graft.util.Fs.deleteRecursively(Paths.get(resumeOut, table, s"bucket=$b"))
+    val r2 = new ResumableRunner(spark, resumeOut, numBuckets = buckets)
+    val (resumedBuckets, resumeJobs) = withJobCount("graft_resume_run")(r2.run(corpus, "runB"))
+    assert(resumedBuckets == buckets - 3)
+    info(s"resume jobs: $resumeJobs")
+    assert(resumeJobs <= 2, s"resume ran $resumeJobs jobs — not single-scan")
+    assert(cachedFrames == cached, "the resume left a cached frame behind")
+
+    def key(df: DataFrame) = df
       .select("image_id", "bucket", "keep", "drop_reason", "scrubbed_caption")
       .collect().map(_.toString).sorted
     assert(key(runner.readOutput()).sameElements(key(r2.readOutput())))
@@ -73,39 +101,56 @@ class ResumableRunnerSpec extends SparkSuite {
     assert(in1 == 1500L && in1 == in2 && out1 == out2)
   }
 
-  test("resume path partition-prunes: each bucket reads only its own staged files") {
-    val out = Files.createTempDirectory("graft_prune").toString
-    val corpus = SyntheticImages.generate(spark, 800L, seed = 3L, partitions = 4)
-    val runner = new ResumableRunner(spark, out, numBuckets = 4)
-    // crash after 1 bucket: staging is laid out partitionBy(bucket)
-    assert(runner.run(corpus, "runP", failAfter = 1) == 1)
-    val staging = s"$out/_resume_staging"
-    // physical proof the per-bucket read is pruned: exactly ONE of the four
-    // bucket directories survives planning (the raw-input shape re-scanned
-    // everything per bucket — O(remaining × full input) after a crash)
-    val scanned = runner.bucketSlice(staging, 2).toDF()
-      .queryExecution.executedPlan.collectLeaves().collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.selectedPartitions.partitionCount
-      }
-    assert(scanned.nonEmpty && scanned.forall(_ == 1), scanned.toString)
-    // resume completes from the staged layout, and cleans it up
-    assert(new ResumableRunner(spark, out, numBuckets = 4).run(corpus, "runP") == 3)
-    assert(spark.read.parquet(s"$out/data").select("image_id").distinct().count() == 800L)
-    assert(!Files.exists(java.nio.file.Paths.get(staging)))
+  test("a resume whose remaining buckets hold no rows commits them, output still readable") {
+    // 5 rows over 16 buckets: most buckets are row-empty; the crash
+    // committed exactly the buckets that hold rows
+    val out = Files.createTempDirectory("graft_empty_resume").toString
+    val corpus = SyntheticImages.generate(spark, 5L, seed = 3L, partitions = 2)
+    val buckets = 16
+    assert(new ResumableRunner(spark, out, numBuckets = buckets).run(corpus, "run0") == buckets)
+    val filled = withBucket(corpus.toDF(), buckets).select("bucket").distinct()
+      .collect().map(_.getInt(0)).toSeq.sorted
+    assert(filled.size < buckets)
+    cutManifest(out, filled)
+
+    val resumed = new ResumableRunner(spark, out, numBuckets = buckets)
+    assert(resumed.run(corpus, "run1") == buckets - filled.size)
+    assert(resumed.completedBuckets == (0 until buckets).toSet)
+    // the empty write replaced no bucket: the committed rows are all there
+    val output = resumed.readOutput()
+    assert(output.count() == 5L)
+    assert(Metrics.summary(resumed.readMetrics()) == ((5L, output.where(col("keep")).count())))
+    assert(resumed.readMetrics().where(col("run_id") =!= "run0").isEmpty)
   }
 
-  test("bucketSlice survives a row-empty staging dir (explicit schema, no inference)") {
-    // when every remaining bucket holds zero rows (small inputs), staging
-    // is just _SUCCESS — schema INFERENCE threw UNABLE_TO_INFER_SCHEMA on
-    // every resume, an unrecoverable loop; the explicit-schema read must
-    // return an empty slice instead
-    val out = Files.createTempDirectory("graft_empty_stage").toString
-    val runner = new ResumableRunner(spark, out, numBuckets = 4)
-    val staging = java.nio.file.Paths.get(out, "_resume_staging")
-    Files.createDirectories(staging)
-    Files.createFile(staging.resolve("_SUCCESS"))
-    assert(runner.bucketSlice(staging.toString, 2).isEmpty)
+  /** Every file under `root` with its bytes, and every directory. */
+  private def snapshot(root: Path): Map[String, Seq[Byte]] = {
+    val files = Files.walk(root)
+    try files.iterator().asScala.map { p =>
+      root.relativize(p).toString -> (if (Files.isRegularFile(p)) Files.readAllBytes(p).toSeq else Nil)
+    }.toMap
+    finally files.close()
+  }
+
+  test("a run with another bucket count is rejected before it writes anything") {
+    val out = Files.createTempDirectory("graft_layout").toString
+    val corpus = SyntheticImages.generate(spark, 1000L, seed = 5L, partitions = 4)
+    assert(new ResumableRunner(spark, out, numBuckets = 4).run(corpus, "run4") == 4)
+    val before = snapshot(Paths.get(out))
+    Seq(8, 2).foreach { n =>
+      val e = intercept[IllegalArgumentException](new ResumableRunner(spark, out, n).run(corpus, s"run$n"))
+      assert(e.getMessage.contains("holds 4 buckets") && e.getMessage.contains(s"asks for $n"), e.getMessage)
+      assert(snapshot(Paths.get(out)) == before, s"the rejected $n-bucket run changed the output")
+    }
+    assert(new ResumableRunner(spark, out, numBuckets = 4).readOutput()
+      .select("image_id").distinct().count() == 1000L)
+
+    // a bucket count that is not positive is rejected when the runner is built
+    val fresh = Paths.get(out, "other")
+    Seq(0, -4).foreach { n =>
+      intercept[IllegalArgumentException](new ResumableRunner(spark, fresh.toString, n))
+    }
+    assert(!Files.exists(fresh))
   }
 
   test("partition metrics agree with direct counts") {
@@ -123,10 +168,9 @@ class ResumableRunnerSpec extends SparkSuite {
   }
 
   /** Metrics rows keyed by (bucket, partition_id), `finished_at` left out. */
-  private def byKey(metrics: DataFrame, bucket: Option[Int]): Map[(Int, Int), Seq[Any]] = {
+  private def byKey(metrics: DataFrame): Map[(Int, Int), Seq[Any]] = {
     val cols = Seq("partition_id", "rows_in", "rows_out", "drop_reasons", "scrub_counts", "run_id")
-    val withBucket = bucket.fold(metrics)(b => metrics.withColumn("bucket", lit(b)))
-    withBucket.select((col("bucket") +: cols.map(col)): _*).collect()
+    metrics.select((col("bucket") +: cols.map(col)): _*).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.toSeq.drop(1)).toMap
   }
   private def columnTypes(df: DataFrame): Set[(String, String)] =
@@ -143,34 +187,38 @@ class ResumableRunnerSpec extends SparkSuite {
       val freshOut = Files.createTempDirectory("graft_metrics_fresh").toString
       val fresh = new ResumableRunner(spark, freshOut, numBuckets = buckets, cfg)
       fresh.run(corpus, "runM")
-      val annotated = QualityFilter.runDF(spark, corpus.toDF().withColumn(
-        "bucket", pmod(xxhash64(col("image_id")), lit(buckets)).cast("int")), cfg)
+      val annotated = QualityFilter.runDF(spark, withBucket(corpus.toDF(), buckets), cfg)
       val expected = Metrics.partitionMetrics(annotated, "runM", extraKeys = Seq("bucket"))
       val got = fresh.readMetrics()
       assert(columnTypes(got) == columnTypes(expected))
       // the explicit read schemas agree with what inference gives
       assert(columnTypes(got) == columnTypes(spark.read.parquet(s"$freshOut/metrics")))
       assert(columnTypes(fresh.readOutput()) == columnTypes(spark.read.parquet(s"$freshOut/data")))
-      val gotRows = byKey(got, None)
-      assert(gotRows == byKey(expected, None))
+      val gotRows = byKey(got)
+      assert(gotRows == byKey(expected))
       // partition_id is the compute task's: every bucket spans several
       assert(gotRows.keys.groupBy(_._1).values.forall(_.size > 1), gotRows.keys)
       assert(got.where(map_keys(col("drop_reasons")) =!= array_sort(map_keys(col("drop_reasons"))))
         .isEmpty, "drop_reasons not sorted by name")
     }
 
-    // resume path: buckets 0 and 1 committed one at a time; the staged
-    // slices they were computed from are still there after the crash
+    // resume: a crash committed buckets 0 and 1 of a first run; the resume
+    // recomputes 2 and 3 and leaves the committed rows as they were
     val resumeOut = Files.createTempDirectory("graft_metrics_resume").toString
+    new ResumableRunner(spark, resumeOut, numBuckets = buckets).run(corpus, "runQ")
+    val committed = byKey(spark.read.parquet(s"$resumeOut/metrics").where(col("bucket") < 2))
+    cutManifest(resumeOut, Seq(0, 1))
     val resumed = new ResumableRunner(spark, resumeOut, numBuckets = buckets)
-    assert(resumed.run(corpus, "runR", failAfter = 2) == 2)
-    (0 until 2).foreach { b =>
-      val slice = QualityFilter.run(spark, resumed.bucketSlice(s"$resumeOut/_resume_staging", b))
-      val exp = byKey(Metrics.partitionMetrics(slice, "runR"), Some(b))
-      val rows = byKey(spark.read.parquet(s"$resumeOut/metrics/bucket=$b"), Some(b))
-      assert(rows == exp, s"bucket $b")
-      assert(rows.size > 1, s"bucket $b: one partition_id")
-    }
+    assert(resumed.run(corpus, "runR") == 2)
+    val rows = byKey(resumed.readMetrics())
+    val annotated = QualityFilter.runDF(spark,
+      withBucket(corpus.toDF(), buckets).where(col("bucket").isin(2, 3)), FilterConfig())
+    val exp = byKey(Metrics.partitionMetrics(annotated, "runR", extraKeys = Seq("bucket")))
+    assert(rows.filter(_._1._1 >= 2) == exp)
+    assert(rows.filter(_._1._1 < 2) == committed)
+    assert(committed.nonEmpty && committed.values.forall(_.last == "runQ"))
+    assert(exp.keys.map(_._1).toSet == Set(2, 3))
+    assert(exp.keys.groupBy(_._1).values.forall(_.size > 1), "a resumed bucket has one partition_id")
   }
 
   test("an empty input commits an empty output, no metrics rows and a zero summary") {

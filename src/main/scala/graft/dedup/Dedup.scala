@@ -1,8 +1,9 @@
 package graft.dedup
 
 import graft.functions.{TextFunctions => TF}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Deduplication operators for web-scale corpora: exact, MinHash+LSH,
   * SimHash, n-gram Jaccard, and Bloom-filter assisted — the training-data
@@ -446,7 +447,9 @@ object Dedup {
     * (a_id, b_id) → (id, label) with label = smallest id in the component —
     * turns near-dup PAIRS into dedup CLUSTERS (survivor = the label).
     *
-    * TWO-PHASE hybrid, tuned by what each phase is good at:
+    * A graph small enough for one task is labelled by one union-find (see
+    * "Scale shape"). Past that, a TWO-PHASE hybrid, tuned by what each
+    * phase is good at:
     *
     * Phase 1 — fused min-label propagation with pointer jumping, ONE join +
     * ONE aggregate per round (self-loops carry the old label through the
@@ -485,6 +488,13 @@ object Dedup {
     *    no shuffle, never more rows out than in, bounded memory per task).
     *    Near-dup cliques arrive as k(k-1)/2 pairs and leave as k - 1
     *    edges: the q28-shaped 620k-pair list becomes ~30k edges;
+    *  - a graph whose symmetrized forest edges fit one partition (at most
+    *    250k, the loop's own input-width rule) with integral ids is
+    *    labelled by one union-find task ([[SpanningForest.labels]]) over
+    *    the coalesced edge list, with no loop, no shuffle and no rounds
+    *    (maxIter is not consulted). The labels stay an executor-side local
+    *    checkpoint; nothing is collected. The two-phase loop runs only past
+    *    250k edges, or for ids the forest cannot hold as longs;
     *  - no step materializes neighborhood lists or pair products; phase-2
     *    edge counts never grow (each input edge yields exactly one output);
     *  - shuffle width is sized from the observed edge count (~250k
@@ -504,12 +514,12 @@ object Dedup {
     connectedComponentsStats(edges, maxIter)._1
 
   /** [[connectedComponents]] plus its loop telemetry — (labels, total
-    * rounds executed, shuffle width used). The scale probe asserts rounds
-    * stays logarithmic and the width actually grows past the session
-    * default on big edge lists (sf0.1 only ever exercises p=2). */
+    * rounds executed, shuffle width used); the one-task path reports 0
+    * rounds and width 1. The scale probe asserts rounds stays logarithmic
+    * and the width actually grows past the session default on big edge
+    * lists (sf0.1 only ever exercises the one-task path). */
   private[graft] def connectedComponentsStats(edges: DataFrame,
       maxIter: Int = 30): (DataFrame, Int, Int) = {
-    val spark = edges.sparkSession
     // both orientations in ONE pass over the partition-contracted edge list
     // (a union of two selects would re-derive the typically-expensive
     // unpersisted upstream candidate-pair pipeline once per branch — q31's
@@ -527,13 +537,36 @@ object Dedup {
         struct(col("b_id").as("src"), col("a_id").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .persist()
-    val m0 = eA.count() // materializes the persist AND sizes the loop
-    val p = math.max(2, math.min((m0 / 250000L + 1).toInt, 10000))
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", p.toString)
-    // the loop's input width by the same ~250k-edges rule as p: at these
-    // sizes a round costs per-task overhead, not per-edge work
+    val m0 = eA.count() // materializes the persist AND picks the path
+    // the loop's input width by the same ~250k-edges rule as its shuffle
+    // width: at these sizes a round costs per-task overhead, not per-edge
+    // work. An edge list that fits one partition needs no loop at all
     val width = math.max(1L, (m0 + 249999L) / 250000L).toInt
+    val idType = eA.schema("src").dataType
+    if (width == 1 && integral(idType)) (oneTaskLabels(eA, idType), 0, 1)
+    else propagationLoop(eA, m0, width, maxIter)
+  }
+
+  /** Labels a symmetrized edge list that fits one partition with one
+    * union-find task ([[SpanningForest.labels]]): no shuffle, no rounds. */
+  private def oneTaskLabels(eA: DataFrame, idType: DataType): DataFrame = {
+    val asLong = StructType(Seq(StructField("id", LongType), StructField("label", LongType)))
+    val labels = eA.select(col("src").cast(LongType), col("dst").cast(LongType))
+      .coalesce(1)
+      .mapPartitions(SpanningForest.labels)(Encoders.row(asLong))
+      .select(col("id").cast(idType), col("label").cast(idType))
+      .localCheckpoint(true)
+    eA.unpersist()
+    labels
+  }
+
+  /** The two-phase loop of [[connectedComponents]] over the persisted
+    * symmetrized edge list `eA` of `m0` rows, read as `width` partitions. */
+  private def propagationLoop(eA: DataFrame, m0: Long, width: Int,
+      maxIter: Int): (DataFrame, Int, Int) = {
+    val p = math.max(2, math.min((m0 / 250000L + 1).toInt, 10000))
+    val s2 = eA.sparkSession.newSession()
+    s2.conf.set("spark.sql.shuffle.partitions", p.toString)
     val sym = org.apache.spark.sql.GraftSqlBridge.withSession(eA.coalesce(width), s2)
 
     // ---- phase 1: fused min-propagation + pointer jump ----
@@ -680,7 +713,7 @@ object Dedup {
     * it is safe because the NEXT checkpoint is already materialized and has
     * no dependency on it.
     */
-  private def freeCheckpoint(df: DataFrame): Unit =
+  private[dedup] def freeCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.collect {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }.foreach(_.unpersist(false))
@@ -691,18 +724,22 @@ object Dedup {
     * cast back to their common type; other id types pass through as is.
     */
   private[dedup] def spanningForest(edges: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types._
     val ends = edges.select(col("a_id"), col("b_id"))
     ends.select(coalesce(col("a_id"), col("b_id"))).schema.head.dataType match {
-      case idType @ (ByteType | ShortType | IntegerType | LongType) =>
+      case idType if integral(idType) =>
         val asLong = StructType(Seq(
           StructField("a_id", LongType), StructField("b_id", LongType)))
         ends.select(col("a_id").cast(LongType), col("b_id").cast(LongType))
-          .mapPartitions(SpanningForest.contract)(
-            org.apache.spark.sql.Encoders.row(asLong))
+          .mapPartitions(SpanningForest.contract)(Encoders.row(asLong))
           .select(col("a_id").cast(idType), col("b_id").cast(idType))
       case _ => ends
     }
+  }
+
+  /** The id types [[SpanningForest]] holds as longs (and casts back). */
+  private def integral(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
   }
 
   // ---------- n-gram Jaccard ----------

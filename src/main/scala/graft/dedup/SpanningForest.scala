@@ -2,15 +2,16 @@ package graft.dedup
 
 import org.apache.spark.sql.Row
 
-/** Per-partition spanning-forest contraction for
-  * [[Dedup.connectedComponents]]: a partition's `(a_id, b_id)` edges become
-  * one `(x, root(x))` edge per non-root node, where root(x) is the smallest
-  * id of x's component among those edges. Connectivity is unchanged, so the
-  * components (and their minimum ids) are too; edges that only re-state a
-  * known connection disappear. A near-dup clique of k docs arrives as
-  * k(k-1)/2 pairs and leaves as k - 1 edges.
+/** Union-find passes for [[Dedup.connectedComponents]].
   *
-  * Invariants:
+  * [[contract]] is the per-partition spanning-forest pre-pass: a partition's
+  * `(a_id, b_id)` edges become one `(x, root(x))` edge per non-root node,
+  * where root(x) is the smallest id of x's component among those edges.
+  * Connectivity is unchanged, so the components (and their minimum ids) are
+  * too; edges that only re-state a known connection disappear. A near-dup
+  * clique of k docs arrives as k(k-1)/2 pairs and leaves as k - 1 edges.
+  *
+  * Invariants of [[contract]]:
   *  - never more rows out than in: a component of k linked nodes needs at
   *    least k - 1 input edges and emits exactly k - 1; a node seen only in
   *    self-loops needs at least one and emits one `(a, a)`, so it stays in
@@ -21,6 +22,12 @@ import org.apache.spark.sql.Row
   *    through rows) the chunk is emitted and a fresh union-find starts. The
   *    union of per-chunk forests still spans the same components, so a flush
   *    costs contraction, never exactness.
+  *
+  * [[labels]] answers the whole graph in one task when it already sits in
+  * one partition: `(id, component min)` per node from a single union-find,
+  * which never flushes, so the labels are exact. The caller only hands it a
+  * symmetrized edge list of at most 250k rows; every node is a `src` there,
+  * so it holds fewer than [[MaxNodes]] nodes and stays under the same bound.
   */
 private[dedup] object SpanningForest {
 
@@ -42,6 +49,26 @@ private[dedup] object SpanningForest {
         nulls.iterator ++ uf.forest
       }
     }.flatten
+
+  /** `(id, label)` for every node of a symmetrized `(src, dst)` edge list,
+    * label = smallest id in the node's component. A NULL endpoint connects
+    * nothing: the node beside it keeps its own component, and the NULL node
+    * itself is labelled with the smallest label among its partners (NULL if
+    * it has none). A node seen only in self-loops keeps its own id.
+    */
+  def labels(rows: Iterator[Row]): Iterator[Row] = {
+    val uf = new UnionFind
+    val nullPartners = scala.collection.mutable.ArrayBuffer[Long]()
+    var nullNode = false
+    rows.foreach { r =>
+      if (r.isNullAt(0)) {
+        nullNode = true
+        if (!r.isNullAt(1)) nullPartners += r.getLong(1)
+      } else uf.add(r.getLong(0), if (r.isNullAt(1)) r.getLong(0) else r.getLong(1))
+    }
+    val nullLabel = if (nullPartners.isEmpty) null else nullPartners.iterator.map(uf.min).min
+    uf.labels ++ (if (nullNode) Iterator.single(Row(null, nullLabel)) else Iterator.empty)
+  }
 
   /** Union-find over dense node indices; the root of a set is its smallest
     * id, so `find` answers the component minimum directly. */
@@ -82,6 +109,11 @@ private[dedup] object SpanningForest {
         if (ri != rj) { if (ids(ri) < ids(rj)) parent(rj) = ri else parent(ri) = rj }
       }
     }
+
+    /** The smallest id in the component of a known node. */
+    def min(x: Long): Long = ids(find(index(x)))
+
+    def labels: Iterator[Row] = Iterator.range(0, size).map(i => Row(ids(i), ids(find(i))))
 
     def forest: Iterator[Row] = Iterator.range(0, size).flatMap { i =>
       val r = find(i)

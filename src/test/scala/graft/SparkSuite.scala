@@ -13,4 +13,13 @@ object SharedSpark {
 
 abstract class SparkSuite extends AnyFunSuite {
   def spark: SparkSession = SharedSpark.spark
+
+  /** Runs `body` in a job group; returns its result and its job count. */
+  protected def withJobCount[T](group: String)(body: => T): (T, Int) = {
+    spark.sparkContext.setJobGroup(group, group)
+    try {
+      val res = body
+      (res, spark.sparkContext.statusTracker.getJobIdsForGroup(group).length)
+    } finally spark.sparkContext.clearJobGroup()
+  }
 }

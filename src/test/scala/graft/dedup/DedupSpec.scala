@@ -216,17 +216,32 @@ class DedupSpec extends SparkSuite {
     assert(labels == Map(1L -> 1L, 2L -> 1L, 5L -> 5L))
   }
 
+  /** First id of the bulk [[pastBound]] adds, above every test graph's ids. */
+  private val Bulk = 1L << 40
+
+  /** `graph` plus 2^17 disjoint pairs from [[Bulk]] up: the pairs keep all
+    * 131,072 forest edges, so the symmetrized list holds over 262,144 rows,
+    * past the 250k that one task labels, and connectedComponents runs its
+    * two-phase loop. The pairs settle in round 0 and drop out at phase 2's
+    * contraction, so the rounds counted are `graph`'s own. */
+  private def pastBound(graph: org.apache.spark.sql.DataFrame) =
+    graph.unionByName(spark.range(1L << 17)
+      .select((col("id") * 2 + Bulk).as("a_id"), (col("id") * 2 + Bulk + 1).as("b_id")))
+
   test("connectedComponents fails loudly when maxIter is below what the graph needs") {
     // a 7-node chain contracts in 4 star rounds; maxIter=2 must throw, not
     // silently return partially-contracted (wrong) labels. One edge per
     // input partition: the per-partition forest cannot shorten the chain
-    val chain = spark.sparkContext.parallelize((1L until 7L).map(i => (i, i + 1)), 6)
-      .toDF("a_id", "b_id")
+    val chain = pastBound(spark.sparkContext.parallelize((1L until 7L).map(i => (i, i + 1)), 6)
+      .toDF("a_id", "b_id"))
     val e = intercept[IllegalStateException](Dedup.connectedComponents(chain, maxIter = 2))
     assert(e.getMessage.contains("did not converge"))
     // and a sufficient maxIter converges to the single min label
-    val ok = Dedup.connectedComponents(chain).as[(Long, Long)].collect()
+    val (ldf, rounds, _) = Dedup.connectedComponentsStats(chain)
+    val ok = ldf.where(col("id") < Bulk).as[(Long, Long)].collect()
     assert(ok.forall(_._2 == 1L) && ok.length == 7)
+    info(s"rounds: $rounds")
+    assert(rounds > 0) // the loop ran: the one-task path reports 0 rounds
   }
 
   test("connectedComponents: 1000-edge path converges in <= 22 rounds (hybrid)") {
@@ -238,10 +253,15 @@ class DedupSpec extends SparkSuite {
     // round-robin puts consecutive path edges in different partitions, so
     // the per-partition forest cannot shorten the path: the loop gets it all
     val path = (0L until 1000L).map(i => (i, i + 1)).toDF("a_id", "b_id").repartition(8)
-    val (ldf, rounds, _) = Dedup.connectedComponentsStats(path, maxIter = 22)
-    val labels = ldf.as[(Long, Long)].collect()
+    val (ldf, rounds, _) = Dedup.connectedComponentsStats(pastBound(path), maxIter = 22)
+    val labels = ldf.where(col("id") < Bulk).as[(Long, Long)].collect()
     assert(labels.length == 1001 && labels.forall(_._2 == 0L))
-    assert(rounds <= 22)
+    info(s"rounds: $rounds")
+    assert(rounds > 0 && rounds <= 22)
+    // the bulk pairs come back exact too: each labelled by its even member
+    val bulk = ldf.where(col("id") >= Bulk)
+    assert(bulk.count() == 2L << 17)
+    assert(bulk.where(col("label") =!= col("id") - col("id") % 2).isEmpty)
   }
 
   test("connectedComponents: round count is independent of id layout (permuted path)") {
@@ -249,8 +269,8 @@ class DedupSpec extends SparkSuite {
     // label-of-label shortcut converges fast only when id order follows
     // graph position — a 4095-diameter path with ids scrambled by an affine
     // bijection mod a prime blew past 40 rounds. The star-contraction
-    // finish is topology-only: the same permuted path converges in 17
-    // total rounds (8 propagation + 9 star).
+    // finish is topology-only: the same permuted path converges in 16
+    // total rounds (8 propagation + 8 star).
     val n = 4096L
     val P = java.math.BigInteger.valueOf(n).nextProbablePrime().longValueExact()
     val a = 6364136223846793005L % P
@@ -260,9 +280,10 @@ class DedupSpec extends SparkSuite {
     val ppath = spark.range(0, n - 1)
       .select(perm(col("id")).as("a_id"), perm(col("id") + 1).as("b_id"))
       .repartition(8)
-    val (labels, rounds, _) = Dedup.connectedComponentsStats(ppath, maxIter = 20)
-    assert(rounds <= 20)
-    val l = labels.cache()
+    val (labels, rounds, _) = Dedup.connectedComponentsStats(pastBound(ppath), maxIter = 20)
+    info(s"rounds: $rounds")
+    assert(rounds > 0 && rounds <= 20)
+    val l = labels.where(col("id") < Bulk).cache()
     assert(l.count() == n)
     assert(l.select("label").distinct().count() == 1) // one component
     l.unpersist()
@@ -314,6 +335,38 @@ class DedupSpec extends SparkSuite {
     val got = Dedup.connectedComponents(edges).as[(Option[Long], Long)].collect().toMap
     assert(got == Map(Some(1L) -> 1L, Some(2L) -> 1L, Some(3L) -> 3L, Some(4L) -> 3L,
       Some(7L) -> 7L, None -> 1L))
+  }
+
+  test("connectedComponents: a graph within one partition is labelled in one job, nothing leaked") {
+    val sc = spark.sparkContext
+    // a 2,000-node path, deep enough that the loop would need ~19 rounds:
+    // the edge-list count is 3 jobs (AQE materializes the cached list and
+    // runs the count's map stage as jobs of their own), the union-find
+    // labelling 1, whatever the depth
+    val path = (0L until 2000L).map(i => (i, i + 1)).toDF("a_id", "b_id").repartition(8)
+      .localCheckpoint(true)
+    val ((labels, rounds, width), jobs) =
+      withJobCount("graft_cc_one_task")(Dedup.connectedComponentsStats(path))
+    info(s"one-task jobs: $jobs")
+    assert(jobs == 4, s"$jobs jobs")
+    assert(rounds == 0 && width == 1)
+    assert(labels.as[(Long, Long)].collect().toSet == (0L to 2000L).map(_ -> 0L).toSet)
+    Dedup.freeCheckpoint(labels)
+    Dedup.freeCheckpoint(path)
+    // each call leaves exactly its returned checkpoint cached (the persisted
+    // edge list is freed); twenty different inputs, since the cache would
+    // dedupe identical plans. Ids, not sizes: Spark's cleaner may drop
+    // earlier tests' checkpoints meanwhile
+    def cached = sc.getPersistentRDDs.keySet
+    val before = cached
+    val kept = (1 to 20).map { i =>
+      val known = cached
+      val l = Dedup.connectedComponents((0L until 50L).map(j => (j, (j * 7 + i) % 50)).toDF("a_id", "b_id"))
+      assert((cached -- known).size == 1, s"call $i")
+      l
+    }
+    kept.foreach(Dedup.freeCheckpoint)
+    assert((cached -- before).isEmpty)
   }
 
   test("spanningForest: never more rows than its input, fewer on redundant edges") {
@@ -398,9 +451,11 @@ class DedupSpec extends SparkSuite {
       pmod(c % P * (a % P) + 1442695040888963407L % P, lit(P))
     val ppath = graft.SharedSpark.spark.range(0, n - 1)
       .select(perm(col("id")).as("a_id"), perm(col("id") + 1).as("b_id"))
-    val (labels, rounds, _) = Dedup.connectedComponentsStats(ppath, maxIter = 8)
-    assert(rounds <= 8)
-    assert(labels.count() == n)
-    assert(labels.select("label").distinct().count() == 1)
+    val (labels, rounds, _) = Dedup.connectedComponentsStats(pastBound(ppath), maxIter = 8)
+    info(s"rounds: $rounds")
+    assert(rounds > 0 && rounds <= 8)
+    val l = labels.where(col("id") < Bulk)
+    assert(l.count() == n)
+    assert(l.select("label").distinct().count() == 1)
   }
 }

@@ -16,15 +16,6 @@ class ResumableRunnerSpec extends SparkSuite {
   private def cutManifest(out: String, keep: Seq[Int]): Unit =
     Files.write(Paths.get(out, "_manifest"), keep.map(b => s"$b\n").mkString.getBytes)
 
-  /** Runs `body` in a job group; returns its result and its job count. */
-  private def withJobCount[T](group: String)(body: => T): (T, Int) = {
-    spark.sparkContext.setJobGroup(group, group)
-    try {
-      val res = body
-      (res, spark.sparkContext.statusTracker.getJobIdsForGroup(group).length)
-    } finally spark.sparkContext.clearJobGroup()
-  }
-
   private def withBucket(corpus: DataFrame, buckets: Int): DataFrame =
     corpus.withColumn("bucket", pmod(xxhash64(col("image_id")), lit(buckets)).cast("int"))
 

@@ -82,7 +82,8 @@ object Bench {
           errors.remove(name)
         }
       }
-      // drop caches left by the dedup queries (persisted minhash signatures)
+      // drop anything a query left in the session's cache (the queries
+      // persist nothing; this keeps the passes independent regardless)
       spark.catalog.clearCache()
     }
     // one UNTIMED pipeline pass warms scan/codegen/noop paths so the timed

@@ -3,7 +3,10 @@ package graft
 /** Per-query plan snapshot for the optimization-round evidence trail: writes
   * `explain("formatted")` for every driver query (and the pipeline product
   * job) to `<outDir>/<query>_<tag>.txt` — one file per query, so before/after
-  * plan diffs are reviewable without running Spark.
+  * plan diffs are reviewable without running Spark — and prints one summary
+  * line per plan (Exchange count, broadcast and sort-merge joins, pushed
+  * filters, WSCG subtrees): the "is this the plan you'd want at 100×" review
+  * loop behind PLAN_AUDIT.md.
   * Usage: runMain graft.PlanDump [sfDir] [outDir] [tag]
   */
 object PlanDump {
@@ -18,7 +21,14 @@ object PlanDump {
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$outDir/${name}_$tag.txt"), plan)
-      println(s"wrote $outDir/${name}_$tag.txt")
+      // ops appear once in the tree and once in the details section of
+      // formatted mode — count the numbered details headers only
+      val exchanges = "\\(\\d+\\) Exchange".r.findAllIn(plan).size
+      val bhj = "\\(\\d+\\) BroadcastHashJoin".r.findAllIn(plan).size
+      val smj = "\\(\\d+\\) SortMergeJoin".r.findAllIn(plan).size
+      val pushed = "PushedFilters: \\[[^\\]]".r.findAllIn(plan).size
+      val wscg = "codegen id : \\d+".r.findAllIn(plan).toSet.size
+      println(f"$name%-24s exchanges=$exchanges%-3d bhj=$bhj%-2d smj=$smj%-2d pushedFilterScans=$pushed%-2d wscg=$wscg%-3d")
     }
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       dump(name, fn(spark, sfDir))

@@ -185,8 +185,14 @@ object Dedup {
     //    parquet scan is one partition; without spreading, all docs hash on
     //    one core) — when the scan is already as wide as the cluster the
     //    repartition would shuffle the full text column for nothing;
-    //  - persist the signatures: both sides of the band self-join below
-    //    re-derive them, and Catalyst would re-run the UDF per branch
+    //  - checkpoint the signatures locally: the over-cap collect and both
+    //    sides of the band self-join below read them, and Catalyst would
+    //    re-run the UDF per branch. The checkpoint is lazy: its blocks are
+    //    written by the first job that reads them (the over-cap collect,
+    //    which reads every partition), so the UDF runs once per row with
+    //    no job of its own (q11 at sf0.01 and sf0.1: 7 jobs; 8 with an
+    //    eager checkpoint or with a persisted frame). It is no cache
+    //    entry; Spark's cleaner frees its blocks with the returned frame
     val parallelism = df.sparkSession.sparkContext.defaultParallelism
     // The partition-count probe is restricted to narrow scan-shaped inputs:
     // under AQE, df.rdd finalizes the adaptive plan, which EXECUTES every
@@ -212,7 +218,7 @@ object Dedup {
     val sigs = spread
       .select(col(idCol).as("id"), minhashSignature(col(textCol), k, shingleN).as("sig"))
       .where(col("sig").isNotNull)
-      .persist()
+      .localCheckpoint(false)
     // the signature rides along through banding and the pair join (an extra
     // ~8·k bytes per banded row) so the candidate pairs can be scored
     // directly: the earlier ids-only shape re-joined `sigs` TWICE after a
@@ -478,9 +484,10 @@ object Dedup {
     * permuted-id paths) pins the whole-pipeline round count and exactness.
     *
     * The result is locally checkpointed (materialized, lineage truncated) —
-    * it never replays the loop; superseded per-round snapshots are freed
-    * eagerly. Throws IllegalStateException if maxIter total rounds don't
-    * reach the fixpoint rather than returning wrong labels.
+    * it never replays the loop; the edge list and superseded per-round
+    * snapshots are freed eagerly, and nothing enters the session's cache.
+    * Throws IllegalStateException if maxIter total rounds don't reach the
+    * fixpoint rather than returning wrong labels.
     *
     * Scale shape:
     *  - a forest pre-pass contracts each input partition to a spanning
@@ -488,13 +495,17 @@ object Dedup {
     *    no shuffle, never more rows out than in, bounded memory per task).
     *    Near-dup cliques arrive as k(k-1)/2 pairs and leave as k - 1
     *    edges: the q28-shaped 620k-pair list becomes ~30k edges;
+    *  - the symmetrized forest edges are materialized once, as a local
+    *    checkpoint counted by an Observation on the same job: the count
+    *    picks the path and sizes the loop without a job of its own;
     *  - a graph whose symmetrized forest edges fit one partition (at most
     *    250k, the loop's own input-width rule) with integral ids is
     *    labelled by one union-find task ([[SpanningForest.labels]]) over
     *    the coalesced edge list, with no loop, no shuffle and no rounds
-    *    (maxIter is not consulted). The labels stay an executor-side local
-    *    checkpoint; nothing is collected. The two-phase loop runs only past
-    *    250k edges, or for ids the forest cannot hold as longs;
+    *    (maxIter is not consulted): two jobs in all, the edge list and the
+    *    labelling. The labels stay an executor-side local checkpoint;
+    *    nothing is collected. The two-phase loop runs only past 250k
+    *    edges, or for ids the forest cannot hold as longs;
     *  - no step materializes neighborhood lists or pair products; phase-2
     *    edge counts never grow (each input edge yields exactly one output);
     *  - shuffle width is sized from the observed edge count (~250k
@@ -504,8 +515,8 @@ object Dedup {
     *    SparkContext, shared cache/SharedState), so the CALLER's conf is
     *    never touched; explicit per-join repartition was measured 35%
     *    slower (loses map-side partial combines and AQE's freedom);
-    *  - the loop's input width follows the same rule: the persisted edge
-    *    list is coalesced to ⌈edges / 250k⌉ partitions, since at these
+    *  - the loop's input width follows the same rule: the checkpointed
+    *    edge list is coalesced to ⌈edges / 250k⌉ partitions, since at these
     *    sizes a round's cost is per-task overhead;
     *  - convergence detection rides each round's own materialization via
     *    Observation — no extra pass.
@@ -517,7 +528,10 @@ object Dedup {
     * rounds executed, shuffle width used); the one-task path reports 0
     * rounds and width 1. The scale probe asserts rounds stays logarithmic
     * and the width actually grows past the session default on big edge
-    * lists (sf0.1 only ever exercises the one-task path). */
+    * lists (sf0.1 only ever exercises the one-task path). The symmetrized
+    * edge list `eA` is an observed local checkpoint: one job materializes
+    * it and counts its `m0` rows, and every path frees it before it
+    * returns or throws. */
   private[graft] def connectedComponentsStats(edges: DataFrame,
       maxIter: Int = 30): (DataFrame, Int, Int) = {
     // both orientations in ONE pass over the partition-contracted edge list
@@ -531,13 +545,15 @@ object Dedup {
     // node appearing only as (a, a) must still come back labeled a (phase
     // 1's id universe derives from these endpoints; phase 2 drops
     // self-loops at contraction, where the node is already registered).
+    val obs = org.apache.spark.sql.Observation()
     val eA = spanningForest(edges)
       .select(explode(array(
         struct(col("a_id").as("src"), col("b_id").as("dst")),
         struct(col("b_id").as("src"), col("a_id").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .persist()
-    val m0 = eA.count() // materializes the persist AND picks the path
+      .observe(obs, count(lit(1)).as("m0"))
+      .localCheckpoint(true)
+    val m0 = obs.get("m0").asInstanceOf[Long] // counted by the materializing job
     // the loop's input width by the same ~250k-edges rule as its shuffle
     // width: at these sizes a round costs per-task overhead, not per-edge
     // work. An edge list that fits one partition needs no loop at all
@@ -556,11 +572,11 @@ object Dedup {
       .mapPartitions(SpanningForest.labels)(Encoders.row(asLong))
       .select(col("id").cast(idType), col("label").cast(idType))
       .localCheckpoint(true)
-    eA.unpersist()
+    freeCheckpoint(eA)
     labels
   }
 
-  /** The two-phase loop of [[connectedComponents]] over the persisted
+  /** The two-phase loop of [[connectedComponents]] over the checkpointed
     * symmetrized edge list `eA` of `m0` rows, read as `width` partitions. */
   private def propagationLoop(eA: DataFrame, m0: Long, width: Int,
       maxIter: Int): (DataFrame, Int, Int) = {
@@ -632,11 +648,11 @@ object Dedup {
         .where(col("u") =!= col("v")).distinct()
         .localCheckpoint(true)
       // last read of the full symmetrized edge list was the contraction
-      // just materialized — free its cached blocks BEFORE the star rounds
+      // just materialized — free its checkpoint BEFORE the star rounds
       // (at 10^10 edges, holding 2x the edge list through O(log n) rounds
-      // would evict working blocks; unpersist is idempotent, the final
+      // would evict working blocks; freeing is idempotent, the final
       // call after the loop covers the phase-1-only path)
-      eA.unpersist()
+      freeCheckpoint(eA)
 
       // one star op: m(u) = min(Γ(u) ∪ {u}); large connects strictly
       // larger neighbors to m, small connects u and its smaller ones to m
@@ -686,8 +702,7 @@ object Dedup {
         prevSig = sig
       }
       if (!starDone) {
-        freeCheckpoint(labels); freeCheckpoint(cur)
-        eA.unpersist()
+        freeCheckpoint(labels); freeCheckpoint(cur); freeCheckpoint(eA)
         throw new IllegalStateException(
           s"connectedComponents did not converge in $maxIter rounds; raise maxIter")
       }
@@ -701,17 +716,17 @@ object Dedup {
       freeCheckpoint(labels); freeCheckpoint(cur)
       labels = composed
     }
-    eA.unpersist()
+    freeCheckpoint(eA)
     (labels, rounds, p)
   }
 
-  /** Release a superseded localCheckpoint's storage blocks NOW instead of
-    * waiting for driver GC + ContextCleaner: each loop block snapshots the
-    * full |V|-row label frame, and a deep graph would otherwise hold every
-    * superseded snapshot in executor storage for the whole loop. The
-    * checkpointed RDD sits inside the frame's LogicalRDD node; unpersisting
-    * it is safe because the NEXT checkpoint is already materialized and has
-    * no dependency on it.
+  /** Release a localCheckpoint's storage blocks NOW instead of waiting for
+    * driver GC + ContextCleaner: each loop block snapshots the full |V|-row
+    * label frame, and a deep graph would otherwise hold every superseded
+    * snapshot (and the edge list) in executor storage for the whole loop.
+    * The checkpointed RDD sits inside the frame's LogicalRDD node;
+    * unpersisting it is safe once every frame that reads it is itself
+    * materialized: the next snapshot, or the returned labels.
     */
   private[dedup] def freeCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.collect {

@@ -42,7 +42,7 @@ object QualityFilter {
     * A plain Tuple8 — NOT a nested case class — because Janino cannot compile
     * the generated accessor call for a case class nested in this object
     * (`QualityFilter$RowScore.lang()` → "No applicable constructor/method
-    * found", 1,152 failures per ScaleProbe run in round 1, every task paying
+    * found", 1,152 failures per 8M-row pipeline run in round 1, every task paying
     * an attempted compile + interpreted fallback). Tuple accessors (`_1()`…)
     * compile fine.
     */

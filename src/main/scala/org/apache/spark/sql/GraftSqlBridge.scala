@@ -27,8 +27,8 @@ object GraftSqlBridge {
     * SparkContext (`Dataset.ofRows` is private[sql]). Used by iterative
     * jobs (connected components) that size `spark.sql.shuffle.partitions`
     * for the job in a CLONED session instead of mutating the caller's —
-    * cached/persisted data is shared at the SharedState level, so a
-    * persisted input resolves to the same cache from the clone. */
+    * a locally checkpointed input is a LogicalRDD over the SparkContext's
+    * blocks, so the clone reads the same materialized rows. */
   def withSession(df: DataFrame, s: SparkSession): DataFrame =
     classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession], df.queryExecution.logical)
 }

@@ -22,4 +22,9 @@ abstract class SparkSuite extends AnyFunSuite {
       (res, spark.sparkContext.statusTracker.getJobIdsForGroup(group).length)
     } finally spark.sparkContext.clearJobGroup()
   }
+
+  /** True when the session's cache (`Dataset.persist`/`cache`) holds no
+    * entry. Pins clear it first: suites share one session. */
+  protected def cacheIsEmpty: Boolean =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager.isEmpty
 }

@@ -66,6 +66,17 @@ class DedupSpec extends SparkSuite {
     assert(viaSub == viaScan)
   }
 
+  test("minhashCandidates: repeated calls leave no cache entry behind") {
+    // twenty different inputs: the cache would dedupe identical plans
+    spark.catalog.clearCache()
+    (1 to 20).foreach { i =>
+      val in = docs.where(col("doc_id") =!= i)
+      assert(Dedup.minhashCandidates(in, "text", "doc_id",
+        k = 8, shingleN = 2, bands = 4, minEqual = 4).count() > 0)
+      assert(cacheIsEmpty, s"call $i")
+    }
+  }
+
   test("simhash64 matches the Scala reference implementation (xxhash parity)") {
     val got = docs.select(col("doc_id"), Dedup.simhash64(col("text")).as("sh"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -340,22 +351,21 @@ class DedupSpec extends SparkSuite {
   test("connectedComponents: a graph within one partition is labelled in one job, nothing leaked") {
     val sc = spark.sparkContext
     // a 2,000-node path, deep enough that the loop would need ~19 rounds:
-    // the edge-list count is 3 jobs (AQE materializes the cached list and
-    // runs the count's map stage as jobs of their own), the union-find
-    // labelling 1, whatever the depth
+    // one job materializes the edge list and counts it (an observed local
+    // checkpoint), and the union-find labelling is 1 more, whatever the depth
     val path = (0L until 2000L).map(i => (i, i + 1)).toDF("a_id", "b_id").repartition(8)
       .localCheckpoint(true)
     val ((labels, rounds, width), jobs) =
       withJobCount("graft_cc_one_task")(Dedup.connectedComponentsStats(path))
     info(s"one-task jobs: $jobs")
-    assert(jobs == 4, s"$jobs jobs")
+    assert(jobs == 2, s"$jobs jobs")
     assert(rounds == 0 && width == 1)
     assert(labels.as[(Long, Long)].collect().toSet == (0L to 2000L).map(_ -> 0L).toSet)
     Dedup.freeCheckpoint(labels)
     Dedup.freeCheckpoint(path)
-    // each call leaves exactly its returned checkpoint cached (the persisted
-    // edge list is freed); twenty different inputs, since the cache would
-    // dedupe identical plans. Ids, not sizes: Spark's cleaner may drop
+    // each call leaves exactly its returned checkpoint cached (the edge
+    // list's checkpoint is freed); twenty different inputs, since the cache
+    // would dedupe identical plans. Ids, not sizes: Spark's cleaner may drop
     // earlier tests' checkpoints meanwhile
     def cached = sc.getPersistentRDDs.keySet
     val before = cached

@@ -43,6 +43,9 @@ class QualityFilterSpec extends SparkSuite {
     assert(f1 >= 0.99)
     // sanity: both classes and several distinct drop reasons exercised
     assert(tp > 0 && fn == 0 && fp == 0)
+    // the flagship entry point (2,000 synthesized rows) answers rows, some kept
+    val entry = graft.SparkEntry.entry(spark)
+    assert(entry.count() > 0 && entry.where(col("keep")).count() > 0)
   }
 
   test("image bytes pass through untouched on kept rows (PSNR invariant, exactly)") {

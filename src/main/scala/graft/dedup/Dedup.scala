@@ -363,11 +363,11 @@ object Dedup {
 
   /** Over-cap bucket keys for [[minhashCandidates]] and [[phashNearDup]],
     * read with ONE bounded collect whose size picks the plan: no keys (the
-    * common case) → None, and the caller drops the anti-join entirely; up
-    * to 1M keys → a local relation, broadcast into the anti-join; more (the
+    * common case) → None, and the caller drops its key join entirely; up
+    * to 1M keys → a local relation, broadcast into that join; more (the
     * rows/maxBucket worst case can exceed driver/broadcast limits at 10^12
-    * banded rows) → the key frame itself, for a shuffle anti-join. Nothing
-    * is persisted: both self-join sides read the local relation, so the
+    * banded rows) → the key frame itself, for a shuffle join. Nothing is
+    * persisted: every reader of the keys reads the local relation, so the
     * count aggregation runs once and no cached frame outlives the call.
     */
   private def overCapKeys(overKeys: DataFrame): Option[DataFrame] = {
@@ -386,21 +386,30 @@ object Dedup {
     * north rule's "duplicate phash clusters". Scale path: the `bits`-wide
     * hash is split into maxHamming+1 disjoint segments; by pigeonhole, two
     * hashes within hamming <= maxHamming agree EXACTLY on at least one
-    * segment, so per-band equi-joins find every qualifying pair and the
-    * O(n²) all-pairs never materializes. `maxBucket` caps degenerate
-    * segments (e.g. the all-black-thumbnail hash) like
-    * [[minhashCandidates]]. Returns (a_id, b_id, dist), one row per pair
-    * (`idCol` is a key).
+    * segment, so comparing the members of each `(band, seg)` bucket finds
+    * every qualifying pair and the O(n²) all-pairs never materializes.
+    * `maxBucket` caps degenerate segments (e.g. the all-black-thumbnail
+    * hash) like [[minhashCandidates]]. Returns (a_id, b_id, dist) with
+    * a_id < b_id, one row per pair (`idCol` is a key); NULL hashes and NULL
+    * ids are never paired.
+    *
+    * One exchange: the banded rows `(band, seg, id, hash, cap)` are hash-
+    * partitioned on `(band, seg)` into the session's default parallelism
+    * (an explicit width, so AQE cannot coalesce the pair stage into one
+    * task) and sorted within each partition on the packed `(band, seg)`,
+    * which makes every bucket one contiguous run. The [[BucketPairs]]
+    * kernel reads one run at a time, holding at most `maxBucket` members
+    * (it counts an over-cap bucket to its end and emits nothing from it),
+    * and compares the members directly: no join over the banded rows.
     *
     * A pair within maxHamming collides on every band where its hashes'
-    * XOR has a zero segment, and the join meets it once per such band. It
-    * is kept only on its LOWEST uncapped colliding band: a row on band b
-    * survives when every band b' < b either has a non-zero XOR segment or
-    * is over the cap. Both docs share a colliding segment, so one doc's
-    * capped-band mask decides for both. That is the capped pair set (q28:
-    * `count(*) OVER (band, seg) <= maxBucket`, then DISTINCT) without a
-    * dedup shuffle; the mask is a constant 0, and costs no join, unless
-    * some bucket is over the cap.
+    * XOR has a zero segment. It is kept only on its LOWEST uncapped
+    * colliding band: a pair in bucket b survives when every band b' < b
+    * either has a non-zero XOR segment or is over the cap. Both docs share
+    * a colliding segment, so one doc's capped-band mask decides for both.
+    * That is the capped pair set (q28: `count(*) OVER (band, seg) <=
+    * maxBucket`, then DISTINCT) without a dedup shuffle; the mask is a
+    * constant 0, and costs no join, unless some bucket is over the cap.
     */
   def phashNearDup(
       df: DataFrame,
@@ -412,41 +421,46 @@ object Dedup {
     val bands = maxHamming + 1
     val width = bits / bands
     require(width > 0 && bands * width <= 64, s"bad banding: $bits bits / $bands bands")
-    val mask = (1L << width) - 1
-    def segment(h: Column, band: Column): Column =
-      call_function("shiftrightunsigned", h, band * width).bitwiseAND(lit(mask))
+    // `1L << 64` is 1 (shifts are mod 64), so the full-width mask is built
+    // by an unsigned right shift instead
+    val mask = -1L >>> (64 - width)
     val base = df.select(col(idCol).as("a_id"), col(phashCol).cast("long").as("a_ph"))
-    val banded = base
-      .withColumn("band", explode(array((0 until bands).map(lit): _*)))
-      .withColumn("seg", segment(col("a_ph"), col("band")))
+      .where(col("a_ph").isNotNull)
+    // one row per (doc, band): (band, seg, a_id, a_ph, cap)
+    def banded(f: DataFrame, cap: Column): DataFrame = f.select(
+      posexplode(array((0 until bands).map(b =>
+        call_function("shiftrightunsigned", col("a_ph"), lit(b * width)).bitwiseAND(lit(mask))): _*))
+        .as(Seq("band", "seg")),
+      col("a_id"), col("a_ph"), cap.as("cap"))
     // over-cap segments via partial-agg counts (≤ rows/maxBucket keys by
-    // construction) — same shape as [[minhashCandidates]]'s cap: no
-    // shuffle/sort of the banded rows
-    val overSegs = overCapKeys(banded.groupBy(col("band"), col("seg"))
+    // construction) — same shape as [[minhashCandidates]]'s cap. NULL ids
+    // count toward their bucket, as in q28's window count
+    val uncapped = banded(base, lit(0L))
+    val overSegs = overCapKeys(uncapped.groupBy(col("band"), col("seg"))
       .agg(count(lit(1)).as("__bc"))
       .where(col("__bc") > maxBucket)
       .select(col("band"), col("seg")))
-    val capped = overSegs.fold(banded)(banded.join(_, Seq("band", "seg"), "left_anti"))
-    // bit b' set = the hash's band-b' segment is over the cap
-    val left = overSegs.fold(capped.withColumn("cap", lit(0L))) { keys =>
-      val caps = banded.join(keys, Seq("band", "seg"), "left_semi")
+    // bit b' of cap set = the hash's band-b' segment is over the cap
+    val rows = overSegs.fold(uncapped) { keys =>
+      val caps = uncapped.join(keys, Seq("band", "seg"), "left_semi")
         .groupBy(col("a_ph"))
         .agg(bit_or(call_function("shiftleft", lit(1L), col("band"))).as("cap"))
-      capped.join(caps, Seq("a_ph"), "left")
-        .withColumn("cap", coalesce(col("cap"), lit(0L)))
+      banded(base.join(caps, Seq("a_ph"), "left"), coalesce(col("cap"), lit(0L)))
     }
-    val right = capped.select(
-      col("band"), col("seg"), col("a_id").as("b_id"), col("a_ph").as("b_ph"))
-    val xor = col("a_ph").bitwiseXOR(col("b_ph"))
-    val lowestBand = (0 until bands - 1).foldLeft(lit(true)) { (acc, j) =>
-      acc && (col("band") <= j || segment(xor, lit(j)) =!= 0 ||
-        col("cap").bitwiseAND(lit(1L << j)) =!= 0)
-    }
-    left.join(right, Seq("band", "seg"))
+    val id = base.schema("a_id")
+    val out = StructType(Seq(id, id.copy(name = "b_id"),
+      StructField("dist", IntegerType, nullable = false)))
+    // the sort key is one long, (band, seg) packed, so the sorter radix-
+    // sorts it instead of comparing two-key rows; with one 64-bit band the
+    // band is 0 and the shift by 64 (a shift by 0) leaves seg as it is
+    val bucket = call_function("shiftleft", col("band").cast("long"), lit(width)).bitwiseOR(col("seg"))
+    rows
+      .repartition(df.sparkSession.sparkContext.defaultParallelism, col("band"), col("seg"))
+      .sortWithinPartitions(bucket)
+      .mapPartitions(BucketPairs.pairs(_, maxHamming, width, maxBucket))(Encoders.row(out))
+      .select(least(col("a_id"), col("b_id")).as("a_id"),
+        greatest(col("a_id"), col("b_id")).as("b_id"), col("dist"))
       .where(col("a_id") < col("b_id"))
-      .withColumn("dist", hamming64(col("a_ph"), col("b_ph")).cast("int"))
-      .where(col("dist") <= maxHamming && lowestBand)
-      .select(col("a_id"), col("b_id"), col("dist"))
   }
 
   /** Connected components over an undirected candidate-pair edge list

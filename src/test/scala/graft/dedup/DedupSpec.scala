@@ -150,6 +150,91 @@ class DedupSpec extends SparkSuite {
       if java.lang.Long.bitCount(pi ^ pj) <= 3
     } yield (i, j)).toSet
     assert(banded == expected)
+
+    // edge rows on top of the corpus, checked against the capped brute
+    // force row for row, with long and with string ids, as 1 and as 8
+    // input partitions: NULL hashes, NULL ids (they fill their bucket but
+    // pair with nothing), a duplicated id, and exact-hash buckets of
+    // exactly maxBucket docs (kept), of maxBucket docs plus a NULL id and
+    // of maxBucket + 1 docs (both over the cap on every band)
+    val maxBucket = 10
+    val (hA, hB, hC) = (0x1111222233334444L, 0x5555666677778888L, 0x99990000bbbbccccL)
+    val edge: Seq[(Option[Long], Option[Long])] =
+      brute.toSeq.map { case (i, p) => (Some(i), Some(p)) } ++
+        Seq((Some(1000L), None), (Some(1001L), None), (None, None), (None, Some(a ^ 1L)),
+          (Some(5L), Some(brute(5)._2 ^ 1L))) ++
+        (0 until maxBucket).map(k => (Some(2000L + k), Some(hA))) ++
+        (0 until maxBucket).map(k => (Some(2100L + k), Some(hB))) ++ Seq((None, Some(hB))) ++
+        (0 to maxBucket).map(k => (Some(2200L + k), Some(hC)))
+    val expectedEdge = cappedPairs(edge, maxHamming = 3, bits = 64, maxBucket)
+    assert(expectedEdge.count(p => p._1 >= 2000L) == maxBucket * (maxBucket - 1) / 2)
+    assert(expectedEdge.exists(p => p._1 == 5L || p._2 == 5L))
+    val asText = edge.map { case (i, p) => (i.map(_.toString), p) }
+    val expectedText = cappedPairs(asText, maxHamming = 3, bits = 64, maxBucket)
+    // string order, not numeric: "1000" < "9"
+    assert(expectedText.exists { case (x, y, _) => x.toLong > y.toLong })
+    for (parts <- Seq(1, 8)) {
+      val longs = Dedup.phashNearDup(edge.toDF("id", "ph").repartition(parts), "id", "ph",
+        maxHamming = 3, maxBucket = maxBucket).as[(Long, Long, Int)].collect()
+      assert(longs.sorted.toSeq == expectedEdge.sorted, s"long ids, $parts partitions")
+      val texts = Dedup.phashNearDup(asText.toDF("id", "ph").repartition(parts), "id", "ph",
+        maxHamming = 3, maxBucket = maxBucket).as[(String, String, Int)].collect()
+      assert(texts.sorted.toSeq == expectedText.sorted, s"string ids, $parts partitions")
+    }
+  }
+
+  /** phashNearDup's answer by brute force over rows: every row pair with
+    * ids a < b and hashes within maxHamming that collides on at least one
+    * band whose bucket holds at most maxBucket hashed rows (NULL ids
+    * included), once per row pair. NULL ids and NULL hashes pair with
+    * nothing. */
+  private def cappedPairs[T](rows: Seq[(Option[T], Option[Long])], maxHamming: Int, bits: Int,
+      maxBucket: Int)(implicit ord: Ordering[T]): Seq[(T, T, Int)] = {
+    val bands = maxHamming + 1
+    val width = bits / bands
+    def seg(h: Long, b: Int) = (BigInt(h) >> (b * width)) & ((BigInt(1) << width) - 1)
+    val hashed = rows.collect { case (id, Some(h)) => (id, h) }
+    val bucket = hashed.flatMap { case (_, h) => (0 until bands).map(b => (b, seg(h, b))) }
+      .groupBy(identity).map { case (k, v) => k -> v.length }
+    for {
+      (Some(i), x) <- hashed; (Some(j), y) <- hashed if ord.lt(i, j)
+      if java.lang.Long.bitCount(x ^ y) <= maxHamming
+      if (0 until bands).exists(b => seg(x, b) == seg(y, b) && bucket((b, seg(x, b))) <= maxBucket)
+    } yield (i, j, java.lang.Long.bitCount(x ^ y))
+  }
+
+  test("phashNearDup: a 64-bit single band keeps its full-width segment") {
+    // one band of 64 bits: the segment is the whole hash, so 0x10 and 0x20
+    // fall in different buckets and neither is over a cap of 2
+    val in = Seq((1L, 0x10L), (2L, 0x10L), (3L, 0x20L)).toDF("id", "ph")
+    for (bits <- Seq(63, 64)) {
+      val got = Dedup.phashNearDup(in, "id", "ph", maxHamming = 0, bits = bits, maxBucket = 2)
+        .as[(Long, Long, Int)].collect().toSeq
+      assert(got == Seq((1L, 2L, 0)), s"bits = $bits")
+    }
+  }
+
+  test("phashNearDup: one exchange, no join, and a pair stage as wide as the session") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val parallelism = spark.sparkContext.defaultParallelism
+    assume(parallelism > 1)
+    // nothing is over the default cap, so no key join is planned
+    val pairs = Dedup.phashNearDup(phashCorpus, "id", "ph", maxHamming = 3)
+    val group = "phash-plan-shape"
+    val (n, _) = withJobCount(group)(pairs.collect().length)
+    assert(n > 0)
+    val helper = new AdaptiveSparkPlanHelper {}
+    val plan = pairs.queryExecution.executedPlan
+    assert(helper.collect(plan) { case j: BaseJoinExec => j }.isEmpty, plan.toString)
+    assert(helper.collect(plan) { case e: ShuffleExchangeLike => e }.length == 1, plan.toString)
+    // the pair stage is the last job's result stage; AQE must not have
+    // coalesced it to one task
+    val tracker = spark.sparkContext.statusTracker
+    val lastJob = tracker.getJobIdsForGroup(group).max
+    val pairStage = tracker.getJobInfo(lastJob).get.stageIds.max
+    assert(tracker.getStageInfo(pairStage).get.numTasks == parallelism)
   }
 
   private def phashCorpus = spark.range(300).select(col("id"),

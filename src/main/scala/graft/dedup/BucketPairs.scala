@@ -3,10 +3,10 @@ package graft.dedup
 import org.apache.spark.sql.Row
 
 /** The pair kernel of [[Dedup.phashNearDup]]: a partition of banded rows
-  * `(band, seg, id, ph, cap)`, sorted by `(band, seg)`, is read one bucket
-  * (one run of equal `(band, seg)`) at a time, and each bucket's member
-  * pairs within `maxHamming` come out as `(id, id, dist)` rows, in no
-  * particular id order.
+  * `(band, seg, id, ph, cap)`, sorted so that each `(band, seg)` bucket is
+  * one run, is read one bucket at a time, and each bucket's member pairs
+  * within `maxHamming` come out as `(id, id, dist)` rows, in no particular
+  * id order.
   *
   * Invariants:
   *  - a bucket of more than `maxBucket` rows is over the cap: it is counted
@@ -14,10 +14,8 @@ import org.apache.spark.sql.Row
   *    and only for the bucket being read;
   *  - a row with a NULL id counts toward its bucket's size but is never
   *    paired; `ph` is never NULL (the caller drops those rows);
-  *  - a pair is emitted only from its lowest uncapped colliding band: on
-  *    band b, every band b' < b must have a non-zero XOR segment or be over
-  *    the cap (bit b' of `cap`). Both docs share their colliding segments,
-  *    so either doc's mask decides.
+  *  - a pair is emitted only from its lowest uncapped colliding band (the
+  *    rule of [[Dedup.phashNearDup]]), read from the first doc's `cap`.
   */
 private[dedup] object BucketPairs {
 

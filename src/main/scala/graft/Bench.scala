@@ -1,4 +1,5 @@
 package graft
+import graft.util.Jsons
 import org.apache.spark.sql.functions.col
 
 /** Per-round benchmark main. Driver contract: prints ONE metric-JSON line as
@@ -115,9 +116,7 @@ object Bench {
       math.max(cpus / 2.0, math.min(cpus, 8) + 2.0)
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replaceAll("[\\x00-\\x1f]", " ") + "\""
-    val errJson = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
+    val errJson = errors.map { case (k, v) => s"${Jsons.quote(k)}:${Jsons.quote(v)}" }
       .mkString("{", ",", "}")
     val total = results.values.sum
     val imgsPerSec = (pipelineRows / pipeSec).toLong

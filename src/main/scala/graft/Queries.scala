@@ -411,8 +411,8 @@ object Queries {
   private val duckToks =
     "list_filter(regexp_split_to_array(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '), x -> len(x) > 0)"
 
-  // ---- q11: MinHash + LSH near-dup candidates (banded join — the O(n²)
-  //          all-pairs never materializes) ----
+  // ---- q11: MinHash + LSH near-dup candidates (band buckets paired by the
+  //          BucketPairs kernel — the O(n²) all-pairs never materializes) ----
   private def q11(s: SparkSession, dir: String): DataFrame =
     graft.dedup.Dedup.minhashCandidates(
       t(s, dir, "documents"), "text", "doc_id",
@@ -479,14 +479,11 @@ object Queries {
        |    THEN cast(power(2, b) AS int) ELSE 0 END)) AS int) END AS simhash
        |FROM h""".stripMargin
 
-  // ---- q13: blocked n-gram Jaccard pairs. overlapOnly replaces the
-  //          post-hoc n_inter >= 1 filter: arrays_overlap short-circuits and
-  //          the intersection is built once per surviving pair instead of
-  //          twice (filter pushdown duplicated it); same pairs, same counts ----
+  // ---- q13: blocked n-gram Jaccard pairs sharing at least one token ----
   private def q13(s: SparkSession, dir: String): DataFrame =
     graft.dedup.Dedup.jaccardPairs(
       t(s, dir, "documents"), "text", "doc_id",
-      floor(col("doc_id") / 40.0).cast("int"), overlapOnly = true)
+      floor(col("doc_id") / 40.0).cast("int"))
       .withColumn("n_inter", col("n_inter").cast("bigint"))
       .withColumn("n_union", col("n_union").cast("bigint"))
 
@@ -847,7 +844,7 @@ object Queries {
        |FROM range(0, 5000) t(i)""".stripMargin
   }
 
-  // ---- q28: phash near-dup pairs (banded hamming join — north rule's
+  // ---- q28: phash near-dup pairs (banded hamming pairs — north rule's
   //          "duplicate phash clusters"). The synthetic 48-bit phash derives
   //          from doc_id with pure int64 arithmetic (exact in both engines):
   //          ~6 docs per base hash, 0-2 deterministic bit flips each. ----

@@ -1,71 +1,82 @@
 package graft.dedup
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.functions.{col, greatest, least}
+import org.apache.spark.sql.types.{StructField, StructType}
 
-/** The pair kernel of [[Dedup.phashNearDup]]: a partition of banded rows
-  * `(band, seg, id, ph, cap)`, sorted so that each `(band, seg)` bucket is
-  * one run, is read one bucket at a time, and each bucket's member pairs
-  * within `maxHamming` come out as `(id, id, dist)` rows, in no particular
-  * id order.
+/** The pair kernel of every near-dup operator: a partition of rows
+  * `(key, id, payload...)`, sorted so that each bucket (one `key`) is one
+  * run, is read one bucket at a time. The generic part counts the cap and
+  * holds each run's `ids` once, [[hold]] decodes each member's payload into
+  * the operator's buffers, and the operator's exact [[pair]] test picks
+  * the pairs, `(id, id, values...)` in no id order.
   *
   * Invariants:
   *  - a bucket of more than `maxBucket` rows is over the cap: it is counted
   *    to its end and emits nothing. At most `maxBucket` members are held,
   *    and only for the bucket being read;
   *  - a row with a NULL id counts toward its bucket's size but is never
-  *    paired; `ph` is never NULL (the caller drops those rows);
-  *  - a pair is emitted only from its lowest uncapped colliding band (the
-  *    rule of [[Dedup.phashNearDup]]), read from the first doc's `cap`.
+  *    held; the caller drops rows whose key or payload can never pair;
+  *  - keys compare by value (`Objects.deepEquals`: binary by content).
   */
-private[dedup] object BucketPairs {
+private[graft] abstract class BucketPairs(maxBucket: Long) {
 
-  def pairs(rows: Iterator[Row], maxHamming: Int, width: Int,
-      maxBucket: Long): Iterator[Row] = {
-    val mask = -1L >>> (64 - width)
-    // true when no band below `band` is an uncapped colliding one
-    def lowest(xor: Long, cap: Long, band: Int): Boolean = {
-      var b = 0
-      while (b < band && (((xor >>> (b * width)) & mask) != 0 || (cap & (1L << b)) != 0)) b += 1
-      b == band
-    }
-    val ids = scala.collection.mutable.ArrayBuffer[Any]()
-    var phs = new Array[Long](64)
-    var caps = new Array[Long](64)
-    new Iterator[Iterator[Row]] {
-      private var head: Row = if (rows.hasNext) rows.next() else null
-      def hasNext: Boolean = head != null
-      def next(): Iterator[Row] = {
-        val band = head.getInt(0)
-        val seg = head.getLong(1)
-        ids.clear()
-        var size = 0L
-        while (head != null && head.getInt(0) == band && head.getLong(1) == seg) {
-          size += 1
-          if (size <= maxBucket && !head.isNullAt(2)) {
-            val m = ids.length
-            if (m == phs.length) {
-              phs = java.util.Arrays.copyOf(phs, 2 * m)
-              caps = java.util.Arrays.copyOf(caps, 2 * m)
-            }
-            ids += head.get(2)
-            phs(m) = head.getLong(3)
-            caps(m) = head.getLong(4)
-          } else if (size == maxBucket + 1) ids.clear()
-          head = if (rows.hasNext) rows.next() else null
-        }
-        val m = if (size > maxBucket) 0 else ids.length
-        Iterator.range(0, m).flatMap { i =>
-          val out = scala.collection.mutable.ArrayBuffer[Row]()
-          var j = i + 1
-          while (j < m) {
-            val xor = phs(i) ^ phs(j)
-            val dist = java.lang.Long.bitCount(xor)
-            if (dist <= maxHamming && lowest(xor, caps(i), band)) out += Row(ids(i), ids(j), dist)
-            j += 1
-          }
-          out
-        }
+  /** Holds `row`'s payload as member `m` of the bucket being read. */
+  protected def hold(m: Int, row: Row): Unit
+
+  /** The output row `(ids(i), ids(j), values...)` for members `i < j`, or
+    * null when they do not pair. */
+  protected def pair(i: Int, j: Int): Row
+
+  protected val ids = scala.collection.mutable.ArrayBuffer[Any]()
+
+  def pairs(rows: Iterator[Row]): Iterator[Row] = {
+    val in = rows.buffered
+    Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+      val key = in.head.get(0)
+      ids.clear()
+      var size = 0L
+      while (in.hasNext && java.util.Objects.deepEquals(in.head.get(0), key)) {
+        val row = in.next()
+        size += 1
+        if (size <= maxBucket && !row.isNullAt(1)) {
+          hold(ids.length, row)
+          ids += row.get(1)
+        } else if (size == maxBucket + 1) ids.clear()
       }
-    }.flatten
+      val m = if (size > maxBucket) 0 else ids.length
+      Iterator.range(0, m).flatMap { i =>
+        val out = scala.collection.mutable.ArrayBuffer[Row]()
+        var j = i + 1
+        while (j < m) {
+          val r = pair(i, j)
+          if (r != null) out += r
+          j += 1
+        }
+        out
+      }
+    }
+  }
+}
+
+private[graft] object BucketPairs {
+
+  /** The one pair shape, `rows` `(key, id, payload...)` → `(a_id, b_id,
+    * values...)` with `a_id < b_id` for any orderable id type: one
+    * exchange, hash-partitioned on `key` into the session's default
+    * parallelism (explicit, so AQE cannot coalesce the pair stage into one
+    * task) and sorted within each partition on `key`, then `kernel` (one
+    * per task) over the runs. No join.
+    */
+  def frame(rows: DataFrame, values: Seq[StructField])(kernel: () => BucketPairs): DataFrame = {
+    val out = StructType(Seq("a_id", "b_id").map(n => rows.schema(1).copy(name = n)) ++ values)
+    val key = col(rows.columns.head)
+    rows
+      .repartition(rows.sparkSession.sparkContext.defaultParallelism, key)
+      .sortWithinPartitions(key)
+      .mapPartitions(kernel().pairs(_))(Encoders.row(out))
+      .select(least(col("a_id"), col("b_id")).as("a_id") +:
+        greatest(col("a_id"), col("b_id")).as("b_id") +: values.map(f => col(f.name)): _*)
+      .where(col("a_id") < col("b_id"))
   }
 }

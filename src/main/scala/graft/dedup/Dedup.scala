@@ -1,14 +1,15 @@
 package graft.dedup
 
 import graft.functions.{TextFunctions => TF}
-import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Deduplication operators for web-scale corpora: exact, MinHash+LSH,
   * SimHash, n-gram Jaccard, and Bloom-filter assisted — the training-data
   * pipeline staples. All are expressed as DataFrame transformations (shuffle
-  * only where semantically required: the LSH band join and the group-bys).
+  * only where semantically required: the group-bys, and the one exchange
+  * into the [[BucketPairs]] kernel that pairs each bucket's members).
   *
   * Reference lineage: the reference dedups per-batch with `dropDuplicates` +
   * a cross-batch broadcast BloomFilter (`core/util/UniqueFieldsUtil.scala:
@@ -164,9 +165,16 @@ object Dedup {
     * signature: rows sharing any band hash become candidates; candidates are
     * scored by the fraction of equal signature components (the unbiased
     * Jaccard estimate). Only candidate pairs are scored — the
-    * all-pairs O(n²) never materializes; the band join is the shuffle.
+    * all-pairs O(n²) never materializes.
     *
     * Returns (a_id, b_id, n_equal) with a_id < b_id, n_equal ∈ [minEqual, k].
+    *
+    * One exchange into the [[BucketPairs]] kernel, one run per band bucket;
+    * the signature rides along, so the kernel scores each pair directly. A
+    * bucket of more than `maxBucket` rows (boilerplate collisions, template
+    * pages) is skipped: q11's `count(*) OVER (band, bkey) <= maxBucket`,
+    * NULL ids included. Only pairs with `n_equal >= minEqual` reach the
+    * `groupBy(a_id, b_id)` that collapses multi-band collisions. Lazy.
     */
   def minhashCandidates(
       df: DataFrame,
@@ -179,28 +187,12 @@ object Dedup {
       maxBucket: Int = 500): DataFrame = {
     require(k % bands == 0, "bands must divide k")
     val r = k / bands
-    // The signature computation (k md5-min reductions over the shingle set)
-    // is the CPU-heavy stage. Two deliberate physical choices:
-    //  - spread the scan only when it arrives under-parallel (a small
-    //    parquet scan is one partition; without spreading, all docs hash on
-    //    one core) — when the scan is already as wide as the cluster the
-    //    repartition would shuffle the full text column for nothing;
-    //  - checkpoint the signatures locally: the over-cap collect and both
-    //    sides of the band self-join below read them, and Catalyst would
-    //    re-run the UDF per branch. The checkpoint is lazy: its blocks are
-    //    written by the first job that reads them (the over-cap collect,
-    //    which reads every partition), so the UDF runs once per row with
-    //    no job of its own (q11 at sf0.01 and sf0.1: 7 jobs; 8 with an
-    //    eager checkpoint or with a persisted frame). It is no cache
-    //    entry; Spark's cleaner frees its blocks with the returned frame
+    // The signature UDF is the CPU-heavy stage: spread the scan only when
+    // it arrives under-parallel (a small parquet scan is one partition).
+    // Only a scan-shaped input is probed: under AQE, df.rdd EXECUTES every
+    // shuffle stage below the result stage, so a join/aggregate input would
+    // run twice; it takes the unconditional repartition instead
     val parallelism = df.sparkSession.sparkContext.defaultParallelism
-    // The partition-count probe is restricted to narrow scan-shaped inputs:
-    // under AQE, df.rdd finalizes the adaptive plan, which EXECUTES every
-    // shuffle stage below the result stage — for a join/aggregate input the
-    // probe would run the caller's whole pipeline once and the (uncached)
-    // signature pass would run it again. Complex inputs take the
-    // unconditional repartition instead: one possibly-redundant exchange
-    // beats a double-executed upstream.
     val scanShaped = {
       import org.apache.spark.sql.catalyst.plans.logical
       // p.subqueries: a Filter carrying an IN/scalar subquery hides an
@@ -215,58 +207,36 @@ object Dedup {
     val spread =
       if (scanShaped && df.rdd.getNumPartitions >= parallelism) df
       else df.repartition(parallelism)
-    val sigs = spread
+    // one row per (doc, band): the key (band and the md5 of its values, one
+    // string), the id and the signature. A doc without a signature explodes
+    // to no rows; a `where` would be pushed below the spread, UDF inlined
+    val banded = spread
       .select(col(idCol).as("id"), minhashSignature(col(textCol), k, shingleN).as("sig"))
-      .where(col("sig").isNotNull)
-      .localCheckpoint(false)
-    // the signature rides along through banding and the pair join (an extra
-    // ~8·k bytes per banded row) so the candidate pairs can be scored
-    // directly: the earlier ids-only shape re-joined `sigs` TWICE after a
-    // pair-level distinct — two more shuffles of the full signature set at
-    // scale (the joins are shuffles once sigs outgrow a broadcast) and two
-    // more broadcast-build jobs at small scale, for a byte saving the
-    // group-by's map-side partial collapse mostly recovers
-    val banded = sigs.select(
-      col("id"), col("sig"),
-      explode(transform(sequence(lit(0), lit(bands - 1)),
-        b => struct(b.as("band"),
-          md5(concat_ws("|",
-            transform(slice(col("sig"), b * r + 1, lit(r)), x => x.cast("string")))).as("bkey")))).as("bk"))
-      .select(col("id"), col("sig"), col("bk.band"), col("bk.bkey"))
-    // degenerate-bucket guard: a band bucket with m members yields m² pairs;
-    // buckets past maxBucket are boilerplate collisions (empty shingle-sets,
-    // template pages) and are dropped — standard LSH practice, and the knob
-    // that bounds worst-case join fan-out at 10^12 rows.
-    // Implemented as over-cap keys (map-side partial count, tiny output —
-    // at most rows/maxBucket keys by construction) broadcast into an
-    // anti-join: the earlier window-count formulation shuffled AND sorted
-    // the full banded row set per consuming branch (both self-join sides
-    // re-derived the window); this shape never moves the banded rows at all
-    val overKeys = overCapKeys(banded.groupBy(col("band"), col("bkey"))
-      .agg(count(lit(1)).as("__bn"))
-      .where(col("__bn") > maxBucket)
-      .select(col("band"), col("bkey")))
-    val bandedCapped = overKeys.fold(banded)(banded.join(_, Seq("band", "bkey"), "left_anti"))
-    val a = bandedCapped.select(
-      col("band"), col("bkey"), col("id").as("a_id"), col("sig").as("a_sig"))
-    val b = bandedCapped.select(
-      col("band"), col("bkey"), col("id").as("b_id"), col("sig").as("b_sig"))
-    // score each collision row, filter, THEN collapse multi-band collisions:
-    // n_equal is a function of the pair (signatures are functionally
-    // dependent on ids), so computing it per collision row (a 16-slot zip
-    // compare, ≤ bands duplicates per pair) and filtering first means only
-    // SURVIVING pairs reach the dedup aggregation — and they carry one int
-    // instead of two k-element signature arrays, so the aggregate is a
-    // HashAggregate on a narrow exchange (first(array) forced a
-    // SortAggregate: array buffers aren't hash-aggregable, which added two
-    // Sorts of the full collision set and shuffled ~2·8·k bytes per row)
-    val nEqual = size(filter(zip_with(col("a_sig"), col("b_sig"), (x, y) => x === y), p => p))
-    a.join(b, Seq("band", "bkey"))
-      .where(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"), nEqual.as("n_equal"))
-      .where(col("n_equal") >= minEqual)
+      .select(explode(when(col("sig").isNotNull, transform(sequence(lit(0), lit(bands - 1)), b =>
+        concat(b.cast("string"), lit("|"), md5(concat_ws("|",
+          transform(slice(col("sig"), b * r + 1, lit(r)), x => x.cast("string")))))))).as("bkey"),
+        col("id"), col("sig"))
+    BucketPairs.frame(banded, Seq(StructField("n_equal", IntegerType, nullable = false)))(
+      () => new MinhashPairs(minEqual, maxBucket))
       .groupBy(col("a_id"), col("b_id"))
       .agg(min(col("n_equal")).as("n_equal"))
+  }
+
+  /** [[BucketPairs]] for [[minhashCandidates]]: n_equal >= minEqual. */
+  private final class MinhashPairs(minEqual: Int, maxBucket: Long) extends BucketPairs(maxBucket) {
+    private val sigs = scala.collection.mutable.ArrayBuffer[Array[Long]]()
+    protected def hold(m: Int, row: Row): Unit = {
+      val sig = row.getSeq[Long](2).toArray
+      if (m == sigs.length) sigs += sig else sigs(m) = sig
+    }
+    protected def pair(i: Int, j: Int): Row = {
+      val x = sigs(i)
+      val y = sigs(j)
+      var n = 0
+      var t = 0
+      while (t < x.length) { if (x(t) == y(t)) n += 1; t += 1 }
+      if (n >= minEqual) Row(ids(i), ids(j), n) else null
+    }
   }
 
   // ---------- SimHash ----------
@@ -361,14 +331,15 @@ object Dedup {
   /** Hamming distance between two 64-bit simhashes as a Column. */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** Over-cap bucket keys for [[minhashCandidates]] and [[phashNearDup]],
-    * read with ONE bounded collect whose size picks the plan: no keys (the
-    * common case) → None, and the caller drops its key join entirely; up
-    * to 1M keys → a local relation, broadcast into that join; more (the
-    * rows/maxBucket worst case can exceed driver/broadcast limits at 10^12
-    * banded rows) → the key frame itself, for a shuffle join. Nothing is
-    * persisted: every reader of the keys reads the local relation, so the
-    * count aggregation runs once and no cached frame outlives the call.
+  /** Over-cap bucket keys for [[phashNearDup]]'s capped-band mask, read
+    * with ONE bounded collect whose size picks the plan: no keys (the
+    * common case) → None, and the mask is a constant 0 with no join; up
+    * to 1M keys → a local relation, broadcast into the mask's semi-join;
+    * more (the rows/maxBucket worst case can exceed driver/broadcast limits
+    * at 10^12 banded rows) → the key frame itself, for a shuffle join.
+    * Nothing is persisted: every reader of the keys reads the local
+    * relation, so the count aggregation runs once and no cached frame
+    * outlives the call.
     */
   private def overCapKeys(overKeys: DataFrame): Option[DataFrame] = {
     val got = overKeys.limit(MaxLocalKeys + 1).collect()
@@ -393,14 +364,10 @@ object Dedup {
     * a_id < b_id, one row per pair (`idCol` is a key); NULL hashes and NULL
     * ids are never paired.
     *
-    * One exchange: the banded rows `(band, seg, id, hash, cap)` are hash-
-    * partitioned on `(band, seg)` into the session's default parallelism
-    * (an explicit width, so AQE cannot coalesce the pair stage into one
-    * task) and sorted within each partition on the packed `(band, seg)`,
-    * which makes every bucket one contiguous run. The [[BucketPairs]]
-    * kernel reads one run at a time, holding at most `maxBucket` members
-    * (it counts an over-cap bucket to its end and emits nothing from it),
-    * and compares the members directly: no join over the banded rows.
+    * One exchange into the [[BucketPairs]] kernel: the banded rows
+    * `(bucket, id, band, hash, cap)`, keyed by the packed `(band, seg)`,
+    * form one run per bucket, and the kernel compares each run's members
+    * directly: no join over the banded rows.
     *
     * A pair within maxHamming collides on every band where its hashes'
     * XOR has a zero segment. It is kept only on its LOWEST uncapped
@@ -433,8 +400,8 @@ object Dedup {
         .as(Seq("band", "seg")),
       col("a_id"), col("a_ph"), cap.as("cap"))
     // over-cap segments via partial-agg counts (≤ rows/maxBucket keys by
-    // construction) — same shape as [[minhashCandidates]]'s cap. NULL ids
-    // count toward their bucket, as in q28's window count
+    // construction). NULL ids count toward their bucket, as in q28's window
+    // count
     val uncapped = banded(base, lit(0L))
     val overSegs = overCapKeys(uncapped.groupBy(col("band"), col("seg"))
       .agg(count(lit(1)).as("__bc"))
@@ -447,20 +414,43 @@ object Dedup {
         .agg(bit_or(call_function("shiftleft", lit(1L), col("band"))).as("cap"))
       banded(base.join(caps, Seq("a_ph"), "left"), coalesce(col("cap"), lit(0L)))
     }
-    val id = base.schema("a_id")
-    val out = StructType(Seq(id, id.copy(name = "b_id"),
-      StructField("dist", IntegerType, nullable = false)))
-    // the sort key is one long, (band, seg) packed, so the sorter radix-
-    // sorts it instead of comparing two-key rows; with one 64-bit band the
-    // band is 0 and the shift by 64 (a shift by 0) leaves seg as it is
+    // the key is one long, (band, seg) packed, so the sorter radix-sorts
+    // it instead of comparing two-key rows; with one 64-bit band the band
+    // is 0 and the shift by 64 (a shift by 0) leaves seg as it is
     val bucket = call_function("shiftleft", col("band").cast("long"), lit(width)).bitwiseOR(col("seg"))
-    rows
-      .repartition(df.sparkSession.sparkContext.defaultParallelism, col("band"), col("seg"))
-      .sortWithinPartitions(bucket)
-      .mapPartitions(BucketPairs.pairs(_, maxHamming, width, maxBucket))(Encoders.row(out))
-      .select(least(col("a_id"), col("b_id")).as("a_id"),
-        greatest(col("a_id"), col("b_id")).as("b_id"), col("dist"))
-      .where(col("a_id") < col("b_id"))
+    BucketPairs.frame(rows.select(bucket.as("bucket"), col("a_id"), col("band"), col("a_ph"), col("cap")),
+      Seq(StructField("dist", IntegerType, nullable = false)))(
+      () => new PhashPairs(maxHamming, width, maxBucket))
+  }
+
+  /** [[BucketPairs]] for [[phashNearDup]], on primitive arrays: within
+    * `maxHamming`, on its lowest uncapped colliding band (first doc's cap). */
+  private final class PhashPairs(maxHamming: Int, width: Int, maxBucket: Long)
+      extends BucketPairs(maxBucket) {
+    private val mask = -1L >>> (64 - width)
+    private var band = 0
+    private var phs = new Array[Long](64)
+    private var caps = new Array[Long](64)
+    protected def hold(m: Int, row: Row): Unit = {
+      if (m == phs.length) {
+        phs = java.util.Arrays.copyOf(phs, 2 * m)
+        caps = java.util.Arrays.copyOf(caps, 2 * m)
+      }
+      band = row.getInt(2)
+      phs(m) = row.getLong(3)
+      caps(m) = row.getLong(4)
+    }
+    protected def pair(i: Int, j: Int): Row = {
+      val xor = phs(i) ^ phs(j)
+      val dist = java.lang.Long.bitCount(xor)
+      if (dist <= maxHamming && lowest(xor, caps(i))) Row(ids(i), ids(j), dist) else null
+    }
+    // true when no band below `band` is an uncapped colliding one
+    private def lowest(xor: Long, cap: Long): Boolean = {
+      var b = 0
+      while (b < band && (((xor >>> (b * width)) & mask) != 0 || (cap & (1L << b)) != 0)) b += 1
+      b == band
+    }
   }
 
   /** Connected components over an undirected candidate-pair edge list
@@ -551,7 +541,7 @@ object Dedup {
     // both orientations in ONE pass over the partition-contracted edge list
     // (a union of two selects would re-derive the typically-expensive
     // unpersisted upstream candidate-pair pipeline once per branch — q31's
-    // edges are the whole q28 banded join). NOT deduped: phase 1's
+    // edges are the whole q28 pair pipeline). NOT deduped: phase 1's
     // min-aggregation is idempotent under duplicate edges, and phase 2
     // starts with its own distinct at contraction — a dedup pass here would
     // cost one extra full-edge-list shuffle for nothing. Self-loop input
@@ -774,35 +764,48 @@ object Dedup {
   // ---------- n-gram Jaccard ----------
 
   /** Pairwise Jaccard similarity of distinct-token sets within a blocking
-    * key (never all-pairs: the block join is the only shuffle; blocks must
-    * be chosen so |block|² stays bounded — at 10^12 rows that means LSH
-    * ([[minhashCandidates]]) supersedes this exact variant).
-    * Returns (a_id, b_id, n_inter, n_union).
+    * key, for every pair that shares at least one token (never all-pairs:
+    * blocks must be chosen so |block|² stays bounded — at 10^12 rows that
+    * means LSH ([[minhashCandidates]]) supersedes this exact variant).
+    * Returns (a_id, b_id, n_inter, n_union); NULL blocks, NULL text and
+    * NULL ids never pair.
     *
-    * `overlapOnly = true` keeps only pairs sharing ≥1 token, filtered with
-    * `arrays_overlap` BEFORE the set sizes are computed: overlap
-    * short-circuits on the first common element, where a post-hoc
-    * `n_inter >= 1` filter pushes the full intersection build below the
-    * projection and evaluates it twice per surviving pair. Per-pair union
-    * size is arithmetic (|A| + |B| − |A∩B|, exact — the token arrays are
-    * distinct by construction) instead of a second hash-set build.
+    * One exchange into the [[BucketPairs]] kernel, one run per block. The
+    * distinct tokens travel as UTF-8 bytes, sorted once per doc; a merge in
+    * the same order counts `n_inter` (byte equality, as `array_intersect`),
+    * and `n_union` = |A| + |B| − |A∩B| (the arrays are distinct).
     */
-  def jaccardPairs(df: DataFrame, textCol: String, idCol: String, blockCol: Column,
-      overlapOnly: Boolean = false): DataFrame = {
-    val toks = array_distinct(TF.tokens(TF.normalized(col(textCol))))
-    val base = df.select(blockCol.as("block"), col(idCol).as("id"), toks.as("toks"))
-    val a = base.select(col("block"), col("id").as("a_id"), col("toks").as("a_toks"))
-    val b = base.select(col("block"), col("id").as("b_id"), col("toks").as("b_toks"))
-    val joined = a.join(b, Seq("block"))
-      .where(col("a_id") < col("b_id"))
-    val paired = if (overlapOnly)
-      joined.where(arrays_overlap(col("a_toks"), col("b_toks")))
-    else joined
-    val nInter = size(array_intersect(col("a_toks"), col("b_toks")))
-    paired.select(
-      col("a_id"), col("b_id"),
-      nInter.as("n_inter"),
-      (size(col("a_toks")) + size(col("b_toks")) - nInter).as("n_union"))
+  def jaccardPairs(df: DataFrame, textCol: String, idCol: String, blockCol: Column): DataFrame = {
+    val toks = array_distinct(TF.tokens(TF.normalized(col(textCol)))).cast(ArrayType(BinaryType))
+    val rows = df.where(col(textCol).isNotNull && blockCol.isNotNull)
+      .select(blockCol.as("block"), col(idCol).as("id"), toks.as("toks"))
+    BucketPairs.frame(rows, Seq(StructField("n_inter", IntegerType, nullable = false),
+      StructField("n_union", IntegerType, nullable = false)))(() => new JaccardPairs)
+  }
+
+  /** [[BucketPairs]] for [[jaccardPairs]]: one common token. */
+  private final class JaccardPairs extends BucketPairs(Long.MaxValue) {
+    private val order: java.util.Comparator[Array[Byte]] = java.util.Arrays.compareUnsigned(_, _)
+    private val toks = scala.collection.mutable.ArrayBuffer[Array[Array[Byte]]]()
+    protected def hold(m: Int, row: Row): Unit = {
+      val t = row.getSeq[Array[Byte]](2).toArray
+      java.util.Arrays.sort(t, order)
+      if (m == toks.length) toks += t else toks(m) = t
+    }
+    protected def pair(i: Int, j: Int): Row = {
+      val x = toks(i)
+      val y = toks(j)
+      var n = 0
+      var p = 0
+      var q = 0
+      while (p < x.length && q < y.length) {
+        val c = order.compare(x(p), y(q))
+        if (c <= 0) p += 1
+        if (c >= 0) q += 1
+        if (c == 0) n += 1
+      }
+      if (n > 0) Row(ids(i), ids(j), n, x.length + y.length - n) else null
+    }
   }
 
   // ---------- Bloom-filter assisted (reference UniqueFieldsUtil pattern) ----------

@@ -1,30 +1,17 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, StructField}
 
-/** Approximate-nearest-neighbor search over an embedding column
-  * (`array<float>`): brute-force cosine top-k as the exact baseline, and a
-  * random-hyperplane-LSH bucketed variant as the scale path (bounded
-  * candidate sets instead of the full cross product).
-  *
-  * All math is done in double via `zip_with`/`aggregate` higher-order
-  * functions — codegen'd Catalyst expressions, no UDFs (SURVEY §7.3
-  * philosophy). Deterministic: hyperplanes derive from a seed via the same
+/** Similarity over an embedding column (`array<float>`): brute-force
+  * cosine top-k as the exact baseline, sign-LSH and IVF top-k as the scale
+  * paths, and blocked near-dup pairs through the [[graft.dedup.BucketPairs]]
+  * kernel. Deterministic: hyperplanes derive from a seed via the same
   * splitmix64 stream the corpus generator uses.
   */
 object Similarity {
-
-  /** dot(a, b) in double — the native codegen'd Catalyst expression
-    * ([[graft.plans.VectorDot]], registered by GraftExtensions). Same
-    * left-to-right double accumulation as the HOF formulation it replaced,
-    * so results are bit-identical; ~10× faster (HOF lambdas are interpreted
-    * per element).
-    */
-  def dot(a: Column, b: Column): Column = call_function("vector_dot", a, b)
-
-  def norm2(a: Column): Column =
-    aggregate(a, lit(0.0), (acc, x) => acc + x.cast("double") * x.cast("double"))
 
   /** Fused single-pass native cosine ([[graft.plans.VectorCosine]]). */
   def cosine(a: Column, b: Column): Column = call_function("vector_cosine", a, b)
@@ -300,51 +287,45 @@ object Similarity {
     f(vec)
   }
 
-  /** Embedding near-duplicate pairs WITHOUT a caller-provided blocking key:
-    * sign-LSH buckets both sides and pairs only within a bucket (+ multi-
-    * probe XOR-adjacent buckets for recall) — the scale path when no natural
-    * block exists. Recall < 1 by construction (vectors with cosine ≥
-    * threshold usually share a bucket, not always); the shuffle is a hash
-    * join on bucket id, never the all-pairs cross product that
-    * [[nearDupPairs]]'s |block|² would degenerate to with a bad key.
+  /** Embedding-cosine near-duplicate pairs within a blocking key: `(id,
+    * vec, block)` → `(a_id, b_id, sim)` for `vector_cosine >= threshold`.
+    * One exchange into the [[graft.dedup.BucketPairs]] kernel, one run per
+    * block, each vector decoded once with its squared norm; the pair test is
+    * `vector_cosine`'s arithmetic: a NULL vector or a zero norm never
+    * pairs, a length mismatch throws, and `>=` is SQL's (NaN is largest).
     */
-  def annNearDupPairs(
-      df: DataFrame, // (id, vec)
-      dims: Int,
-      threshold: Double,
-      planes: Int = 8,
-      seed: Long = 42L,
-      multiProbe: Int = 1): DataFrame = {
-    val b = df.withColumn("bucket0", lshBucket(col("vec"), dims, planes, seed))
-    val probes = (0 until math.max(1, multiProbe)).map {
-      case 0 => col("bucket0")
-      case i => col("bucket0").bitwiseXOR(lit(1 << (i - 1)))
-    }
-    val left = b.withColumn("bucket", explode(array(probes: _*)))
-      .select(col("bucket"), col("id").as("a_id"), col("vec").as("a_vec"))
-    val right = b.select(col("bucket0").as("bucket"), col("id").as("b_id"), col("vec").as("b_vec"))
-    // no dedup needed: probe buckets per row are pairwise distinct, the right
-    // side carries only its primary bucket, and a_id < b_id keeps one join
-    // direction — each unordered pair matches at most once
-    left.join(right, Seq("bucket"))
-      .where(col("a_id") < col("b_id"))
-      .withColumn("sim", cosine(col("a_vec"), col("b_vec")))
-      .where(col("sim") >= threshold)
-      .select(col("a_id"), col("b_id"), col("sim"))
+  def nearDupPairs(df: DataFrame, threshold: Double): DataFrame = {
+    require(df.schema("vec").dataType match { case ArrayType(FloatType, _) => true; case _ => false },
+      s"nearDupPairs needs vec array<float>, got ${df.schema("vec").dataType.simpleString}")
+    val rows = df.select(col("block"), col("id"), col("vec"))
+      .where(col("block").isNotNull && col("vec").isNotNull)
+    graft.dedup.BucketPairs.frame(rows, Seq(StructField("sim", DoubleType, nullable = false)))(
+      () => new CosinePairs(threshold))
   }
 
-  /** Embedding-cosine near-duplicate pairs within a blocking key (training-
-    * data dedup by semantic similarity). Exact within block.
-    */
-  def nearDupPairs(
-      df: DataFrame, // (id, vec, block)
-      threshold: Double): DataFrame = {
-    val a = df.select(col("block"), col("id").as("a_id"), col("vec").as("a_vec"))
-    val b = df.select(col("block"), col("id").as("b_id"), col("vec").as("b_vec"))
-    a.join(b, Seq("block"))
-      .where(col("a_id") < col("b_id"))
-      .withColumn("sim", cosine(col("a_vec"), col("b_vec")))
-      .where(col("sim") >= threshold)
-      .select(col("a_id"), col("b_id"), col("sim"))
+  /** [[graft.dedup.BucketPairs]] for [[nearDupPairs]]. */
+  private final class CosinePairs(threshold: Double) extends graft.dedup.BucketPairs(Long.MaxValue) {
+    private val vecs = scala.collection.mutable.ArrayBuffer[Array[Double]]()
+    private val norms = scala.collection.mutable.ArrayBuffer[Double]()
+    // Σ x(j)·y(j), left to right in double, as vector_cosine accumulates
+    private def dot(x: Array[Double], y: Array[Double]): Double = {
+      var acc = 0.0
+      var j = 0
+      while (j < x.length) { acc += x(j) * y(j); j += 1 }
+      acc
+    }
+    protected def hold(m: Int, row: Row): Unit = {
+      // a NULL element reads as 0, as vector_cosine's getFloat reads it
+      val v = row.getSeq[java.lang.Float](2).map(f => if (f == null) 0.0 else f.toDouble).toArray
+      if (m == vecs.length) { vecs += v; norms += dot(v, v) } else { vecs(m) = v; norms(m) = dot(v, v) }
+    }
+    protected def pair(i: Int, j: Int): Row = {
+      val x = vecs(i)
+      val y = vecs(j)
+      if (x.length != y.length) throw new IllegalArgumentException("vector_cosine: length mismatch")
+      if (norms(i) == 0.0 || norms(j) == 0.0) return null
+      val sim = dot(x, y) / math.sqrt(norms(i) * norms(j))
+      if (SQLOrderingUtil.compareDoubles(sim, threshold) >= 0) Row(ids(i), ids(j), sim) else null
+    }
   }
 }

@@ -77,6 +77,65 @@ class DedupSpec extends SparkSuite {
     }
   }
 
+  test("minhashCandidates: edge rows and the bucket cap match a brute force") {
+    // near-dup families over a small vocabulary, plus edge rows: NULL and
+    // empty text, a one-token text (no shingle, no signature), NULL ids, a
+    // duplicated id, and identical-text buckets (every band collides) of
+    // exactly maxBucket docs (kept), of maxBucket docs plus a NULL id and
+    // of maxBucket + 1 docs (both over the cap on every band); long and
+    // string ids, 1 and 8 input partitions
+    val maxBucket = 5
+    val words = Vector("alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta", "iota")
+    val corpus: Seq[(Option[Long], Option[String])] = (0 until 120).map { i =>
+      val base = (0 until 10).map(w => words((i / 6 * 7 + w * w) % words.length))
+      (Some(i.toLong), Some(base.updated(i % 10, words(i % 4)).mkString(" ")))
+    }
+    def same(from: Long, n: Int, text: String) = (0 until n).map(k => (Some(from + k), Some(text)))
+    val edge = corpus ++ Seq((Some(500L), None), (Some(501L), Some("")), (Some(502L), Some("lonely")),
+      (None, corpus(3)._2), (None, None), (Some(5L), corpus(40)._2)) ++
+      same(1000L, maxBucket, "one two three four five six") ++
+      same(1100L, maxBucket, "red green blue cyan magenta") ++ Seq((None, Some("red green blue cyan magenta"))) ++
+      same(1200L, maxBucket + 1, "north south east west up down")
+    val expected = minhashBrute(edge, maxBucket)
+    assert(expected.count(p => p._1 >= 1000L) == maxBucket * (maxBucket - 1) / 2)
+    assert(expected.exists(p => p._1 == 5L || p._2 == 5L))
+    assert(expected.count(p => p._1 < 1000L) > 20)
+    val asText = edge.map { case (i, t) => (i.map(_.toString), t) }
+    val expectedText = minhashBrute(asText, maxBucket)
+    assert(expectedText.exists { case (x, y, _) => x.toLong > y.toLong })
+    def run(df: org.apache.spark.sql.DataFrame) = {
+      val (out, jobs) = withJobCount("minhash-call")(Dedup.minhashCandidates(df, "text", "doc_id",
+        k = 16, shingleN = 2, bands = 4, minEqual = 8, maxBucket = maxBucket))
+      assert(jobs == 0) // lazy: no job before the caller's action
+      out
+    }
+    for (parts <- Seq(1, 8)) {
+      val longs = run(edge.toDF("doc_id", "text").repartition(parts)).as[(Long, Long, Int)].collect()
+      assert(longs.toSet == expected && longs.length == expected.size, s"long ids, $parts partitions")
+      val texts = run(asText.toDF("doc_id", "text").repartition(parts)).as[(String, String, Int)].collect()
+      assert(texts.toSet == expectedText && texts.length == expectedText.size, s"string ids, $parts partitions")
+    }
+  }
+
+  /** minhashCandidates' answer by brute force over rows (q11's semantics):
+    * a bucket is a band and that band's signature values; a pair of rows
+    * with ids a < b shares a bucket that holds at most maxBucket signed
+    * rows (NULL ids included) and agrees on at least 8 of the 16
+    * components; one row per id pair, with its smallest n_equal. */
+  private def minhashBrute[T](rows: Seq[(Option[T], Option[String])], maxBucket: Int)(
+      implicit ord: Ordering[T]): Set[(T, T, Int)] = {
+    val signed = rows.flatMap { case (id, text) =>
+      Option(Dedup.minhashScala(text.orNull, 16, 2)).map(s => (id, s.toSeq)) }
+    def key(s: Seq[Long], b: Int) = (b, s.slice(b * 4, b * 4 + 4))
+    val size = signed.flatMap { case (_, s) => (0 until 4).map(key(s, _)) }
+      .groupBy(identity).map { case (k, v) => k -> v.length }
+    (for {
+      (Some(i), x) <- signed; (Some(j), y) <- signed if ord.lt(i, j)
+      if (0 until 4).exists(b => key(x, b) == key(y, b) && size(key(x, b)) <= maxBucket)
+      n = x.zip(y).count { case (p, q) => p == q } if n >= 8
+    } yield (i, j, n)).groupBy(p => (p._1, p._2)).map { case ((i, j), v) => (i, j, v.map(_._3).min) }.toSet
+  }
+
   test("simhash64 matches the Scala reference implementation (xxhash parity)") {
     val got = docs.select(col("doc_id"), Dedup.simhash64(col("text")).as("sh"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -215,26 +274,53 @@ class DedupSpec extends SparkSuite {
   }
 
   test("phashNearDup: one exchange, no join, and a pair stage as wide as the session") {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    import org.apache.spark.sql.execution.joins.BaseJoinExec
     val parallelism = spark.sparkContext.defaultParallelism
-    assume(parallelism > 1)
     // nothing is over the default cap, so no key join is planned
     val pairs = Dedup.phashNearDup(phashCorpus, "id", "ph", maxHamming = 3)
     val group = "phash-plan-shape"
-    val (n, _) = withJobCount(group)(pairs.collect().length)
+    val (n, _) = withJobCount(group)(assertPairShape("phash", pairs))
     assert(n > 0)
-    val helper = new AdaptiveSparkPlanHelper {}
-    val plan = pairs.queryExecution.executedPlan
-    assert(helper.collect(plan) { case j: BaseJoinExec => j }.isEmpty, plan.toString)
-    assert(helper.collect(plan) { case e: ShuffleExchangeLike => e }.length == 1, plan.toString)
     // the pair stage is the last job's result stage; AQE must not have
     // coalesced it to one task
     val tracker = spark.sparkContext.statusTracker
     val lastJob = tracker.getJobIdsForGroup(group).max
     val pairStage = tracker.getJobInfo(lastJob).get.stageIds.max
     assert(tracker.getStageInfo(pairStage).get.numTasks == parallelism)
+  }
+
+  test("minhashCandidates, jaccardPairs, nearDupPairs: one exchange into the kernel, no join") {
+    val parallelism = spark.sparkContext.defaultParallelism
+    // a range as wide as the session is scan-shaped, so q11 adds no spread
+    val docs = spark.range(0, 400, 1, parallelism).select(col("id").as("doc_id"),
+      concat_ws(" ", (0 until 8).map(w => (col("id") % 13 + w * w).cast("string")): _*).as("text"))
+    assertPairShape("minhash", Dedup.minhashCandidates(docs, "text", "doc_id", minEqual = 4))
+    assertPairShape("jaccard", Dedup.jaccardPairs(docs, "text", "doc_id", col("doc_id") % 9))
+    val vecs = docs.select(col("doc_id").as("id"), (col("doc_id") % 5).as("block"),
+      array((0 until 4).map(j => ((col("doc_id") + j) % 7).cast("float")): _*).as("vec"))
+    assertPairShape("cosine", graft.similarity.Similarity.nearDupPairs(vecs, threshold = 0.9))
+  }
+
+  /** Collects `pairs` and pins the one pair shape: no join anywhere, one
+    * shuffle exchange into the [[BucketPairs]] kernel, and a kernel stage
+    * as wide as the session (AQE did not coalesce it). Returns the row
+    * count, which must be positive. */
+  private def assertPairShape(what: String, pairs: org.apache.spark.sql.DataFrame): Int = {
+    import org.apache.spark.sql.execution.MapPartitionsExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val parallelism = spark.sparkContext.defaultParallelism
+    assume(parallelism > 1)
+    val n = pairs.collect().length
+    assert(n > 0, what)
+    val helper = new AdaptiveSparkPlanHelper {}
+    val plan = pairs.queryExecution.executedPlan
+    assert(helper.collect(plan) { case j: BaseJoinExec => j }.isEmpty, s"$what: $plan")
+    val kernel = helper.collect(plan) { case m: MapPartitionsExec => m }
+    assert(kernel.length == 1, s"$what: $plan")
+    assert(helper.collect(kernel.head) { case e: ShuffleExchangeLike => e }.length == 1, s"$what: $plan")
+    assert(kernel.head.outputPartitioning.numPartitions == parallelism, s"$what: $plan")
+    n
   }
 
   private def phashCorpus = spark.range(300).select(col("id"),
@@ -517,21 +603,45 @@ class DedupSpec extends SparkSuite {
     assert(viaBloom.subsetOf(viaJoin) && viaBloom.size >= 95)
   }
 
-  test("jaccardPairs overlapOnly: identical pairs and counts to post-filtering") {
-    // overlapOnly replaces a post-hoc n_inter >= 1 filter (which pushes the
-    // full intersection build below the projection) with a short-circuit
-    // arrays_overlap — the outputs must be identical
-    val docs = Seq(
-      (1L, "red apple pie"), (2L, "red apple tart"), (3L, "blue sky high"),
-      (4L, "green grass field"), (5L, "green grass lawn"), (6L, ""), (7L, "red apple pie")
-    ).toDF("doc_id", "text")
-    def block = floor(col("doc_id") / 4.0).cast("int")
-    val full = Dedup.jaccardPairs(docs, "text", "doc_id", block)
-      .where(col("n_inter") >= 1)
-      .as[(Long, Long, Int, Int)].collect().toSet
-    val fast = Dedup.jaccardPairs(docs, "text", "doc_id", block, overlapOnly = true)
-      .as[(Long, Long, Int, Int)].collect().toSet
-    assert(fast == full && fast.nonEmpty)
+  test("jaccardPairs: edge rows match a brute force of the pairs sharing a token") {
+    // blocks of 7 over a small vocabulary with mixed case and non-ASCII
+    // tokens (UTF-8 byte order differs from UTF-16 order past U+FFFF), one
+    // block of 80 docs, and edge rows: NULL, empty and blank text, NULL
+    // ids, NULL blocks, a duplicated id; long and string ids, 1 and 8
+    // input partitions
+    val words = Vector("red", "Apple", "pie", "tart", "blue", "sky", "\u00e9t\u00e9",
+      "\ud83d\ude00", "\uff21\uff22", "\u65e5\u672c", "RED", "x")
+    val rows: Seq[(Option[Long], Option[String], Option[Int])] = (0 until 200).map { i =>
+      val text = (0 until 1 + i % 4).map(w => words((i * 5 + w * 7) % words.length)).mkString(if (i % 3 == 0) "  " else " ")
+      (Some(i.toLong), Some(text), Some(if (i >= 120) 99 else i / 7))
+    } ++ Seq((Some(300L), None, Some(1)), (Some(301L), Some(""), Some(1)), (Some(302L), Some("   "), Some(1)),
+      (None, Some("red apple"), Some(1)), (Some(303L), Some("red apple"), None), (Some(3L), Some("pie sky"), Some(1)))
+    val expected = jaccardBrute(rows)
+    assert(expected.exists(p => p._1 >= 120L) && expected.exists(p => p._1 == 3L || p._2 == 3L))
+    val asText = rows.map { case (i, t, b) => (i.map(_.toString), t, b) }
+    val expectedText = jaccardBrute(asText)
+    assert(expectedText.exists { case (x, y, _, _) => x.toLong > y.toLong })
+    for (parts <- Seq(1, 8)) {
+      val longs = Dedup.jaccardPairs(rows.toDF("doc_id", "text", "blk").repartition(parts), "text", "doc_id",
+        col("blk")).as[(Long, Long, Int, Int)].collect()
+      assert(longs.sorted.toSeq == expected.sorted, s"long ids, $parts partitions")
+      val texts = Dedup.jaccardPairs(asText.toDF("doc_id", "text", "blk").repartition(parts), "text", "doc_id",
+        col("blk")).as[(String, String, Int, Int)].collect()
+      assert(texts.sorted.toSeq == expectedText.sorted, s"string ids, $parts partitions")
+    }
+  }
+
+  /** jaccardPairs' answer by brute force over rows: every pair of rows
+    * with ids a < b in the same non-NULL block whose distinct lower-cased
+    * whitespace tokens meet, as (a, b, |A ∩ B|, |A ∪ B|). */
+  private def jaccardBrute[T](rows: Seq[(Option[T], Option[String], Option[Int])])(
+      implicit ord: Ordering[T]): Seq[(T, T, Int, Int)] = {
+    def toks(s: String) = s.toLowerCase.split("\\s+").filter(_.nonEmpty).toSet
+    for {
+      (Some(i), Some(x), Some(bx)) <- rows; (Some(j), Some(y), Some(by)) <- rows
+      if ord.lt(i, j) && bx == by
+      n = (toks(x) & toks(y)).size if n > 0
+    } yield (i, j, n, (toks(x) | toks(y)).size)
   }
 
   test("connectedComponents: star phase reachable within a small maxIter (budget reservation)") {

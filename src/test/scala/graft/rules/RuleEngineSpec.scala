@@ -182,10 +182,19 @@ class RuleEngineSpec extends SparkSuite {
       """not json at all""",
       """{"a": "not an int", "b": "x"}""",
     ).toDF("j")
-    assert(errors2(d, Rules.matchJsonSchema("j", "a INT, b STRING")) == 2)
     val typed = Seq((1, "s")).toDF("i", "s")
-    assert(errors2(typed, Rules.hasTypes("i", Seq("int", "bigint"))) == 0)
-    assert(errors2(typed, Rules.hasTypes("s", Seq("int", "bigint"))) == 1)
+    // CODEGEN_ONLY: a filter whose generated code fails to compile throws
+    // instead of falling back to interpreted code
+    val mode = "spark.sql.codegen.factoryMode"
+    for (m <- Seq("FALLBACK", "CODEGEN_ONLY")) {
+      spark.conf.set(mode, m)
+      try {
+        assert(errors2(d, Rules.matchJsonSchema("j", "a INT, b STRING")) == 2, m)
+        assert(errors2(typed, Rules.hasTypes("i", Seq("int", "bigint"))) == 0, m)
+        assert(errors2(typed, Rules.hasTypes("s", Seq("int", "bigint"))) == 1, m)
+        assert(errors2(typed, Rules.hasType("i", "int")) == 0, m)
+      } finally spark.conf.unset(mode)
+    }
   }
   private def errors2(d: org.apache.spark.sql.DataFrame, r: Rule): Long =
     d.where(!coalesce(r.predicate, lit(false))).count()

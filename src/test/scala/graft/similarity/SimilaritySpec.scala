@@ -80,22 +80,43 @@ class SimilaritySpec extends SparkSuite {
       .collect().foreach(r => assert(r.getAs[Seq[Int]]("cells").head == r.getAs[Int]("cell")))
   }
 
-  test("annNearDupPairs: blockless LSH near-dup has high recall vs exact pairs") {
-    val vecs = vectors.select(col("id"), col("vec"))
-    val exact = Similarity.nearDupPairs(
-      vectors.select(col("id"), col("vec"), lit(0).as("block")), threshold = 0.9)
-      .select("a_id", "b_id").as[(Long, Long)].collect().toSet
-    assert(exact.nonEmpty)
-    val ann = Similarity.annNearDupPairs(vecs, dims, threshold = 0.9, planes = 2, multiProbe = 2)
-      .select("a_id", "b_id").as[(Long, Long)].collect().toSet
-    assert(ann.subsetOf(exact)) // never a false pair: exact cosine re-check
-    val recall = (exact & ann).size.toDouble / exact.size
-    info(s"blockless ANN near-dup recall = $recall (${exact.size} exact pairs)")
-    assert(recall >= 0.75)
-    // more planes → smaller buckets → cheaper join but lower recall
-    val coarse = Similarity.annNearDupPairs(vecs, dims, threshold = 0.9, planes = 6)
-      .select("a_id", "b_id").as[(Long, Long)].collect().toSet
-    assert(coarse.size <= ann.size)
+  test("nearDupPairs: edge rows match the vector_cosine self-join, sims bit for bit") {
+    // clustered vectors in blocks of 6, one block of 60, and edge rows:
+    // NULL and zero vectors, a NULL element (reads as 0), a NaN element
+    // (its cosine is NaN, which SQL's >= keeps), NULL ids, a NULL block and
+    // a duplicated id; long and string ids, 1 and 8 input partitions
+    def vec(seed: Int, pole: Int): Seq[Option[Float]] = randVec(seed, 8, pole).toSeq.map(Some(_))
+    val rows: Seq[(Option[Long], Option[Seq[Option[Float]]], Option[Int])] =
+      (0 until 150).map(i => (Some(i.toLong), Some(vec(i, i % 2)), Some(if (i >= 90) 99 else i / 6))) ++
+        Seq((Some(200L), None, Some(0)), (Some(201L), Some(Seq.fill(8)(Some(0f))), Some(0)),
+          (Some(202L), Some(vec(1, 1).updated(3, None)), Some(0)),
+          (Some(203L), Some(vec(3, 1).updated(2, Some(Float.NaN))), Some(0)),
+          (None, Some(vec(5, 1)), Some(0)), (Some(204L), Some(vec(7, 1)), None),
+          (Some(3L), Some(vec(9, 1)), Some(0)))
+    def bits(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("a_id").cast("string"), col("b_id").cast("string"), col("sim")).collect()
+        .map(r => (r.getString(0), r.getString(1), java.lang.Double.doubleToLongBits(r.getDouble(2))))
+        .sorted.toSeq
+    def selfJoin(df: org.apache.spark.sql.DataFrame) = {
+      val a = df.select(col("block"), col("id").as("a_id"), col("vec").as("a_vec"))
+      val b = df.select(col("block"), col("id").as("b_id"), col("vec").as("b_vec"))
+      a.join(b, Seq("block")).where(col("a_id") < col("b_id"))
+        .withColumn("sim", Similarity.cosine(col("a_vec"), col("b_vec")))
+        .where(col("sim") >= 0.25)
+    }
+    val asText = rows.map { case (i, x, b) => (i.map(_.toString), x, b) }
+    for (parts <- Seq(1, 8);
+         in <- Seq(rows.toDF("id", "vec", "block"), asText.toDF("id", "vec", "block")).map(_.repartition(parts))) {
+      val got = bits(Similarity.nearDupPairs(in, threshold = 0.25))
+      assert(got == bits(selfJoin(in)), s"${in.schema("id").dataType}, $parts partitions")
+      assert(Seq("203", "3").forall(id => got.exists(p => p._1 == id || p._2 == id)))
+      assert(got.exists(_._1.toLong >= 90) && got.length < 2000)
+    }
+    // a length mismatch within a block still throws
+    val mixed = Seq((1L, Array(1f, 0f), 0), (2L, Array(1f, 0f, 0f), 0)).toDF("id", "vec", "block")
+    val e = intercept[Exception](Similarity.nearDupPairs(mixed, threshold = 0.25).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("length mismatch")), e.toString)
   }
 
   test("lshBucket: identical vectors get identical buckets; opposite vectors differ") {

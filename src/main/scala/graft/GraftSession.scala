@@ -14,17 +14,25 @@ import org.apache.spark.sql.SparkSession
   *    setting is both the fast AND the correct-parity choice.
   *  - shuffle.partitions sized to cores (local mode), AQE + skew join on —
   *    at cluster scale AQE coalesces/reshapes these at runtime anyway.
+  *  - `spark.hadoop.fs.file.impl` = [[graft.util.NioLocalFileSystem]]: stock
+  *    Hadoop without its native library forks a `chmod` for every local
+  *    file, `.crc` file and directory a write creates; this one sets the
+  *    same modes through java.nio. Like `master`, it is set only when the
+  *    launcher did not set the key.
   */
 object GraftSession {
 
   /** `master` is a FALLBACK only: under spark-submit the launcher injects
     * `spark.master` as a system property, and builder options would override
     * it (builder > launcher conf) — round-1 bug: the documented cluster path
-    * silently ran local. We set master only when the launcher didn't.
+    * silently ran local. We set master only when the launcher didn't; the
+    * same rule holds for `spark.hadoop.fs.file.impl`.
     */
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder = {
     val b = SparkSession.builder()
     if (sys.props.get("spark.master").forall(_.isEmpty)) b.master(master)
+    if (sys.props.get("spark.hadoop.fs.file.impl").forall(_.isEmpty))
+      b.config("spark.hadoop.fs.file.impl", classOf[graft.util.NioLocalFileSystem].getName)
     b
       .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)

@@ -15,12 +15,12 @@ package graft.functions
   * serves as both the engine UDF and the oracle
   * ([[graft.pipeline.Oracle]] calls [[predict]] directly).
   *
-  * Scale notes: weights are ~256 KB → broadcast once per executor (the
-  * pipeline wraps the model in `sparkContext.broadcast`, same pattern as the
-  * reference's broadcast lookup join,
-  * `core/foreignkey/strategy/DistributedSamplingStrategy.scala:60-95`). The
-  * UDF has a narrow String→struct signature so the surrounding plan stays in
-  * WholeStageCodegen (SURVEY §7.3).
+  * Scale notes: the weights (~256 KB) are built lazily, once per JVM, on
+  * first use, and never shipped: a task closure that calls this object holds
+  * a static reference to it, and a serialized Scala 2.13 `object` is only a
+  * `ModuleSerializationProxy` (its class name) anyway, so each executor uses
+  * its own copy. The UDF has a narrow String→struct signature so the
+  * surrounding plan stays in WholeStageCodegen (SURVEY §7.3).
   */
 object LangId extends Serializable {
 

@@ -14,8 +14,8 @@ import scala.collection.mutable
   * distribution scores low; gibberish and symbol soup score high — the
   * pipeline drops rows above a threshold.
   *
-  * The table is ~100 KB and broadcast by the pipeline (same broadcast-model
-  * pattern as [[LangId]]).
+  * The table (~100 KB) is built once per JVM on first use and never shipped
+  * to executors: each builds its own, as for [[LangId]].
   */
 object Perplexity extends Serializable {
 

@@ -79,6 +79,16 @@ object QualityFilter {
     )
   }
 
+  /** Output columns the commit writes without a parquet dictionary. Their
+    * values are near unique within a column chunk, so the writer built a
+    * dictionary for each and then fell back to PLAIN: the footers of a
+    * 200k-row, 16-bucket write showed PLAIN in all 48 chunks of each of these
+    * and a dictionary in every chunk of `fmt`, `lang`, `lang_conf`,
+    * `drop_reason`, `phash` and `scrub_counts`. (`w` and `h` keep theirs in
+    * some chunks and not in others.)
+    */
+  val plainColumns: Seq[String] = Seq("image_id", "bytes", "caption", "scrubbed_caption", "ppl")
+
   /** Full stage: score → annotate(keep, drop_reason) → scrub kept captions,
     * on the typed corpus (see [[runDF]]).
     */
@@ -96,8 +106,6 @@ object QualityFilter {
     * ~80% of CPU in ~14 java.util.regex passes per row.
     */
   def runDF(spark: SparkSession, input: DataFrame, cfg: FilterConfig = FilterConfig()): DataFrame = {
-    val langIdB = spark.sparkContext.broadcast(LangId)
-    val pplB = spark.sparkContext.broadcast(Perplexity)
     val maxRun = cfg.maxCharRun
     // fused per-row scorer: langid + perplexity + single-scan text features.
     // Returns a Tuple8 (see [[scoreFields]] for why not a named case class).
@@ -105,8 +113,8 @@ object QualityFilter {
       if (caption == null) null
       else {
         val f = graft.functions.CaptionFeatures.extract(caption, maxRun)
-        val (lang, conf) = langIdB.value.predict(caption)
-        (lang, conf, pplB.value.score(caption),
+        val (lang, conf) = LangId.predict(caption)
+        (lang, conf, Perplexity.score(caption),
           f.len, f.ntok, f.ndistinct, f.symbols, f.has_run)
       }
     }

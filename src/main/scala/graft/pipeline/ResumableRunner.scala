@@ -15,7 +15,8 @@ import scala.jdk.CollectionConverters._
   * (the reference's determinism trick, `provider/DataGenerator.scala:44-52`).
   * A run takes the buckets the manifest lacks, runs the pipeline over them
   * once, writes data and metrics `partitionBy(bucket)` in one observed write
-  * ([[Metrics.writeWithMetrics]]: one job over the rows, no cache), and only
+  * ([[Metrics.writeWithMetrics]]: one job over the rows, no cache, the
+  * near-unique columns without a parquet dictionary), and only
   * then appends those buckets to the manifest (write-audit-publish, SURVEY
   * §7.4.5). The write overwrites partitions dynamically, so it replaces the
   * directories of the buckets it writes and leaves committed buckets as they
@@ -30,6 +31,10 @@ import scala.jdk.CollectionConverters._
   * `_buckets` before the first data write, and a run with another count is
   * rejected before it writes anything (a partition overwrite never removes
   * the other layout's directories, so mixing counts would duplicate rows).
+  *
+  * On a local filesystem the writes go through [[graft.util.NioLocalFileSystem]]
+  * (registered by [[graft.GraftSession]]), which sets file and directory
+  * modes without forking a `chmod` per file.
   *
   * At 100 TB the bucket predicate would be pushed into the table scan
   * (Iceberg partition pruning on a bucket-partitioned table); the protocol —

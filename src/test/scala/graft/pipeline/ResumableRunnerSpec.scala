@@ -1,8 +1,12 @@
 package graft.pipeline
 
 import graft.SparkSuite
-import graft.corpus.SyntheticImages
-import org.apache.spark.sql.DataFrame
+import graft.corpus.{ImageRow, SyntheticImages}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.column.Encoding
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
@@ -64,7 +68,7 @@ class ResumableRunnerSpec extends SparkSuite {
     assert(processed == buckets)
     info(s"fresh-run jobs: $jobs")
     // one job writes the data and counts the metrics, one writes the metrics
-    assert(jobs <= 2, s"fresh run ran $jobs jobs — not single-scan")
+    assert(jobs == 2, s"fresh run ran $jobs jobs — not single-scan")
     assert(cachedFrames == cached, "the fresh run left a cached frame behind")
     assert(runner.completedBuckets == (0 until buckets).toSet)
     assert(runner.run(corpus, "runF") == 0) // idempotent no-op
@@ -112,6 +116,57 @@ class ResumableRunnerSpec extends SparkSuite {
     assert(output.count() == 5L)
     assert(Metrics.summary(resumed.readMetrics()) == ((5L, output.where(col("keep")).count())))
     assert(resumed.readMetrics().where(col("run_id") =!= "run0").isEmpty)
+  }
+
+  /** Column path → the encodings of each of its chunks, over every parquet
+    * file under `dir`, read from the footers. */
+  private def chunkEncodings(dir: String): Map[String, Seq[Set[Encoding]]] = {
+    val files = Files.walk(Paths.get(dir))
+    val parquet = try files.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
+      finally files.close()
+    parquet.flatMap { f =>
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new HPath(f.toUri), spark.sparkContext.hadoopConfiguration))
+      try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+        .map(c => c.getPath.toDotString -> c.getEncodings.asScala.toSet).toList
+      finally reader.close()
+    }.groupMap(_._1)(_._2)
+  }
+
+  /** Rows sorted by `image_id`, binary values as byte sequences and doubles
+    * as strings (NaN equals NaN). */
+  private def rowValues(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().toSeq.map(_.toSeq.map {
+      case b: Array[Byte] => b.toSeq
+      case d: Double => d.toString
+      case v => v
+    }).sortBy(_(df.schema.fieldIndex("image_id")).toString)
+
+  test("the commit writes QualityFilter.plainColumns without a dictionary, the output unchanged") {
+    // every row twice, side by side in its partition: within a chunk each
+    // value repeats, so a writer that tried a dictionary would keep it
+    val corpus = SyntheticImages.generate(spark, 1500L, seed = 7L, partitions = 6).toDF()
+      .withColumn("copy", explode(array(lit(0), lit(1)))).drop("copy")
+      .as(Encoders.product[ImageRow])
+    val out = Files.createTempDirectory("graft_encodings").toString
+    val runner = new ResumableRunner(spark, out, numBuckets = 4)
+    assert(runner.run(corpus, "runD") == 4)
+
+    val chunks = chunkEncodings(s"$out/data")
+    QualityFilter.plainColumns.foreach { c =>
+      assert(chunks(c).nonEmpty && chunks(c).forall(!_.exists(_.usesDictionary)),
+        s"$c: ${chunks(c).distinct}")
+    }
+    Seq("fmt", "lang", "drop_reason").foreach { c =>
+      assert(chunks(c).nonEmpty && chunks(c).forall(_.exists(_.usesDictionary)),
+        s"$c: ${chunks(c).distinct}")
+    }
+
+    val defaultOut = Files.createTempDirectory("graft_default_encodings").toString
+    QualityFilter.runDF(spark, withBucket(corpus.toDF(), 4), FilterConfig())
+      .write.mode("overwrite").partitionBy("bucket").parquet(defaultOut)
+    val defaults = spark.read.schema(runner.readOutput().schema).parquet(defaultOut)
+    assert(rowValues(runner.readOutput()) == rowValues(defaults))
   }
 
   /** Every file under `root` with its bytes, and every directory. */

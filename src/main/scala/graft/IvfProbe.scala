@@ -17,13 +17,6 @@ import org.apache.spark.sql.functions._
   * Writes IVF_PROBE.json. Usage: runMain graft.IvfProbe [n] [cells] [nprobe]
   */
 object IvfProbe {
-  private def splitmix(s: Long): Long = {
-    var z = s + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
-
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
     val nCells = args.lift(1).map(_.toInt).getOrElse(64)
@@ -35,9 +28,8 @@ object IvfProbe {
     import spark.implicits._
 
     def unit(seed: Long): Array[Float] = {
-      val v = Array.tabulate(dims) { j =>
-        ((splitmix(seed * 1013904223L + j) >>> 11).toDouble / (1L << 53) * 2 - 1)
-      }
+      val v = Array.tabulate(dims)(j =>
+        graft.util.SplitMix64.signedUnit(graft.util.SplitMix64.splitmix64(seed * 1013904223L + j)))
       val nrm = math.sqrt(v.map(x => x * x).sum)
       v.map(x => (x / nrm).toFloat)
     }

@@ -15,8 +15,9 @@ import graft.pipeline.{FilterConfig, ResumableRunner, RunReport}
   * catalog is configured — `spark.read.table` branch), runs the resumable
   * bucketed quality-filter, writes kept+annotated rows, per-partition
   * metrics, and JSON+HTML run reports. Re-running after a crash resumes from
-  * the bucket manifest. `--plan` mode executes a declarative JSON/YAML
-  * [[graft.plan.PlanSpec]] instead (the reference's YAML-plan entry surface).
+  * the bucket manifest. `--plan` mode executes a declarative JSON/YAML plan
+  * in any dialect through [[graft.plan.PlanDocument]] instead (the
+  * reference's YAML-plan entry surface) and prints its summary JSON.
   *
   * `--legacy <plan.yaml> <taskFolder> [validationFolder]` runs the
   * reference's DEPLOYED layout unchanged (its docker/env-var shape:
@@ -31,6 +32,20 @@ object Main {
   private def readFile(p: String): String =
     new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)))
 
+  /** The one session build: `SPARK_GRAFT_MASTER` wins, then a conf-given
+    * master, then `local[SPARK_GRAFT_CPUS]` (8 by default). Static confs
+    * like spark.driver.memory only take effect here, never post-create. */
+  private def session(master: Option[String] = None,
+      conf: Map[String, String] = Map.empty): org.apache.spark.sql.SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val b = GraftSession.builder(
+      sys.env.getOrElse("SPARK_GRAFT_MASTER", master.getOrElse(s"local[$cpus]")), cpus.toInt)
+    conf.foreach { case (k, v) => b.config(k, v) }
+    val spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   private def runLegacy(planPath: String, taskFolder: String,
       validationFolder: Option[String],
       connections: Map[String, Map[String, String]] = Map.empty,
@@ -38,16 +53,8 @@ object Main {
       master: Option[String] = None,
       generate: Boolean = true): Unit = {
     // application.conf runtime.master + runtime.config apply at SESSION
-    // BUILD time (the reference hands them to its SparkProvider the same
-    // way) — env vars still win on master, and static confs like
-    // spark.driver.memory can only take effect here, never post-create
-    val b = GraftSession.builder(
-      sys.env.getOrElse("SPARK_GRAFT_MASTER",
-        master.getOrElse(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")),
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
-    runtimeConf.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // BUILD time (the reference hands them to its SparkProvider the same way)
+    val spark = session(master, runtimeConf)
     val o = graft.plan.LegacyPlan.runFolder(spark, readFile(planPath), taskFolder,
       validationFolder, connections, generate)
     val gen = o.generation
@@ -107,34 +114,9 @@ object Main {
     }
     if (args.headOption.contains("--plan")) {
       require(args.length == 2, "usage: graft.Main --plan <plan.yaml|plan.json>")
-      val text = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(args(1))))
-      val spark = GraftSession.builder(
-        sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]"),
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt).getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      // dialect dispatch (reference UnifiedConfigDetector): unified config
-      // (version + dataSources) → Unified; `tasks:` → multi-task; else a
-      // single-step filter plan
-      val json = if (text.trim.startsWith("{")) text
-                 else graft.plan.PlanRunner.yamlToJson(text)
-      val parsed = org.json4s.jackson.JsonMethods.parse(json)
-      if (graft.plan.Unified.detect(text)) {
-        val o = graft.plan.Unified.run(spark, text)
-        val results = o.validations.flatMap(_.results)
-        println(s"[graft] unified=${o.name} tasks=${o.generation.insertOrder.mkString(",")} " +
-          s"validations=${results.count(_.success)}/${results.size} success=${o.success}")
-      } else if ((parsed \ "tasks") != org.json4s.JNothing) {
-        val o = graft.plan.MultiPlanRunner.run(spark, graft.plan.MultiPlanRunner.parseJson(json))
-        println(s"[graft] plan=${o.plan} order=${o.insertOrder.mkString(",")} " +
-          s"counts=${o.insertOrder.map(t => s"$t:${o.counts(t)}").mkString(",")} success=${o.success}")
-      } else {
-        val outcome = graft.plan.PlanRunner.run(spark, graft.plan.PlanRunner.parseJson(json))
-        println(s"[graft] plan=${outcome.plan} rows_in=${outcome.rowsIn} rows_out=${outcome.rowsOut} " +
-          s"validations=${outcome.validations.count(_.success)}/${outcome.validations.size} ok")
-        outcome.validations.filterNot(_.success).foreach { v =>
-          println(s"[graft] FAILED ${v.rule}: ${v.errors}/${v.total} sample=${v.samples.headOption.getOrElse(Map.empty)}")
-        }
-      }
+      val doc = graft.plan.PlanDocument.parse(readFile(args(1)))
+      val spark = session()
+      println(s"[graft] ${graft.plan.PlanDocument.run(spark, doc).json}")
       spark.stop()
       return
     }
@@ -146,10 +128,7 @@ object Main {
 
     // under spark-submit the session comes from the launcher's conf; the
     // builder only fills in what is not already set
-    val spark = GraftSession.builder(
-      sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]"),
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     import spark.implicits._
 
     val table =

@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.{Scrubber, TextFunctions => TF}
 import graft.rules.{Rule, RuleEngine}
+import graft.util.Chars.isRegexSpace
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -70,14 +71,12 @@ object Queries {
         val cp = text.codePointAt(i)
         nchar += 1
         if (cp != ' '.toInt) trimNonEmpty = true
-        val isWsC = cp == ' '.toInt || cp == '\t'.toInt || cp == '\n'.toInt ||
-          cp == 0x0B || cp == '\f'.toInt || cp == '\r'.toInt
         val allowed = (cp >= 'A'.toInt && cp <= 'Z'.toInt) ||
           (cp >= 'a'.toInt && cp <= 'z'.toInt) ||
           (cp >= '0'.toInt && cp <= '9'.toInt) ||
           cp == ' '.toInt || cp == '\t'.toInt || cp == '\n'.toInt || cp == '\r'.toInt
         if (!allowed) nsym += 1
-        if (isWsC) {
+        if (isRegexSpace(cp)) {
           if (tokStart >= 0) { ntok += 1; distinct.add(text.substring(tokStart, i)); tokStart = -1 }
         } else if (tokStart < 0) tokStart = i
         i += Character.charCount(cp)
@@ -260,17 +259,15 @@ object Queries {
     val statsUdf = udf { (text: String) =>
       if (text == null) null
       else {
-        @inline def isWs(c: Char): Boolean =
-          c == ' ' || c == '\t' || c == '\n' || c == 11.toChar || c == '\f' || c == '\r'
         val n = text.length
         var ntok = 0L
         var sumLen = 0L
         val distinct = new java.util.HashSet[String]()
         var i = 0
         while (i < n) {
-          while (i < n && isWs(text.charAt(i))) i += 1
+          while (i < n && isRegexSpace(text.charAt(i))) i += 1
           val st = i
-          while (i < n && !isWs(text.charAt(i))) i += 1
+          while (i < n && !isRegexSpace(text.charAt(i))) i += 1
           if (i > st) {
             val tok = text.substring(st, i)
             ntok += 1

@@ -47,12 +47,8 @@ object SyntheticImages {
     "zh" -> "的 是 不 了 在 人 有 我 他 照片 猫 狗 桌子 光 山 天空 河 草 花 街道 夜晚 桥 秋天 风景 沙 肖像 墙 公园 孩子".split(" "),
   )
 
-  private def mix(seed: Long, i: Long): Long = {
-    var z = seed * 0x9e3779b97f4a7c15L + i
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
+  private def mix(seed: Long, i: Long): Long =
+    graft.util.SplitMix64.mix(seed * graft.util.SplitMix64.Gamma + i)
 
   /** Small deterministic PRNG stream keyed by (seed, row index, stream id). */
   private final class Rng(seed: Long, i: Long) {

@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.functions.{TextFunctions => TF}
+import graft.util.Chars.isRegexSpace
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -99,11 +100,6 @@ object Dedup {
   private val mdLocal: ThreadLocal[java.security.MessageDigest] =
     ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))
 
-  /** java-regex `\s` (ASCII class, no UNICODE_CHARACTER_CLASS) — the
-    * tokenizer contract shared with [[TF.tokens]]. */
-  @inline private def isWs(c: Char): Boolean =
-    c == ' ' || c == '\t' || c == '\n' || c == 11.toChar || c == '\f' || c == '\r'
-
   /** Pure-Scala twin of the shingle+minhash chain (normalization contract =
     * [[TF.normalized]] + [[TF.tokens]]). Null when < shingleN tokens.
     *
@@ -124,9 +120,9 @@ object Dedup {
     val toks = new scala.collection.mutable.ArrayBuffer[Array[Byte]]()
     var i = 0
     while (i < n) {
-      while (i < n && isWs(s.charAt(i))) i += 1
+      while (i < n && isRegexSpace(s.charAt(i))) i += 1
       val start = i
-      while (i < n && !isWs(s.charAt(i))) i += 1
+      while (i < n && !isRegexSpace(s.charAt(i))) i += 1
       if (i > start)
         toks += s.substring(start, i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
     }
@@ -273,9 +269,9 @@ object Dedup {
     var ntok = 0
     var i = 0
     while (i < n) {
-      while (i < n && isWs(s.charAt(i))) i += 1
+      while (i < n && isRegexSpace(s.charAt(i))) i += 1
       val start = i
-      while (i < n && !isWs(s.charAt(i))) i += 1
+      while (i < n && !isRegexSpace(s.charAt(i))) i += 1
       if (i > start) {
         ntok += 1
         d.reset()

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.util.Chars.isRegexSpace
 /** Single-scan caption feature extraction — the engine-side hot path.
   *
   * The declarative rule set needs (length, token count, distinct-token
@@ -27,9 +28,6 @@ final case class CaptionFeatures(
 
 object CaptionFeatures {
 
-  @inline private def isWs(c: Char): Boolean =
-    c == ' ' || c == '\t' || c == '\n' || c == 11.toChar || c == '\f' || c == '\r'
-
   @inline private def isSymbol(c: Char): Boolean =
     !((c >= 'A' && c <= 'Z') || (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') ||
       c == ' ' || c == '\t' || c == '\n' || c == '\r')
@@ -51,7 +49,7 @@ object CaptionFeatures {
         if (c == caption.charAt(i - 1)) { run += 1; if (run > maxRunSeen) maxRunSeen = run }
         else run = 1
       }
-      if (isWs(c)) {
+      if (isRegexSpace(c)) {
         if (tokStart >= 0) {
           ntok += 1
           distinct.add(caption.substring(tokStart, i))

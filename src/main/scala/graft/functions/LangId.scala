@@ -1,5 +1,7 @@
 package graft.functions
 
+import graft.util.SplitMix64.{signedUnit, splitmix64}
+
 /** fastText-style language identifier (north rule): hashed character n-gram
   * embeddings, averaged, then a linear layer + softmax.
   *
@@ -48,13 +50,6 @@ object LangId extends Serializable {
 
   // --- deterministic pseudo-random embedding table ---
 
-  private def splitmix64(seed: Long): Long = {
-    var z = seed + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
-
   /** FNV-1a 64-bit over UTF-8 bytes — stable, dependency-free. */
   def fnv1a(s: String): Long = {
     var h = 0xcbf29ce484222325L
@@ -77,8 +72,7 @@ object LangId extends Serializable {
     while (b < buckets) {
       var j = 0
       while (j < dims) {
-        val r = splitmix64(b.toLong * 131 + j)
-        e(b)(j) = (r >>> 11).toDouble / (1L << 53).toDouble * 2.0 - 1.0
+        e(b)(j) = signedUnit(splitmix64(b.toLong * 131 + j))
         j += 1
       }
       b += 1
@@ -193,33 +187,27 @@ object LangId extends Serializable {
       if (norm > 0) acc.map(_ / norm) else acc
     }.toArray
     // deterministic training sentences: 60 per language, 4-10 anchor words
-    def smix(s: Long): Long = {
-      var z = s + 0x9e3779b97f4a7c15L
-      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-      z ^ (z >>> 31)
-    }
     val samples: IndexedSeq[(Array[Double], Int)] = for {
       li <- languages.indices
       s <- 0 until 60
     } yield {
       val vocab = anchors(languages(li))
-      var st = smix(li.toLong * 7919 + s)
+      var st = splitmix64(li.toLong * 7919 + s)
       val n = 4 + java.lang.Math.floorMod(st, 7L).toInt
       val words = (0 until n).map { k =>
-        st = smix(st + k)
+        st = splitmix64(st + k)
         vocab(java.lang.Math.floorMod(st, vocab.size.toLong).toInt)
       }
       // noise injection: 0-2 out-of-vocabulary gibberish tokens per sample,
       // so the layer is trained on the noisy embeddings it will see at
       // inference (captions contain names, emails, unseen words)
-      st = smix(st + 101)
+      st = splitmix64(st + 101)
       val nNoise = java.lang.Math.floorMod(st, 3L).toInt
       val noise = (0 until nNoise).map { k =>
-        st = smix(st + 211 + k)
+        st = splitmix64(st + 211 + k)
         val len = 3 + java.lang.Math.floorMod(st, 6L).toInt
         (0 until len).map { c =>
-          st = smix(st + c)
+          st = splitmix64(st + c)
           ('a' + java.lang.Math.floorMod(st, 26L).toInt).toChar
         }.mkString
       }

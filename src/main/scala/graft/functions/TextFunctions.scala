@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.util.Chars.isRegexSpace
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -78,8 +79,6 @@ object TextFunctions {
     if (text == null) return null
     val s = text.toLowerCase
     val n = s.length
-    @inline def isWs(c: Char): Boolean =
-      c == ' ' || c == '\t' || c == '\n' || c == 11.toChar || c == '\f' || c == '\r'
     val P = 2147483647L
     var h = 0L
     var i = 0
@@ -87,7 +86,7 @@ object TextFunctions {
     var started = false
     while (i < n) {
       val c = s.charAt(i)
-      if (isWs(c)) { pendingSpace = started; i += 1 }
+      if (isRegexSpace(c)) { pendingSpace = started; i += 1 }
       else {
         if (pendingSpace) { h = (h * 31 + ' '.toInt) % P; pendingSpace = false }
         val cp = s.codePointAt(i)

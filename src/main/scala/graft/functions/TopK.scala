@@ -25,8 +25,17 @@ object TopK {
   final case class Entry(score: Double, id: Long)
   final case class EntryS(score: Double, id: String)
 
-  private def beats(a: Entry, b: Entry): Boolean =
-    a.score > b.score || (a.score == b.score && a.id < b.id)
+  /** Rank orders, best first: score descending, ties by the smaller id. */
+  private val byLongId: Ordering[Entry] = new Ordering[Entry] {
+    def compare(a: Entry, b: Entry): Int =
+      if (a.score != b.score) java.lang.Double.compare(b.score, a.score)
+      else java.lang.Long.compare(a.id, b.id)
+  }
+  private val byStringId: Ordering[EntryS] = new Ordering[EntryS] {
+    def compare(a: EntryS, b: EntryS): Int =
+      if (a.score != b.score) java.lang.Double.compare(b.score, a.score)
+      else cmpCodePoints(a.id, b.id)
+  }
   // code-point comparison, NOT String.compareTo: UTF-16 code-unit order
   // diverges from UTF-8/code-point order for supplementary-plane chars, and
   // both Spark's string sort (UTF8String binary) and the DuckDB oracle order
@@ -43,42 +52,24 @@ object TopK {
     }
     Integer.compare(a.length - i, b.length - j)
   }
-  private def beatsS(a: EntryS, b: EntryS): Boolean =
-    a.score > b.score || (a.score == b.score && cmpCodePoints(a.id, b.id) < 0)
 
-  /** Aggregator buffer = the current top-k, kept sorted best-first; bounded
-    * insertion is O(k) per row (k is small by definition of top-k).
+  /** Aggregator buffer = the current top-k under `rank`, kept sorted
+    * best-first; bounded insertion is O(k) per row (k is small by definition
+    * of top-k).
     */
-  private final class MaxKAgg(k: Int) extends Aggregator[Entry, Seq[Entry], Seq[Entry]] {
-    def zero: Seq[Entry] = Vector.empty
-    def reduce(buf: Seq[Entry], e: Entry): Seq[Entry] =
-      if (buf.size >= k && !beats(e, buf.last)) buf
+  private final class MaxKAgg[E](k: Int, rank: Ordering[E], enc: Encoder[Seq[E]])
+      extends Aggregator[E, Seq[E], Seq[E]] {
+    def zero: Seq[E] = Vector.empty
+    def reduce(buf: Seq[E], e: E): Seq[E] =
+      if (buf.size >= k && !rank.lt(e, buf.last)) buf
       else {
-        val i = buf.indexWhere(b => beats(e, b)) match { case -1 => buf.size; case x => x }
+        val i = buf.indexWhere(rank.lt(e, _)) match { case -1 => buf.size; case x => x }
         (buf.take(i) :+ e) ++ buf.drop(i).take(k - i - 1)
       }
-    def merge(a: Seq[Entry], b: Seq[Entry]): Seq[Entry] = b.foldLeft(a)(reduce)
-    def finish(buf: Seq[Entry]): Seq[Entry] = buf
-    def bufferEncoder: Encoder[Seq[Entry]] = ExpressionEncoder[Seq[Entry]]()
-    def outputEncoder: Encoder[Seq[Entry]] = ExpressionEncoder[Seq[Entry]]()
-  }
-
-  /** String-id twin (ids the window ranker also supported, e.g. image_id
-    * strings); tiebreak = lexicographic ascending — identical to numeric
-    * order for fixed-width zero-padded ids like IMG%012d. */
-  private final class MaxKAggS(k: Int) extends Aggregator[EntryS, Seq[EntryS], Seq[EntryS]] {
-    def zero: Seq[EntryS] = Vector.empty
-    def reduce(buf: Seq[EntryS], e: EntryS): Seq[EntryS] =
-      if (e.id == null) buf
-      else if (buf.size >= k && !beatsS(e, buf.last)) buf
-      else {
-        val i = buf.indexWhere(b => beatsS(e, b)) match { case -1 => buf.size; case x => x }
-        (buf.take(i) :+ e) ++ buf.drop(i).take(k - i - 1)
-      }
-    def merge(a: Seq[EntryS], b: Seq[EntryS]): Seq[EntryS] = b.foldLeft(a)(reduce)
-    def finish(buf: Seq[EntryS]): Seq[EntryS] = buf
-    def bufferEncoder: Encoder[Seq[EntryS]] = ExpressionEncoder[Seq[EntryS]]()
-    def outputEncoder: Encoder[Seq[EntryS]] = ExpressionEncoder[Seq[EntryS]]()
+    def merge(a: Seq[E], b: Seq[E]): Seq[E] = b.foldLeft(a)(reduce)
+    def finish(buf: Seq[E]): Seq[E] = buf
+    def bufferEncoder: Encoder[Seq[E]] = enc
+    def outputEncoder: Encoder[Seq[E]] = enc
   }
 
   /** groupBy(groupCols).agg(top-k of (scoreCol desc, idCol asc)) → one row
@@ -99,9 +90,11 @@ object TopK {
     // type through select() so nested paths like "s.id" keep working.
     val idType = df.select(col(idCol)).schema.head.dataType
     val isString = idType == org.apache.spark.sql.types.StringType
+    // string ids tiebreak by code point — identical to numeric order for
+    // fixed-width zero-padded ids like IMG%012d
     val agg =
-      if (isString) udaf(new MaxKAggS(k), Encoders.product[EntryS])
-      else udaf(new MaxKAgg(k), Encoders.product[Entry])
+      if (isString) udaf(new MaxKAgg(k, byStringId, ExpressionEncoder[Seq[EntryS]]()), Encoders.product[EntryS])
+      else udaf(new MaxKAgg(k, byLongId, ExpressionEncoder[Seq[Entry]]()), Encoders.product[Entry])
     val idExpr = if (isString) col(idCol) else col(idCol).cast("long")
     // null ids cannot rank (and would crash the primitive-long encoder);
     // NaN scores are excluded too — Spark's window ordering treats NaN as

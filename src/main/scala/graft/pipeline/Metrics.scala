@@ -68,8 +68,8 @@ object Metrics {
     * The data write is the only job over the rows. `partition_id` is
     * computed in a projection below the observed aggregate: evaluated inside
     * it, `spark_partition_id()` reads 0 on every task. A failed write throws
-    * before the metrics are written. The data write turns the parquet
-    * dictionary off for [[QualityFilter.plainColumns]].
+    * before the metrics are written. The data write takes
+    * [[QualityFilter.writerOptions]].
     *
     * The metrics rows are one local relation written by one task, one file
     * per bucket. Spreading them over the session's tasks read no faster
@@ -81,8 +81,7 @@ object Metrics {
     overwriteBuckets(annotated.withColumn("partition_id", spark_partition_id())
       .observe(obs, tally(col("bucket"), col("partition_id"),
         col(RuleEngine.DropReasonCol), col("scrub_counts")).as("tally"))
-      .drop("partition_id"), dataDir,
-      QualityFilter.plainColumns.map(c => s"parquet.enable.dictionary#$c" -> "false").toMap)
+      .drop("partition_id"), dataDir, QualityFilter.writerOptions)
 
     val rows = obs.get("tally").asInstanceOf[Seq[Row]].map { t =>
       Row(t.getInt(0), t.getInt(1), t.getLong(2), t.getLong(3),

@@ -89,6 +89,11 @@ object QualityFilter {
     */
   val plainColumns: Seq[String] = Seq("image_id", "bytes", "caption", "scrubbed_caption", "ppl")
 
+  /** The parquet writer options of every write of this stage's output (the
+    * batch commit and the streaming sink): no dictionary for [[plainColumns]]. */
+  val writerOptions: Map[String, String] =
+    plainColumns.map(c => s"parquet.enable.dictionary#$c" -> "false").toMap
+
   /** Full stage: score → annotate(keep, drop_reason) → scrub kept captions,
     * on the typed corpus (see [[runDF]]).
     */

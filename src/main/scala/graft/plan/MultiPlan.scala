@@ -427,14 +427,10 @@ object MultiPlanRunner {
     def success: Boolean = validations.values.flatten.forall(_.success)
   }
 
-  def parseYaml(text: String): MultiPlanSpec = parseJson(PlanRunner.yamlToJson(text))
+  def parseYaml(text: String): MultiPlanSpec = parseJson(graft.util.Jsons.yamlToJson(text))
 
-  def parseJson(text: String): MultiPlanSpec = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    implicit val formats: Formats = DefaultFormats
-    JsonMethods.parse(text).extract[MultiPlanSpec]
-  }
+  def parseJson(text: String): MultiPlanSpec =
+    org.json4s.jackson.JsonMethods.parse(text).extract[MultiPlanSpec](org.json4s.DefaultFormats, manifest)
 
   /** Internal per-row identity for deterministic FK sampling: unique by
     * construction, dropped before the frames are returned/written. */

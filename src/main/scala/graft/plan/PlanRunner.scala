@@ -29,24 +29,13 @@ object PlanRunner {
     def success: Boolean = validations.forall(_.success) && !waitMet.contains(false)
   }
 
-  def parseJson(s: String): PlanSpec = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    implicit val formats: Formats = DefaultFormats
-    JsonMethods.parse(s).extract[PlanSpec]
-  }
-
-  /** YAML → JSON via Jackson's YAML module — shared by every YAML-accepting
-    * surface (plans, data contracts, REST bodies). */
-  def yamlToJson(s: String): String = {
-    val yaml = new com.fasterxml.jackson.dataformat.yaml.YAMLMapper()
-    new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(yaml.readTree(s))
-  }
+  def parseJson(s: String): PlanSpec =
+    org.json4s.jackson.JsonMethods.parse(s).extract[PlanSpec](org.json4s.DefaultFormats, manifest)
 
   /** YAML plans (the reference's native plan format). */
-  def parseYaml(s: String): PlanSpec = parseJson(yamlToJson(s))
+  def parseYaml(s: String): PlanSpec = parseJson(graft.util.Jsons.yamlToJson(s))
 
-  private def read(spark: SparkSession, src: SourceSpec): DataFrame = src.format match {
+  private[graft] def read(spark: SparkSession, src: SourceSpec): DataFrame = src.format match {
     case "table" => spark.read.table(src.path)
     case fmt => spark.read.format(fmt).load(src.path)
   }

@@ -45,22 +45,17 @@ object Unified {
       validations.forall(v => v.waitMet && v.results.forall(_.success))
   }
 
-  def detect(text: String): Boolean = {
-    val j = parseJ(text)
-    (j \ "dataSources") != JNothing && (j \ "version") != JNothing
-  }
+  /** True for a unified config; the rule itself is [[PlanDocument.isUnified]]. */
+  def detect(text: String): Boolean = PlanDocument.isUnified(graft.util.Jsons.parse(text))
 
   import graft.util.Jsons.{str, arr}
-
-  private def parseJ(text: String): JValue = graft.util.Jsons.parse(text)
 
   // ONE definition for both dialects (LegacyPlan owns it): the next format
   // addition or jar-blocked check must not land in only one of the two
   private def FileFormats = LegacyPlan.FileFormats
 
   /** Parse to the generation plan plus per-step raw validation entries. */
-  def parse(text: String): (MultiPlanSpec, Map[String, Seq[JValue]]) = {
-    val j = parseJ(text)
+  def parse(j: JValue): (MultiPlanSpec, Map[String, Seq[JValue]]) = {
     val name = str(j \ "name").getOrElse("unified")
     val seed = str(j \ "sinkOptions" \ "seed").flatMap(_.toLongOption).getOrElse(42L)
 
@@ -152,8 +147,9 @@ object Unified {
     * always the UDF-free projection path the reference's fast mode
     * approximates.
     */
-  def run(spark: SparkSession, text: String): UnifiedOutcome = {
-    val j = parseJ(text)
+  def run(spark: SparkSession, text: String): UnifiedOutcome = run(spark, graft.util.Jsons.parse(text))
+
+  def run(spark: SparkSession, j: JValue): UnifiedOutcome = {
     val numSamples = (j \ "config" \ "validation" \ "numSampleErrorRecords") match {
       case JInt(i) => i.toInt; case _ => 5
     }
@@ -187,7 +183,7 @@ object Unified {
     val trackFolder = graft.util.Jsons.str(
       j \ "config" \ "folders" \ "recordTrackingFolderPath")
 
-    val (plan0, entriesByStep) = parse(text)
+    val (plan0, entriesByStep) = parse(j)
     // config.generation.numRecordsPerStep overrides every step's count
     // (reference UnifiedGenerationConfig; numRecordsPerBatch is accepted
     // and ignored — Spark partitions bound memory, batching is the
@@ -367,17 +363,11 @@ object Unified {
 
   private def writeReport(o: UnifiedOutcome, dir: String,
       rec: graft.pipeline.RecordListener): Unit = {
-    import graft.util.Jsons.quote
-    val counts = o.generation.insertOrder.map(t =>
-      s"${quote(t)}:${o.generation.counts.getOrElse(t, 0L)}").mkString("{", ",", "}")
-    val vals = o.validations.flatMap(sv => sv.results.map(r =>
-      s"""{"step":${quote(sv.step)},"rule":${quote(r.rule)},"total":${r.total},""" +
-        s""""errors":${r.errors},"success":${r.success}}""")).mkString("[", ",", "]")
-    val json = s"""{"name":${quote(o.name)},"success":${o.success},""" +
+    val json = s"""{"name":${graft.util.Jsons.quote(o.name)},"success":${o.success},""" +
       s""""recordsWritten":${rec.recordsWritten},""" +
       s""""recordsPerSec":${math.round(rec.recordsPerSec)},""" +
       s""""writeTasks":${rec.tasks.size},""" +
-      s""""counts":$counts,"validations":$vals}"""
+      s"""${PlanDocument.counts(o.generation)},"validations":${PlanDocument.validations(o)}}"""
     val d = java.nio.file.Paths.get(dir)
     java.nio.file.Files.createDirectories(d)
     // timestamped per run: successive runs (e.g. a validate-existing pass

@@ -49,12 +49,8 @@ object DataContract {
     */
   def parse(text: String): Contract = {
     import org.json4s._
-    import org.json4s.jackson.JsonMethods
     implicit val formats: Formats = DefaultFormats
-    val json =
-      if (text.trim.startsWith("{")) text
-      else graft.plan.PlanRunner.yamlToJson(text)
-    val j = JsonMethods.parse(json)
+    val j = graft.util.Jsons.parse(text)
     (j \ "dataset") match {
       case JArray(tables) =>
         import graft.util.Jsons.{str, arr, bool}

@@ -36,12 +36,7 @@ object JsonSchema {
     def schema: JValue = root
   }
 
-  def parse(text: String): Parsed = {
-    val json =
-      if (text.trim.startsWith("{")) text
-      else graft.plan.PlanRunner.yamlToJson(text)
-    Parsed(JsonMethods.parse(json))
-  }
+  def parse(text: String): Parsed = Parsed(graft.util.Jsons.parse(text))
 
   // ---------- pointer resolution / composition ----------
 

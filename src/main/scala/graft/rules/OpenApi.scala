@@ -46,10 +46,7 @@ object OpenApi {
       urlSql: String = "")
 
   def parse(text: String): Seq[Operation] = {
-    val json =
-      if (text.trim.startsWith("{")) text
-      else graft.plan.PlanRunner.yamlToJson(text)
-    val root = org.json4s.jackson.JsonMethods.parse(json)
+    val root = graft.util.Jsons.parse(text)
     val serverUrl = (root \ "servers") match {
       case JArray(s :: _) =>
         val base = (s \ "url") match { case JString(u) => u; case _ => "" }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 /** Fast sample preview — the reference's `FastSampleGenerator.scala`
   * (~494 LoC: generate a handful of records from a submitted schema/plan so
   * the UI can show what the data will look like before committing to a full
-  * run). Same contract, no UI: accept either plan dialect, run a BOUNDED
+  * run). Same contract, no UI: accept any plan dialect, run a BOUNDED
   * version of it (counts clamped, sinks stripped, source reads limited),
   * return sample rows as JSON.
   *
@@ -20,15 +20,14 @@ object Preview {
 
   final case class Sample(dataset: String, rows: Seq[String])
 
-  /** Dispatch on dialect: a document with `tasks` is a multi-task plan. */
-  def preview(spark: SparkSession, body: String, sampleN: Int = 10): Seq[Sample] = {
-    val json =
-      if (body.trim.startsWith("{")) body
-      else PlanRunner.yamlToJson(body)
-    if (org.json4s.jackson.JsonMethods.parse(json) \ "tasks" ne org.json4s.JNothing)
-      previewMulti(spark, MultiPlanRunner.parseJson(json), sampleN)
-    else previewFilter(spark, PlanRunner.parseJson(json), sampleN)
-  }
+  /** The dialect is [[PlanDocument]]'s; a unified config previews as the
+    * multi-task plan it generates. */
+  def preview(spark: SparkSession, body: String, sampleN: Int = 10): Seq[Sample] =
+    PlanDocument.parse(body) match {
+      case PlanDocument.UnifiedDoc(j) => previewMulti(spark, Unified.parse(j)._1, sampleN)
+      case PlanDocument.MultiDoc(plan) => previewMulti(spark, plan, sampleN)
+      case PlanDocument.FilterDoc(plan) => previewFilter(spark, plan, sampleN)
+    }
 
   private def previewMulti(spark: SparkSession, plan: MultiPlanSpec, n: Int): Seq[Sample] = {
     val bounded = plan.copy(
@@ -45,11 +44,7 @@ object Preview {
   private def previewFilter(spark: SparkSession, plan: PlanSpec, n: Int): Seq[Sample] = {
     val bounded = plan.copy(sink = None, waitFor = None)
     // limit the SOURCE, not the output: annotation must not scan the world
-    val src = plan.source
-    val df = (src.format match {
-      case "table" => spark.read.table(src.path)
-      case fmt => spark.read.format(fmt).load(src.path)
-    }).limit(n * 10)
+    val df = PlanRunner.read(spark, plan.source).limit(n * 10)
     val tmpPath = java.nio.file.Files.createTempDirectory("graft_preview")
     try {
       df.write.mode("overwrite").parquet(tmpPath.toString)

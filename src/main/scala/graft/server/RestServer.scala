@@ -1,6 +1,6 @@
 package graft.server
 
-import graft.plan.PlanRunner
+import graft.plan.PlanDocument
 import graft.util.Jsons
 import org.apache.spark.sql.SparkSession
 import java.nio.charset.StandardCharsets.UTF_8
@@ -12,16 +12,16 @@ import java.nio.charset.StandardCharsets.UTF_8
   *
   *   GET  /        the plan-builder page ([[Ui]] — edit/save/load/preview/
   *                 run/history over these endpoints, one static document)
-  *   POST /plan    body = PlanSpec JSON or YAML → executes via PlanRunner,
-  *                 responds with rows_in/rows_out + per-rule validation
-  *                 results (400 on parse errors, 500 on execution errors)
+  *   POST /plan    body = a plan in any dialect, JSON or YAML → runs it
+  *                 through [[PlanDocument]], responds with its summary
+  *                 (400 on parse errors, 500 on execution errors)
   *   GET  /health  liveness
   *
   * Plus the repository surface (reference `core/ui/plan/PlanRepository
   * .scala`: save/get/list/remove + run history) backed by [[PlanStore]],
   * and fast sample preview (`FastSampleGenerator.scala`) via [[Preview]]:
   *
-  *   PUT    /plans/{name}      save plan text (either dialect)
+  *   PUT    /plans/{name}      save plan text (any dialect)
   *   GET    /plans             list saved plan names
   *   GET    /plans/{name}      fetch plan text
   *   DELETE /plans/{name}      remove
@@ -32,8 +32,9 @@ import java.nio.charset.StandardCharsets.UTF_8
   *                             reads limited — see [[Preview]])
   *
   * With this, all three reference entry shapes exist: the Scala case-class
-  * API ([[graft.plan.PlanSpec]]), YAML/JSON plan files
-  * ([[PlanRunner.parseYaml]], `graft.Main --plan`), and REST submission.
+  * API ([[graft.plan.PlanSpec]]), YAML/JSON plan files (`graft.Main
+  * --plan`), and REST submission. Every door that takes a plan text reads
+  * it through [[PlanDocument]]: one format rule, one dialect rule.
   */
 final class RestServer(spark: SparkSession, port: Int = 0,
     repoDir: Option[String] = None) {
@@ -72,23 +73,12 @@ final class RestServer(spark: SparkSession, port: Int = 0,
       if (ex.getRequestMethod != "POST") respond(ex, 405, """{"error":"POST only"}""")
       else {
         val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-        val parsed =
-          try Right(if (body.trim.startsWith("{")) PlanRunner.parseJson(body)
-                    else PlanRunner.parseYaml(body))
-          catch { case e: Exception => Left(e) }
-        parsed match {
+        (try Right(PlanDocument.parse(body)) catch { case e: Exception => Left(e) }) match {
           case Left(e) =>
             respond(ex, 400, s"""{"error":"invalid plan: ${Jsons.escape(String.valueOf(e.getMessage))}"}""")
-          case Right(plan) =>
-            try {
-              val o = PlanRunner.run(spark, plan)
-              val vs = o.validations.map(v =>
-                s"""{"rule":${Jsons.quote(v.rule)},"total":${v.total},"errors":${v.errors},"success":${v.success}}""")
-                .mkString("[", ",", "]")
-              respond(ex, 200,
-                s"""{"plan":${Jsons.quote(o.plan)},"rows_in":${o.rowsIn},"rows_out":${o.rowsOut},""" +
-                  s""""success":${o.success},"validations":$vs}""")
-            } catch {
+          case Right(doc) =>
+            try respond(ex, 200, PlanDocument.run(spark, doc).json)
+            catch {
               case e: Exception =>
                 respond(ex, 500, s"""{"error":${Jsons.quote(String.valueOf(e.getMessage))}}""")
             }
@@ -116,28 +106,10 @@ final class RestServer(spark: SparkSession, port: Int = 0,
             case Some(text) =>
               val runId = java.util.UUID.randomUUID().toString
               try {
-                // dialect dispatch, same rule as Preview: `tasks` = multi
-                val json = if (text.trim.startsWith("{")) text
-                           else PlanRunner.yamlToJson(text)
-                val isMulti =
-                  (org.json4s.jackson.JsonMethods.parse(json) \ "tasks") !=
-                    org.json4s.JNothing
-                val (planName, success, detail) =
-                  if (isMulti) {
-                    val o = graft.plan.MultiPlanRunner.run(
-                      spark, graft.plan.MultiPlanRunner.parseJson(json))
-                    val counts = o.insertOrder.map(t =>
-                      s"""${Jsons.quote(t)}:${o.counts(t)}""").mkString("{", ",", "}")
-                    (o.plan, o.success, s""""counts":$counts""")
-                  } else {
-                    val o = PlanRunner.run(spark, PlanRunner.parseJson(json))
-                    (o.plan, o.success,
-                      s""""rows_in":${o.rowsIn},"rows_out":${o.rowsOut}""")
-                  }
-                store.recordRun(name, runId, if (success) "success" else "failed",
+                val summary = PlanDocument.run(spark, PlanDocument.parse(text))
+                store.recordRun(name, runId, if (summary.success) "success" else "failed",
                   System.currentTimeMillis())
-                respond(ex, 200,
-                  s"""{"plan":${Jsons.quote(planName)},"run_id":"$runId","success":$success,$detail}""")
+                respond(ex, 200, s"""{"run_id":"$runId",${summary.fields}}""")
               } catch {
                 case e: Exception =>
                   store.recordRun(name, runId, "error",

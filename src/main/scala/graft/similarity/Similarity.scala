@@ -47,16 +47,9 @@ object Similarity {
 
   /** Deterministic random hyperplane (unit-free; sign only matters). */
   private def hyperplane(seed: Long, plane: Int, dims: Int): Array[Double] = {
-    def splitmix64(s: Long): Long = {
-      var z = s + 0x9e3779b97f4a7c15L
-      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-      z ^ (z >>> 31)
-    }
-    Array.tabulate(dims) { j =>
-      val r = splitmix64(seed * 1315423911L + plane.toLong * 2654435761L + j)
-      (r >>> 11).toDouble / (1L << 53).toDouble * 2.0 - 1.0
-    }
+    import graft.util.SplitMix64.{signedUnit, splitmix64}
+    Array.tabulate(dims)(j =>
+      signedUnit(splitmix64(seed * 1315423911L + plane.toLong * 2654435761L + j)))
   }
 
   /** Sign-LSH bucket id: `planes`-bit signature from random hyperplanes.

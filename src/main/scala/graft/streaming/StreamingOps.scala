@@ -49,7 +49,8 @@ object StreamingOps {
     * restart from the same checkpoint resumes at the last uncommitted batch,
     * re-overwriting at most one directory (exactly-once output; the
     * streaming twin of [[graft.pipeline.ResumableRunner]]'s
-    * write-audit-publish manifest).
+    * write-audit-publish manifest). Written with the batch commit's
+    * [[QualityFilter.writerOptions]].
     */
   def checkpointedParquetSink(
       stream: DataFrame,
@@ -58,7 +59,8 @@ object StreamingOps {
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+        batch.write.mode("overwrite").options(QualityFilter.writerOptions)
+          .parquet(s"$outDir/batch=$batchId")
       }
       .start()
 

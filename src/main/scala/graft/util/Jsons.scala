@@ -9,11 +9,18 @@ import org.json4s._
   */
 object Jsons {
 
-  /** Parse JSON, or YAML via the shared Jackson YAML bridge. */
+  /** The one format rule for every JSON-or-YAML document (plans, data
+    * contracts, schemas, REST bodies): text starting with `{` is JSON,
+    * anything else is YAML, read through [[yamlToJson]]. */
   def parse(text: String): JValue =
     org.json4s.jackson.JsonMethods.parse(
-      if (text.trim.startsWith("{")) text
-      else graft.plan.PlanRunner.yamlToJson(text))
+      if (text.trim.startsWith("{")) text else yamlToJson(text))
+
+  /** YAML → JSON via Jackson's YAML module. */
+  def yamlToJson(s: String): String = {
+    val yaml = new com.fasterxml.jackson.dataformat.yaml.YAMLMapper()
+    new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(yaml.readTree(s))
+  }
 
   def str(j: JValue): Option[String] = j match {
     case JString(s) => Some(s)

@@ -11,86 +11,7 @@ import java.nio.file.Files
 class UnifiedSpec extends SparkSuite {
   private val s = graft.SharedSpark.spark
 
-  private def unifiedYaml(out: String): String =
-    s"""version: "1.0"
-       |name: "validation_example"
-       |description: "Inline validations"
-       |config:
-       |  validation:
-       |    numSampleErrorRecords: 3
-       |dataSources:
-       |  - name: "customer_files"
-       |    connection:
-       |      type: "parquet"
-       |      options:
-       |        path: "$out/customers"
-       |    steps:
-       |      - name: "customers"
-       |        count:
-       |          records: 300
-       |        fields:
-       |          - name: "customer_id"
-       |            options:
-       |              regex: "CUST[0-9]{8}"
-       |          - name: "email"
-       |            options:
-       |              expression: "#{internet.emailAddress}"
-       |          - name: "age"
-       |            type: "integer"
-       |            options: {min: 18, max: 120}
-       |          - name: "account_balance"
-       |            type: "double"
-       |            options: {min: 0.0, max: 1000000.0}
-       |          - name: "status"
-       |            options:
-       |              oneOf: ["active", "inactive", "pending"]
-       |        validations:
-       |          - expr: "age >= 18 AND age <= 120"
-       |          - field: "status"
-       |            validation:
-       |              - type: "in"
-       |                values: ["active", "inactive", "pending"]
-       |          - field: "email"
-       |            validation:
-       |              - type: "null"
-       |                negate: true
-       |          - groupByFields: ["status"]
-       |            aggField: "account_balance"
-       |            aggType: "avg"
-       |            aggExpr: "`avg(account_balance)` > 0"
-       |          - names: ["customer_id", "email", "age", "account_balance", "status"]
-       |          - expr: "customer_id IS NOT NULL"
-       |            waitCondition:
-       |              type: "pause"
-       |              pauseInSeconds: 0
-       |  - name: "orders_files"
-       |    connection:
-       |      type: "parquet"
-       |      options:
-       |        path: "$out/orders"
-       |    steps:
-       |      - name: "orders"
-       |        count:
-       |          records: 10
-       |        fields:
-       |          - name: "order_id"
-       |            options:
-       |              regex: "ORD[0-9]{6}"
-       |          - name: "customer_id"
-       |foreignKeys:
-       |  - source:
-       |      dataSource: "customer_files"
-       |      step: "customers"
-       |      fields: ["customer_id"]
-       |      cardinality:
-       |        ratio: 2
-       |    generate:
-       |      - dataSource: "orders_files"
-       |        step: "orders"
-       |        fields: ["customer_id"]
-       |sinkOptions:
-       |  seed: "11"
-       |""".stripMargin
+  import UnifiedSpec.unifiedYaml
 
   test("unified config: detect, generate, FK cardinality, inline validations, sinks") {
     val out = Files.createTempDirectory("graft_unified").toString
@@ -299,4 +220,89 @@ class UnifiedSpec extends SparkSuite {
     // tracking state cleared → second delete run is a no-op
     assert(Unified.run(s, yaml("    enableDeleteGeneratedRecords: true")).deleted.isEmpty)
   }
+}
+
+object UnifiedSpec {
+  /** A unified config with two file data sources, a foreign key and inline
+    * validations, its sinks under `out`. */
+  def unifiedYaml(out: String): String =
+    s"""version: "1.0"
+       |name: "validation_example"
+       |description: "Inline validations"
+       |config:
+       |  validation:
+       |    numSampleErrorRecords: 3
+       |dataSources:
+       |  - name: "customer_files"
+       |    connection:
+       |      type: "parquet"
+       |      options:
+       |        path: "$out/customers"
+       |    steps:
+       |      - name: "customers"
+       |        count:
+       |          records: 300
+       |        fields:
+       |          - name: "customer_id"
+       |            options:
+       |              regex: "CUST[0-9]{8}"
+       |          - name: "email"
+       |            options:
+       |              expression: "#{internet.emailAddress}"
+       |          - name: "age"
+       |            type: "integer"
+       |            options: {min: 18, max: 120}
+       |          - name: "account_balance"
+       |            type: "double"
+       |            options: {min: 0.0, max: 1000000.0}
+       |          - name: "status"
+       |            options:
+       |              oneOf: ["active", "inactive", "pending"]
+       |        validations:
+       |          - expr: "age >= 18 AND age <= 120"
+       |          - field: "status"
+       |            validation:
+       |              - type: "in"
+       |                values: ["active", "inactive", "pending"]
+       |          - field: "email"
+       |            validation:
+       |              - type: "null"
+       |                negate: true
+       |          - groupByFields: ["status"]
+       |            aggField: "account_balance"
+       |            aggType: "avg"
+       |            aggExpr: "`avg(account_balance)` > 0"
+       |          - names: ["customer_id", "email", "age", "account_balance", "status"]
+       |          - expr: "customer_id IS NOT NULL"
+       |            waitCondition:
+       |              type: "pause"
+       |              pauseInSeconds: 0
+       |  - name: "orders_files"
+       |    connection:
+       |      type: "parquet"
+       |      options:
+       |        path: "$out/orders"
+       |    steps:
+       |      - name: "orders"
+       |        count:
+       |          records: 10
+       |        fields:
+       |          - name: "order_id"
+       |            options:
+       |              regex: "ORD[0-9]{6}"
+       |          - name: "customer_id"
+       |foreignKeys:
+       |  - source:
+       |      dataSource: "customer_files"
+       |      step: "customers"
+       |      fields: ["customer_id"]
+       |      cardinality:
+       |        ratio: 2
+       |    generate:
+       |      - dataSource: "orders_files"
+       |        step: "orders"
+       |        fields: ["customer_id"]
+       |sinkOptions:
+       |  seed: "11"
+       |""".stripMargin
 }

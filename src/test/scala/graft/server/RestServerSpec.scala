@@ -195,6 +195,37 @@ class RestServerSpec extends SparkSuite {
     } finally srv.stop()
   }
 
+  test("a unified config runs on /plans/{name}/run and /plan and previews on /preview") {
+    import graft.plan.UnifiedSpec.unifiedYaml
+    val srv = new RestServer(spark).start()
+    try {
+      val p = srv.boundPort
+      val saved = Files.createTempDirectory("graft_rest_unified").toString
+      assert(send(p, "PUT", "/plans/uni", unifiedYaml(saved)).statusCode() == 200)
+      val run = send(p, "POST", "/plans/uni/run")
+      assert(run.statusCode() == 200, run.body())
+      // per-step counts: 300 customers, 2 orders each (the FK ratio)
+      assert(run.body().contains(""""counts":{"customers":300,"orders":600}"""), run.body())
+      assert(run.body().contains(""""success":true"""), run.body())
+      assert(send(p, "GET", "/runs").body().contains(""""status":"success""""))
+      assert(spark.read.parquet(s"$saved/orders").count() == 600L)
+
+      // preview: the generated multi-task plan, bounded per step, no sink
+      val previewOut = Files.createTempDirectory("graft_rest_unified_preview").toString
+      val prev = post(p, "/preview", unifiedYaml(previewOut))
+      assert(prev.statusCode() == 200, prev.body())
+      val samples = graft.util.Jsons.arr(graft.util.Jsons.parse(prev.body()) \ "samples")
+      assert(samples.flatMap(s => graft.util.Jsons.str(s \ "dataset")) == Seq("customers", "orders"))
+      samples.foreach(s => assert(graft.util.Jsons.arr(s \ "rows").size == 10, prev.body()))
+      assert(!Files.exists(java.nio.file.Paths.get(previewOut, "customers")))
+
+      // POST /plan runs the same document
+      val direct = post(p, "/plan", unifiedYaml(Files.createTempDirectory("graft_rest_unified_plan").toString))
+      assert(direct.statusCode() == 200, direct.body())
+      assert(direct.body().contains(""""counts":{"customers":300,"orders":600}"""), direct.body())
+    } finally srv.stop()
+  }
+
   test("UI form builder: the page's own JS composes YAML that runs (node-executed)") {
     val node = Seq("/usr/bin/node", "/usr/local/bin/node")
       .find(p => new java.io.File(p).canExecute)
@@ -249,7 +280,7 @@ class RestServerSpec extends SparkSuite {
     // all-kinds + sink: parses, generates 25 rows, writes the json sink;
     // the blank-name row is skipped, sql sees its oneOf sibling
     val o = graft.plan.MultiPlanRunner.run(spark,
-      graft.plan.MultiPlanRunner.parseJson(graft.plan.PlanRunner.yamlToJson(y2)))
+      graft.plan.MultiPlanRunner.parseJson(graft.util.Jsons.yamlToJson(y2)))
     assert(o.counts("t") == 25L)
     val written = spark.read.json(sinkDir)
     assert(written.count() == 25)

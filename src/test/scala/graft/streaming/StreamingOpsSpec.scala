@@ -4,7 +4,11 @@ import graft.SparkSuite
 import graft.corpus.ImageRow
 import graft.pipeline.{Oracle, QualityFilter}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 class StreamingOpsSpec extends SparkSuite {
   import graft.SharedSpark.spark.implicits._
@@ -80,6 +84,40 @@ class StreamingOpsSpec extends SparkSuite {
     assert(written.map(_._1).distinct.length == 150)
     val expected = rows.map(r => r.image_id -> Oracle.label(r).keep).toMap
     written.foreach { case (id, keep) => assert(keep == expected(id), s"keep mismatch for $id") }
+  }
+
+  test("checkpointed sink: a micro-batch writes QualityFilter.plainColumns without a dictionary") {
+    implicit val sqlCtx = spark.sqlContext
+    val out = java.nio.file.Files.createTempDirectory("graft_stream_enc").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_enc_ckpt").toString
+    // every row twice, side by side: within a chunk each value repeats, so a
+    // writer that tried a dictionary would keep it
+    val rows = (0L until 600L).map(i => graft.corpus.SyntheticImages.row(i, 7L)).flatMap(r => Seq(r, r))
+    val mem = MemoryStream[ImageRow]
+    val q = StreamingOps.checkpointedParquetSink(StreamingOps.filterStream(spark, mem.toDF()), out, ckpt)
+    mem.addData(rows)
+    q.processAllAvailable()
+    q.stop()
+
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(out, "batch=0"))
+    val parquet = try files.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
+      finally files.close()
+    val chunks = parquet.flatMap { f =>
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new HPath(f.toUri), spark.sparkContext.hadoopConfiguration))
+      try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+        .map(c => c.getPath.toDotString -> c.getEncodings.asScala.toSet).toList
+      finally reader.close()
+    }.groupMap(_._1)(_._2)
+    QualityFilter.plainColumns.foreach { c =>
+      assert(chunks(c).nonEmpty && chunks(c).forall(!_.exists(_.usesDictionary)),
+        s"$c: ${chunks(c).distinct}")
+    }
+    Seq("fmt", "lang", "drop_reason").foreach { c =>
+      assert(chunks(c).nonEmpty && chunks(c).forall(_.exists(_.usesDictionary)),
+        s"$c: ${chunks(c).distinct}")
+    }
+    assert(spark.read.parquet(out).count() == rows.size.toLong)
   }
 
   test("watermarked windowed drop counts") {

@@ -25,7 +25,7 @@ object Bench {
       s"/tmp/graft_bench_corpus_v${corpus.SyntheticImages.Version}_s42_p${partitions}_$n"
     if (!new java.io.File(corpusPath + "/_SUCCESS").exists()) {
       corpus.SyntheticImages.generate(spark, n, seed = 42L, partitions = partitions)
-        .write.mode("overwrite").parquet(corpusPath)
+        .write.mode("overwrite").options(pipeline.QualityFilter.writerOptions).parquet(corpusPath)
     }
     val t0 = System.nanoTime()
     val result = pipeline.QualityFilter.runDF(spark, spark.read.parquet(corpusPath))

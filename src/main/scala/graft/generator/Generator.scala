@@ -519,14 +519,12 @@ object Generator {
     // children (the reference's nested computed fields) — apply in a second
     // projection over the full frame
     val (plain, late) = specs.partition(s => !hasSqlDeep(s))
-    val cols = plain.map { s =>
-      val c = s.toColumnWith(uniform, seed, idx)
-      val withNulls = nullProb.get(s.name) match {
-        case Some(p) => when(uniform(s.name + "\u0000null", seed, idx) < p, lit(null)).otherwise(c)
-        case None => c
-      }
-      withNulls.as(s.name)
+    // the per-field null draw: keyed by the field's name and the row index
+    def withNulls(name: String, index: Column, c: Column): Column = nullProb.get(name) match {
+      case Some(p) => when(uniform(name + "\u0000null", seed, index) < p, lit(null)).otherwise(c)
+      case None => c
     }
+    val cols = plain.map(s => withNulls(s.name, idx, s.toColumnWith(uniform, seed, idx)).as(s.name))
     // carried names may be dotted (nested perField group paths) — backtick
     // so they stay single-column references
     val df = base.select((carry.map(n => col(s"`$n`")) ++ (idx.as("__index_inc") +: cols)): _*)
@@ -546,15 +544,10 @@ object Generator {
     val referencedHeads: Set[String] = late.flatMap(s => refHeads(s) - s.name).toSet
     val preStaged = late.filter(s => referencedHeads.contains(s.name)).flatMap(plainSubset)
     val df1 = preStaged.foldLeft(df) { (d, ps) =>
-      val c = ps.toColumnWith(uniform, seed, lateIdx)
       // same null draw (key + index) as the spec's final stage-B build:
       // a cross-spec reference must see null exactly where the finished
       // column is null, not the pre-null staged value
-      val withNulls = nullProb.get(ps.name) match {
-        case Some(p) => when(uniform(ps.name + "\u0000null", seed, lateIdx) < p, lit(null)).otherwise(c)
-        case None => c
-      }
-      d.withColumn(ps.name, withNulls)
+      d.withColumn(ps.name, withNulls(ps.name, lateIdx, ps.toColumnWith(uniform, seed, lateIdx)))
     }
     // Stage B: full builds in computed-dependency order ([[topoOrder]] —
     // edges only for references that TOUCH a computed path; plain-path
@@ -562,12 +555,7 @@ object Generator {
     // single projection with sibling/element references substituted
     // in-expression ([[scopedColumn]]).
     val out = topoOrder(late).foldLeft(df1) { case (d, s) =>
-      val c = scopedColumn(s, uniform, seed, lateIdx, Nil)
-      val withNulls = nullProb.get(s.name) match {
-        case Some(p) => when(uniform(s.name + "\u0000null", seed, lateIdx) < p, lit(null)).otherwise(c)
-        case None => c
-      }
-      d.withColumn(s.name, withNulls)
+      d.withColumn(s.name, withNulls(s.name, lateIdx, scopedColumn(s, uniform, seed, lateIdx, Nil)))
     }
     out.drop("__index_inc")
   }

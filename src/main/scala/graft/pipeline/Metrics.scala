@@ -157,10 +157,4 @@ object Metrics {
     def outputEncoder: Encoder[Seq[Tally]] = ExpressionEncoder[Seq[Tally]]()
   }
   private val tally = udaf(TallyAgg, Encoders.product[(Int, Int, String, Map[String, Int])])
-
-  /** Whole-run totals from the per-partition rows (driver-readable summary). */
-  def summary(metrics: DataFrame): (Long, Long) = {
-    val row = metrics.agg(coalesce(sum("rows_in"), lit(0L)), coalesce(sum("rows_out"), lit(0L))).head()
-    (row.getLong(0), row.getLong(1))
-  }
 }

@@ -14,7 +14,9 @@ import org.json4s._
   * [[graft.util.Jsons.parse]] (`{` → JSON, else YAML), and picks the
   * dialect once:
   *  - `version` + `dataSources` → a unified config, run by [[Unified]];
-  *  - `tasks` → a multi-task plan, run by [[MultiPlanRunner]];
+  *  - `tasks` → a multi-task plan, run by [[MultiPlanRunner]], unless the
+  *    tasks name task files (the reference's legacy plan: it runs from
+  *    `graft.Main --legacy`, which is given the task folder);
   *  - anything else → a single-step filter plan, run by [[PlanRunner]].
   *
   * [[run]] executes a parsed document and sums it up as one JSON object.
@@ -29,11 +31,22 @@ object PlanDocument {
   private[plan] def isUnified(j: JValue): Boolean =
     (j \ "version") != JNothing && (j \ "dataSources") != JNothing
 
-  /** Throws on text that is not a plan in any dialect. */
+  /** The reference's legacy plan: its `tasks` name task files
+    * (`dataSourceName`, no `fields`), which live in a separate folder. */
+  private def isLegacy(j: JValue): Boolean =
+    graft.util.Jsons.arr(j \ "tasks").exists(t =>
+      (t \ "dataSourceName") != JNothing && (t \ "fields") == JNothing)
+
+  /** Throws on text that is not a plan in any dialect, and with an
+    * IllegalArgumentException on a legacy plan, whose task folder a
+    * document cannot carry. */
   def parse(text: String): Doc = {
     implicit val formats: Formats = DefaultFormats
     val j = graft.util.Jsons.parse(text)
     if (isUnified(j)) UnifiedDoc(j)
+    else if (isLegacy(j)) throw new IllegalArgumentException(
+      "a legacy plan (tasks with a dataSourceName and no fields) refers to task files; " +
+        "run it with graft.Main --legacy <plan> <taskFolder>")
     else if ((j \ "tasks") != JNothing) MultiDoc(j.extract[MultiPlanSpec])
     else FilterDoc(j.extract[PlanSpec])
   }

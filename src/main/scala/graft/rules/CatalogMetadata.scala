@@ -71,17 +71,8 @@ object OpenLineage {
 
 object OpenMetadata {
 
-  final case class ImportedChecks(
-      rules: Seq[Rule],
-      datasetChecks: Seq[(String, DataFrame => Boolean)])
-
   import graft.util.Jsons.str
 
-  /** Parse an OpenMetadata test-case listing (`{data: [...]}` as the API
-    * returns, or a bare array / single case). The target field comes from
-    * the case's `entityLink` (`...::columns::<name>...`), as the reference
-    * resolves it.
-    */
   /** Unwrap an OpenMetadata API payload: `{data: [...]}` listing, a bare
     * array, or a single document — ONE implementation for both the
     * test-case and table entry points. */
@@ -90,7 +81,12 @@ object OpenMetadata {
     case _ => j match { case JArray(cs) => cs; case single => List(single) }
   }
 
-  def parse(text: String): ImportedChecks = {
+  /** Parse an OpenMetadata test-case listing (`{data: [...]}` as the API
+    * returns, or a bare array / single case). The target field comes from
+    * the case's `entityLink` (`...::columns::<name>...`), as the reference
+    * resolves it.
+    */
+  def parse(text: String): RuleSet = {
     val j = org.json4s.jackson.JsonMethods.parse(text)
     val cases = responseDocs(j)
     val converted = cases.map { c =>
@@ -104,7 +100,7 @@ object OpenMetadata {
       }
       fromParams(params, field)
     }
-    ImportedChecks(converted.flatMap(_.rules), converted.flatMap(_.datasetChecks))
+    RuleSet(converted.flatMap(_.rules), converted.flatMap(_.datasetChecks))
   }
 
   /** OpenMetadata TABLE responses (`GET /api/v1/tables` — `{data: [...]}`
@@ -151,7 +147,7 @@ object OpenMetadata {
   /** The reference's param-key dispatch (`OpenMetadataModels.scala`
     * matchesParams): which keys are present selects the check.
     */
-  def fromParams(params: Map[String, String], field: Option[String]): ImportedChecks = {
+  def fromParams(params: Map[String, String], field: Option[String]): RuleSet = {
     def num(k: String): Option[Double] = params.get(k).flatMap(_.toDoubleOption)
     // descriptive failure for table-scoped entityLinks on field checks —
     // a bare None.get on a malformed registry payload names nothing
@@ -200,10 +196,7 @@ object OpenMetadata {
     if (params.contains("fieldValuesToBeNotNull"))
       rules += Rules.isNotNull(reqField("fieldValuesToBeNotNull"))
     if (params.contains("fieldValuesToBeUnique"))
-      checks += {
-      val f = reqField("fieldValuesToBeUnique")
-      ((s"${f}_unique", (df: DataFrame) => GroupRules.duplicateGroups(df, Seq(f)).isEmpty))
-    }
+      checks += GroupRules.uniqueCheck(reqField("fieldValuesToBeUnique"))
     if (params.contains("missingCountValue")) {
       val f = reqField("missingCountValue")
       rules += Rules.isNotNull(f)
@@ -217,17 +210,11 @@ object OpenMetadata {
     checks ++= agg("median", "minValueForMedianInCol", "maxValueForMedianInCol")
     checks ++= agg("sum", "minValueForColSum", "maxValueForColSum")
 
-    ImportedChecks(rules.result(), checks.result())
+    RuleSet(rules.result(), checks.result())
   }
 
   /** Run everything against one frame: row rules in one projection,
     * dataset checks one bounded job each. */
-  def validate(df: DataFrame, imported: ImportedChecks,
-      numSamples: Int = 5): Seq[RuleResult] = {
-    val row = if (imported.rules.isEmpty) Nil
-      else RuleEngine.validateAllWithSamples(df, imported.rules, numSamples = numSamples)
-    row ++ imported.datasetChecks.map { case (n, f) =>
-      val ok = f(df); RuleResult(n, 1, if (ok) 0 else 1, ok)
-    }
-  }
+  def validate(df: DataFrame, imported: RuleSet, numSamples: Int = 5): Seq[RuleResult] =
+    RuleEngine.validate(df, imported, numSamples = numSamples)
 }

@@ -100,9 +100,7 @@ object DataContract {
 
   /** Dataset-level uniqueness checks (unique: true properties). */
   def uniquenessChecks(c: Contract): Seq[(String, DataFrame => Boolean)] =
-    c.properties.filter(_.unique.contains(true)).map { p =>
-      s"${p.name}_unique" -> ((df: DataFrame) => GroupRules.duplicateGroups(df, Seq(p.name)).isEmpty)
-    }
+    c.properties.filter(_.unique.contains(true)).map(p => GroupRules.uniqueCheck(p.name))
 
   /** Generator field specs from the contract — contract-driven synthetic
     * data, the reference's primary use of imported metadata. */
@@ -136,14 +134,6 @@ object DataContract {
   /** Full validation of a frame against the contract. */
   def validate(df: DataFrame, contractText: String, threshold: Double = 0.0): Seq[RuleResult] = {
     val c = parse(contractText)
-    val rowResults = {
-      val rs = toRules(c)
-      if (rs.isEmpty) Nil else RuleEngine.validateAllWithSamples(df, rs, threshold)
-    }
-    val uniq = uniquenessChecks(c).map { case (name, fn) =>
-      val ok = fn(df)
-      RuleResult(name, 1, if (ok) 0 else 1, ok)
-    }
-    rowResults ++ uniq
+    RuleEngine.validate(df, RuleSet(toRules(c), uniquenessChecks(c)), threshold)
   }
 }

@@ -72,9 +72,7 @@ object DataContractCli {
     val specs = fields.map { case (fname, f) => fieldSpec(fname, f) }
     val rules = fields.flatMap { case (fname, f) => fieldRules(fname, f) }
     val uniq = fields.collect {
-      case (fname, f) if bool(f \ "unique") || bool(f \ "primary") =>
-        s"${fname}_unique" -> ((df: DataFrame) =>
-          GroupRules.duplicateGroups(df, Seq(fname)).isEmpty)
+      case (fname, f) if bool(f \ "unique") || bool(f \ "primary") => GroupRules.uniqueCheck(fname)
     }
     CliModel(name, specs, rules, uniq)
   }
@@ -173,15 +171,8 @@ object DataContractCli {
 
   /** Validate a frame against one model: row rules in ONE projection +
     * uniqueness checks one bounded job each. */
-  def validate(df: DataFrame, m: CliModel, threshold: Double = 0.0): Seq[RuleResult] = {
-    val row = if (m.rules.isEmpty) Nil
-      else RuleEngine.validateAllWithSamples(df, m.rules, threshold)
-    val uniq = m.uniquenessChecks.map { case (n, check) =>
-      val ok = check(df)
-      RuleResult(n, 1, if (ok) 0 else 1, ok)
-    }
-    row ++ uniq
-  }
+  def validate(df: DataFrame, m: CliModel, threshold: Double = 0.0): Seq[RuleResult] =
+    RuleEngine.validate(df, RuleSet(m.rules, m.uniquenessChecks), threshold)
 
   /** The first file-typed server (local/s3/sftp) as a read/write target. */
   def fileServer(c: CliContract): Option[(String, String)] =

@@ -132,7 +132,7 @@ object GreatExpectations {
             val p = GroupRules.uniqueValuesProportion(df, col0); p >= lo && p <= hi
           }))
         case "expect_column_values_to_be_unique" =>
-          checks += (s"${col0}_unique" -> (df => GroupRules.duplicateGroups(df, Seq(col0)).isEmpty))
+          checks += GroupRules.uniqueCheck(col0)
         case other =>
           skipped += other // reference behavior: warn-and-skip unknown types
       } catch {
@@ -153,16 +153,9 @@ object GreatExpectations {
     */
   def validateSuite(df: DataFrame, suiteJson: String, threshold: Double = 0.0): Seq[RuleResult] = {
     val imported = importSuite(parseSuite(suiteJson))
-    val rowResults =
-      if (imported.rules.isEmpty) Nil
-      else RuleEngine.validateAllWithSamples(df, imported.rules, threshold)
-    val checkResults = imported.checks.map { case (name, fn) =>
-      val ok = fn(df)
-      RuleResult(name, 1, if (ok) 0 else 1, ok)
-    }
-    val skippedResults = imported.skipped.map(n =>
-      RuleResult(s"skipped_$n", 0, 0, success = true, Seq(Map("skipped" -> n))))
-    rowResults ++ checkResults ++ skippedResults
+    RuleEngine.validate(df, RuleSet(imported.rules, imported.checks), threshold) ++
+      imported.skipped.map(n =>
+        RuleResult(s"skipped_$n", 0, 0, success = true, Seq(Map("skipped" -> n))))
   }
 
   /** between with one-sided bound support (GX encodes the open side as an

@@ -50,6 +50,12 @@ object GroupRules {
       .agg(count(lit(1)).as("group_count"))
       .where(col("group_count") > 1)
 
+  /** The named uniqueness check of a unique field, as every importer
+    * registers it: `<field>_unique`, true when no value of `field` repeats
+    * (one [[duplicateGroups]] job). */
+  def uniqueCheck(field: String): (String, DataFrame => Boolean) =
+    s"${field}_unique" -> (df => duplicateGroups(df, Seq(field)).isEmpty)
+
   /** Drop rows whose group exceeds maxPerGroup — the reference's per-field
     * count overflow anti-join (`core/util/UniqueFieldsUtil.scala:69-85`).
     */

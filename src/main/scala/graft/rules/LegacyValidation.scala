@@ -38,18 +38,23 @@ object LegacyValidation {
       options: Map[String, String],
       entries: Seq[ParsedEntry]) {
     /** Rules with no preFilter — evaluated against the whole frame. */
-    def rules: Seq[Rule] = entries.filter(_.preFilter.isEmpty).flatMap(_.rules)
+    def rules: Seq[Rule] = plainRules(entries)
     /** (name, check) dataset-level validations. */
     def datasetChecks: Seq[(String, DataFrame => Boolean)] = entries.flatMap(_.datasetChecks)
     /** Rules gated by a preFilterExpr, grouped by the filter — evaluated
       * against the FILTERED frame so fractional error thresholds use the
       * filtered denominator (reference semantics). */
-    def filteredRules: Seq[(String, Seq[Rule])] =
-      entries.filter(_.preFilter.isDefined)
-        .groupBy(_.preFilter.get).toSeq.sortBy(_._1)
-        .map { case (pre, es) => pre -> es.flatMap(_.rules) }
-        .filter(_._2.nonEmpty)
+    def filteredRules: Seq[(String, Seq[Rule])] = LegacyValidation.filteredRules(entries)
   }
+
+  private def plainRules(entries: Seq[ParsedEntry]): Seq[Rule] =
+    entries.filter(_.preFilter.isEmpty).flatMap(_.rules)
+
+  private def filteredRules(entries: Seq[ParsedEntry]): Seq[(String, Seq[Rule])] =
+    entries.filter(_.preFilter.isDefined)
+      .groupBy(_.preFilter.get).toSeq.sortBy(_._1)
+      .map { case (pre, es) => pre -> es.flatMap(_.rules) }
+      .filter(_._2.nonEmpty)
 
   def parse(text: String): Seq[SourceValidations] = {
     // a validation document may also be a top-level LIST of configs
@@ -94,21 +99,11 @@ object LegacyValidation {
       threshold: Double = 0.0, numSamples: Int = 5): Seq[RuleResult] = {
     // per-validation errorThreshold (reference ValidationModels) rides on
     // each Rule — mixed-tolerance sets still evaluate in ONE projection
-    val plain = entries.filter(_.preFilter.isEmpty).flatMap(_.rules)
-    val row = if (plain.isEmpty) Nil
-      else RuleEngine.validateAllWithSamples(df, plain, threshold, numSamples)
-    val pref = entries.filter(_.preFilter.isDefined)
-      .groupBy(_.preFilter.get).toSeq.sortBy(_._1)
-      .flatMap { case (pre, es) =>
-        val rules = es.flatMap(_.rules)
-        if (rules.isEmpty) Nil
-        else RuleEngine.validateAllWithSamples(df.where(pre), rules, threshold, numSamples)
-      }
-    val ds = entries.flatMap(_.datasetChecks).map { case (name, check) =>
-      val ok = check(df)
-      RuleResult(name, 1, if (ok) 0 else 1, ok)
-    }
-    row ++ pref ++ ds
+    val groups = (df -> plainRules(entries)) +:
+      filteredRules(entries).map { case (pre, rules) => df.where(pre) -> rules }
+    groups.flatMap { case (frame, rules) =>
+      RuleEngine.validate(frame, RuleSet(rules), threshold, numSamples)
+    } ++ RuleEngine.validate(df, RuleSet(Nil, entries.flatMap(_.datasetChecks)))
   }
 
   // ---------- per-entry parsing ----------
@@ -395,8 +390,9 @@ object LegacyValidation {
         fin(s"${field}_$t", df =>
           if (agg == "median") GroupRules.medianBetween(df, field, lo, hi)
           else GroupRules.aggBetween(df, field, agg, lo, hi))
-      case "unique" => fin(s"${field}_unique",
-        df => GroupRules.duplicateGroups(df, Seq(field)).isEmpty)
+      case "unique" =>
+        val (name, check) = GroupRules.uniqueCheck(field)
+        fin(name, check)
       case "distinctInSet" => fin(s"${field}_distinctInSet",
         df => GroupRules.distinctInSet(df, field, arr(item \ "values").map(anyVal)))
       case "distinctContainsSet" => fin(s"${field}_distinctContainsSet",

@@ -41,23 +41,6 @@ object RuleEngine {
       .withColumn(KeepCol, col(DropReasonCol).isNull)
   }
 
-  /** Reference-style single-rule validation: (errorCount, totalCount,
-    * success-under-threshold). `threshold` < 1 is a fraction of rows,
-    * >= 1 an absolute count — same contract as the reference
-    * (`ValidationOperations.scala:44-51`). One job, map-side aggregated.
-    */
-  def validate(df: DataFrame, rule: Rule, threshold: Double = 0.0): RuleResult = {
-    val row = df
-      .agg(
-        count(lit(1)).as("total"),
-        count_if(!rule.strict).as("errors"))
-      .head()
-    val total = row.getLong(0)
-    val errors = row.getLong(1)
-    RuleResult(rule.name, total, errors,
-      underThreshold(errors, total, rule.threshold.getOrElse(threshold)))
-  }
-
   /** `threshold` < 1 is a fraction of rows, >= 1 an absolute error count —
     * the reference's errorThreshold contract
     * (`ValidationOperations.scala:44-51`). */
@@ -128,7 +111,35 @@ object RuleEngine {
         r.copy(samples = sampleDf.collect().toSeq.map(_.getValuesMap[Any](names)))
       }
     }
+
+  /** The one validation evaluator behind every importer (legacy and unified
+    * validation files, ODCS and Data Contract CLI contracts, Great
+    * Expectations suites, OpenMetadata test cases): the row rules through
+    * [[validateAllWithSamples]] (one pass, plus one `limit(n)` job per
+    * failed rule), then each dataset check as its own job, reported as a
+    * one-unit result (`total` 1, `errors` 0 or 1). Results keep the rule
+    * order, then the check order.
+    */
+  def validate(
+      df: DataFrame,
+      set: RuleSet,
+      threshold: Double = 0.0,
+      numSamples: Int = 5): Seq[RuleResult] = {
+    val row = if (set.rules.isEmpty) Nil
+      else validateAllWithSamples(df, set.rules, threshold, numSamples)
+    row ++ set.datasetChecks.map { case (name, check) =>
+      val ok = check(df)
+      RuleResult(name, 1, if (ok) 0 else 1, ok)
+    }
+  }
 }
+
+/** What an importer hands to [[RuleEngine.validate]]: row rules (one
+  * projection) and named dataset-level checks (one job each, e.g.
+  * [[GroupRules.uniqueCheck]]). */
+final case class RuleSet(
+    rules: Seq[Rule],
+    datasetChecks: Seq[(String, DataFrame => Boolean)] = Nil)
 
 final case class RuleResult(
     rule: String,

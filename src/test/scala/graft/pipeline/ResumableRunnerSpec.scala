@@ -20,6 +20,13 @@ class ResumableRunnerSpec extends SparkSuite {
   private def cutManifest(out: String, keep: Seq[Int]): Unit =
     Files.write(Paths.get(out, "_manifest"), keep.map(b => s"$b\n").mkString.getBytes)
 
+  /** Whole-run (rows_in, rows_out) of a metrics table, as the run report
+    * sums it. */
+  private def totals(metrics: DataFrame): (Long, Long) = {
+    val s = RunReport.summarize(metrics, "totals")
+    (s.rowsIn, s.rowsOut)
+  }
+
   private def withBucket(corpus: DataFrame, buckets: Int): DataFrame =
     corpus.withColumn("bucket", pmod(xxhash64(col("image_id")), lit(buckets)).cast("int"))
 
@@ -51,7 +58,7 @@ class ResumableRunnerSpec extends SparkSuite {
 
     // metrics: one+ row per partition per bucket, totals add up
     val metrics = resumed.readMetrics()
-    val (rowsIn, rowsOut) = Metrics.summary(metrics)
+    val (rowsIn, rowsOut) = totals(metrics)
     assert(rowsIn == 1500L)
     assert(rowsOut == output.where(col("keep")).count())
     assert(metrics.select("bucket").distinct().count() == 4)
@@ -91,8 +98,8 @@ class ResumableRunnerSpec extends SparkSuite {
       .select("image_id", "bucket", "keep", "drop_reason", "scrubbed_caption")
       .collect().map(_.toString).sorted
     assert(key(runner.readOutput()).sameElements(key(r2.readOutput())))
-    val (in1, out1) = Metrics.summary(runner.readMetrics())
-    val (in2, out2) = Metrics.summary(r2.readMetrics())
+    val (in1, out1) = totals(runner.readMetrics())
+    val (in2, out2) = totals(r2.readMetrics())
     assert(in1 == 1500L && in1 == in2 && out1 == out2)
   }
 
@@ -114,7 +121,7 @@ class ResumableRunnerSpec extends SparkSuite {
     // the empty write replaced no bucket: the committed rows are all there
     val output = resumed.readOutput()
     assert(output.count() == 5L)
-    assert(Metrics.summary(resumed.readMetrics()) == ((5L, output.where(col("keep")).count())))
+    assert(totals(resumed.readMetrics()) == ((5L, output.where(col("keep")).count())))
     assert(resumed.readMetrics().where(col("run_id") =!= "run0").isEmpty)
   }
 
@@ -203,7 +210,7 @@ class ResumableRunnerSpec extends SparkSuite {
     val corpus = SyntheticImages.generate(spark, 2000L, seed = 11L, partitions = 5)
     val annotated = QualityFilter.run(spark, corpus).cache()
     val m = Metrics.partitionMetrics(annotated, "test_run")
-    val (rowsIn, rowsOut) = Metrics.summary(m)
+    val (rowsIn, rowsOut) = totals(m)
     assert(rowsIn == 2000L)
     assert(rowsOut == annotated.where(col("keep")).count())
     // drop_reasons maps sum to total drops
@@ -274,7 +281,7 @@ class ResumableRunnerSpec extends SparkSuite {
     assert(runner.completedBuckets == (0 until 4).toSet)
     assert(runner.readOutput().isEmpty)
     assert(runner.readMetrics().isEmpty)
-    assert(Metrics.summary(runner.readMetrics()) == ((0L, 0L)))
+    assert(totals(runner.readMetrics()) == ((0L, 0L)))
     val s = RunReport.write(runner.readMetrics(), "runE", out)
     assert(s.rowsIn == 0L && s.rowsOut == 0L && s.partitions == 0L && s.dropReasons.isEmpty)
   }

@@ -56,6 +56,31 @@ class PlanDocumentSpec extends SparkSuite {
        |sink: {path: "$out"}
        |""".stripMargin
 
+  /** LegacyPlanSpec's plan sample: the reference's legacy plan, whose tasks
+    * name task files (`dataSourceName`, no `fields`). */
+  private val legacyPlanYaml =
+    """name: "balance_transaction_plan"
+      |description: "Create balances then transactions"
+      |tasks:
+      |  - name: "parquet_transactions"
+      |    dataSourceName: "parquet"
+      |    enabled: true
+      |  - name: "disabled_task"
+      |    dataSourceName: "csv"
+      |    enabled: false
+      |sinkOptions:
+      |  seed: "7"
+      |  foreignKeys:
+      |    - source:
+      |        dataSource: "parquet"
+      |        step: "balances"
+      |        fields: [ "account_number" ]
+      |      generate:
+      |        - dataSource: "parquet"
+      |          step: "transactions"
+      |          fields: [ "account_number" ]
+      |""".stripMargin
+
   private def tmp(prefix: String): String = Files.createTempDirectory(prefix).toString
 
   test("parse: each dialect, in JSON and in YAML, picks the same runner") {
@@ -126,6 +151,23 @@ class PlanDocumentSpec extends SparkSuite {
       assert(send(p, "PUT", "/plans/bad", "][not-json").statusCode() == 200)
       val run = send(p, "POST", "/plans/bad/run")
       assert(run.statusCode() == 500 && run.body().contains(""""error":"""), run.body())
+      val runs = graft.util.Jsons.parse(send(p, "GET", "/runs").body()).children
+      assert(runs.size == 1)
+      assert(graft.util.Jsons.str(runs.head \ "status").contains("error"), runs)
+    } finally srv.stop()
+  }
+
+  test("a legacy plan is an IllegalArgumentException that names graft.Main --legacy, at every door") {
+    val e = intercept[IllegalArgumentException](PlanDocument.parse(legacyPlanYaml))
+    assert(e.getMessage.contains("graft.Main --legacy <plan> <taskFolder>"), e.getMessage)
+    val srv = new RestServer(spark).start()
+    try {
+      val p = srv.boundPort
+      val plan = send(p, "POST", "/plan", legacyPlanYaml)
+      assert(plan.statusCode() == 400 && plan.body().contains("--legacy"), plan.body())
+      assert(send(p, "PUT", "/plans/legacy", legacyPlanYaml).statusCode() == 200)
+      val run = send(p, "POST", "/plans/legacy/run")
+      assert(run.statusCode() == 500 && run.body().contains("--legacy"), run.body())
       val runs = graft.util.Jsons.parse(send(p, "GET", "/runs").body()).children
       assert(runs.size == 1)
       assert(graft.util.Jsons.str(runs.head \ "status").contains("error"), runs)

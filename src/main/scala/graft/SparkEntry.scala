@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   * Each `queries` entry is one operator from SURVEY.md §2 / the pipeline,
@@ -9,9 +8,6 @@ import org.apache.spark.sql.functions._
   * DuckDB-equivalent SQL the driver hash-compares against.
   */
 object SparkEntry {
-
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
 
   /** Flagship: the full quality-filter pipeline over a synthesized corpus at
     * tiny scale; driver smoke-checks rows>0.

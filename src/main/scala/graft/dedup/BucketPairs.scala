@@ -1,5 +1,6 @@
 package graft.dedup
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions.{col, greatest, least}
 import org.apache.spark.sql.types.{StructField, StructType}
@@ -61,22 +62,41 @@ private[graft] abstract class BucketPairs(maxBucket: Long) {
 
 private[graft] object BucketPairs {
 
-  /** The one pair shape, `rows` `(key, id, payload...)` → `(a_id, b_id,
-    * values...)` with `a_id < b_id` for any orderable id type: one
-    * exchange, hash-partitioned on `key` into the session's default
-    * parallelism (explicit, so AQE cannot coalesce the pair stage into one
-    * task) and sorted within each partition on `key`, then `kernel` (one
-    * per task) over the runs. No join.
+  /** The one exchange: `rows` `(key, id, payload...)` hash-partitioned on
+    * `key` into the session's default parallelism (explicit, so AQE cannot
+    * coalesce the pair stage into one task) and sorted within each
+    * partition on `key`, so each bucket is one run of one partition.
     */
-  def frame(rows: DataFrame, values: Seq[StructField])(kernel: () => BucketPairs): DataFrame = {
-    val out = StructType(Seq("a_id", "b_id").map(n => rows.schema(1).copy(name = n)) ++ values)
+  def runs(rows: DataFrame): DataFrame = {
     val key = col(rows.columns.head)
-    rows
-      .repartition(rows.sparkSession.sparkContext.defaultParallelism, key)
-      .sortWithinPartitions(key)
-      .mapPartitions(kernel().pairs(_))(Encoders.row(out))
+    rows.repartition(rows.sparkSession.sparkContext.defaultParallelism, key).sortWithinPartitions(key)
+  }
+
+  /** The one pair shape, `rows` `(key, id, payload...)` → `(a_id, b_id,
+    * values...)` with `a_id < b_id` for any orderable id type: `kernel`
+    * (one per task) over the [[runs]] of `rows`, or over `read`, those runs
+    * already read as an RDD, whose map stage a second reader then skips.
+    * No join.
+    */
+  def frame(rows: DataFrame, values: Seq[StructField], read: Option[RDD[Row]] = None)(
+      kernel: () => BucketPairs): DataFrame = {
+    val out = StructType(Seq("a_id", "b_id").map(n => rows.schema(1).copy(name = n)) ++ values)
+    read.fold(runs(rows).mapPartitions(kernel().pairs(_))(Encoders.row(out)))(r =>
+      rows.sparkSession.createDataFrame(r.mapPartitions(kernel().pairs(_)), out))
       .select(least(col("a_id"), col("b_id")).as("a_id") +:
         greatest(col("a_id"), col("b_id")).as("b_id") +: values.map(f => col(f.name)): _*)
       .where(col("a_id") < col("b_id"))
   }
+
+  /** The keys of the buckets in `runs` of more than `maxBucket` rows, NULL
+    * ids included: one job, exact because a bucket is one run. */
+  def overCap(runs: RDD[Row], maxBucket: Long): Array[Any] = runs.mapPartitions { rows =>
+    val in = rows.buffered
+    Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+      val key = in.head.get(0)
+      var size = 0L
+      while (in.hasNext && java.util.Objects.deepEquals(in.head.get(0), key)) { in.next(); size += 1 }
+      if (size > maxBucket) Some(key) else None
+    }
+  }.collect()
 }

@@ -327,26 +327,6 @@ object Dedup {
   /** Hamming distance between two 64-bit simhashes as a Column. */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** Over-cap bucket keys for [[phashNearDup]]'s capped-band mask, read
-    * with ONE bounded collect whose size picks the plan: no keys (the
-    * common case) → None, and the mask is a constant 0 with no join; up
-    * to 1M keys → a local relation, broadcast into the mask's semi-join;
-    * more (the rows/maxBucket worst case can exceed driver/broadcast limits
-    * at 10^12 banded rows) → the key frame itself, for a shuffle join.
-    * Nothing is persisted: every reader of the keys reads the local
-    * relation, so the count aggregation runs once and no cached frame
-    * outlives the call.
-    */
-  private def overCapKeys(overKeys: DataFrame): Option[DataFrame] = {
-    val got = overKeys.limit(MaxLocalKeys + 1).collect()
-    if (got.isEmpty) None
-    else if (got.length <= MaxLocalKeys)
-      Some(broadcast(overKeys.sparkSession.createDataFrame(
-        java.util.Arrays.asList(got: _*), overKeys.schema)))
-    else Some(overKeys)
-  }
-  private final val MaxLocalKeys = 1000000
-
   // ---------- perceptual-hash (phash) near-dup ----------
 
   /** Near-duplicate pairs by hamming distance over a perceptual hash — the
@@ -360,19 +340,22 @@ object Dedup {
     * a_id < b_id, one row per pair (`idCol` is a key); NULL hashes and NULL
     * ids are never paired.
     *
-    * One exchange into the [[BucketPairs]] kernel: the banded rows
-    * `(bucket, id, band, hash, cap)`, keyed by the packed `(band, seg)`,
-    * form one run per bucket, and the kernel compares each run's members
-    * directly: no join over the banded rows.
+    * One exchange into the [[BucketPairs]] kernel, read twice: the banded
+    * rows `(bucket, id, band, hash)`, keyed by the packed `(band, seg)`,
+    * are shuffled once, at call time, into one run per bucket. One job
+    * counts the runs (NULL ids too, as q28's window count does); the
+    * caller's action runs only the kernel, which pairs each run's members
+    * directly. No join, nothing persisted.
     *
     * A pair within maxHamming collides on every band where its hashes'
     * XOR has a zero segment. It is kept only on its LOWEST uncapped
     * colliding band: a pair in bucket b survives when every band b' < b
     * either has a non-zero XOR segment or is over the cap. Both docs share
-    * a colliding segment, so one doc's capped-band mask decides for both.
-    * That is the capped pair set (q28: `count(*) OVER (band, seg) <=
-    * maxBucket`, then DISTINCT) without a dedup shuffle; the mask is a
-    * constant 0, and costs no join, unless some bucket is over the cap.
+    * a colliding segment, so one doc's capped-band mask, derived from its
+    * hash, decides for both. That is the capped pair set (q28: `count(*)
+    * OVER (band, seg) <= maxBucket`, then DISTINCT) without a dedup
+    * shuffle. The over-cap keys, at most `banded rows / (maxBucket + 1)`,
+    * ship as one broadcast variable; with none, every mask is 0.
     */
   def phashNearDup(
       df: DataFrame,
@@ -387,41 +370,28 @@ object Dedup {
     // `1L << 64` is 1 (shifts are mod 64), so the full-width mask is built
     // by an unsigned right shift instead
     val mask = -1L >>> (64 - width)
-    val base = df.select(col(idCol).as("a_id"), col(phashCol).cast("long").as("a_ph"))
+    // one row per (doc, band): (bucket, a_id, band, a_ph). The key is one
+    // long, (band, seg) packed, so the sorter radix-sorts it instead of
+    // comparing two-key rows; with one 64-bit band the band is 0 and the
+    // shift by 64 (a shift by 0) leaves seg as it is
+    val rows = df.select(col(idCol).as("a_id"), col(phashCol).cast("long").as("a_ph"))
       .where(col("a_ph").isNotNull)
-    // one row per (doc, band): (band, seg, a_id, a_ph, cap)
-    def banded(f: DataFrame, cap: Column): DataFrame = f.select(
-      posexplode(array((0 until bands).map(b =>
+      .select(posexplode(array((0 until bands).map(b =>
         call_function("shiftrightunsigned", col("a_ph"), lit(b * width)).bitwiseAND(lit(mask))): _*))
-        .as(Seq("band", "seg")),
-      col("a_id"), col("a_ph"), cap.as("cap"))
-    // over-cap segments via partial-agg counts (≤ rows/maxBucket keys by
-    // construction). NULL ids count toward their bucket, as in q28's window
-    // count
-    val uncapped = banded(base, lit(0L))
-    val overSegs = overCapKeys(uncapped.groupBy(col("band"), col("seg"))
-      .agg(count(lit(1)).as("__bc"))
-      .where(col("__bc") > maxBucket)
-      .select(col("band"), col("seg")))
-    // bit b' of cap set = the hash's band-b' segment is over the cap
-    val rows = overSegs.fold(uncapped) { keys =>
-      val caps = uncapped.join(keys, Seq("band", "seg"), "left_semi")
-        .groupBy(col("a_ph"))
-        .agg(bit_or(call_function("shiftleft", lit(1L), col("band"))).as("cap"))
-      banded(base.join(caps, Seq("a_ph"), "left"), coalesce(col("cap"), lit(0L)))
-    }
-    // the key is one long, (band, seg) packed, so the sorter radix-sorts
-    // it instead of comparing two-key rows; with one 64-bit band the band
-    // is 0 and the shift by 64 (a shift by 0) leaves seg as it is
-    val bucket = call_function("shiftleft", col("band").cast("long"), lit(width)).bitwiseOR(col("seg"))
-    BucketPairs.frame(rows.select(bucket.as("bucket"), col("a_id"), col("band"), col("a_ph"), col("cap")),
-      Seq(StructField("dist", IntegerType, nullable = false)))(
-      () => new PhashPairs(maxHamming, width, maxBucket))
+        .as(Seq("band", "seg")), col("a_id"), col("a_ph"))
+      .select(call_function("shiftleft", col("band").cast("long"), lit(width)).bitwiseOR(col("seg"))
+        .as("bucket"), col("a_id"), col("band"), col("a_ph"))
+    val runs = BucketPairs.runs(rows).rdd
+    val over = BucketPairs.overCap(runs, maxBucket).map(_.asInstanceOf[Long]).sorted
+    val shared = if (over.isEmpty) None else Some(runs.sparkContext.broadcast(over))
+    BucketPairs.frame(rows, Seq(StructField("dist", IntegerType, nullable = false)), Some(runs))(
+      () => new PhashPairs(maxHamming, width, maxBucket, shared.fold(Array.emptyLongArray)(_.value)))
   }
 
   /** [[BucketPairs]] for [[phashNearDup]], on primitive arrays: within
-    * `maxHamming`, on its lowest uncapped colliding band (first doc's cap). */
-  private final class PhashPairs(maxHamming: Int, width: Int, maxBucket: Long)
+    * `maxHamming`, on its lowest uncapped colliding band (first doc's
+    * mask). `over` holds the over-cap bucket keys, sorted. */
+  private final class PhashPairs(maxHamming: Int, width: Int, maxBucket: Long, over: Array[Long])
       extends BucketPairs(maxBucket) {
     private val mask = -1L >>> (64 - width)
     private var band = 0
@@ -434,12 +404,23 @@ object Dedup {
       }
       band = row.getInt(2)
       phs(m) = row.getLong(3)
-      caps(m) = row.getLong(4)
+      caps(m) = if (over.isEmpty) 0L else capMask(phs(m))
     }
     protected def pair(i: Int, j: Int): Row = {
       val xor = phs(i) ^ phs(j)
       val dist = java.lang.Long.bitCount(xor)
       if (dist <= maxHamming && lowest(xor, caps(i))) Row(ids(i), ids(j), dist) else null
+    }
+    // bit c set = the hash's bucket on band c < `band` is over the cap
+    private def capMask(ph: Long): Long = {
+      var m = 0L
+      var c = 0
+      while (c < band) {
+        val key = (c.toLong << width) | ((ph >>> (c * width)) & mask)
+        if (java.util.Arrays.binarySearch(over, key) >= 0) m |= 1L << c
+        c += 1
+      }
+      m
     }
     // true when no band below `band` is an uncapped colliding one
     private def lowest(xor: Long, cap: Long): Boolean = {

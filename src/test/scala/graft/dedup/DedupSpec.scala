@@ -273,19 +273,72 @@ class DedupSpec extends SparkSuite {
     }
   }
 
-  test("phashNearDup: one exchange, no join, and a pair stage as wide as the session") {
-    val parallelism = spark.sparkContext.defaultParallelism
-    // nothing is over the default cap, so no key join is planned
-    val pairs = Dedup.phashNearDup(phashCorpus, "id", "ph", maxHamming = 3)
-    val group = "phash-plan-shape"
-    val (n, _) = withJobCount(group)(assertPairShape("phash", pairs))
+  test("phashNearDup: one shuffle per call, and the action runs only the kernel stage") {
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val parallelism = sc.defaultParallelism
+    assume(parallelism > 1)
+    val (pin, marker) = ("phash-one-shuffle", "phash-one-shuffle-marker")
+    def group(j: SparkListenerJobStart) = j.properties.getProperty("spark.jobGroup.id")
+    // every job (in any group but the marker's) and every completed stage
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
+    val markers = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      private val markerIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (group(e) == marker) markerIds.add(e.jobId) else jobs.add(e)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (markerIds.contains(e.jobId)) markers.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = stages.add(e.stageInfo)
+    }
+    // the bus delivers in order: once the listener has seen a marker job
+    // end, it has seen every event posted before it
+    var settled = 0
+    def settle(): Unit = {
+      withJobCount(marker)(sc.parallelize(Seq(1), 1).count())
+      settled += 1
+      val deadline = System.nanoTime() + 30000000000L
+      while (markers.get < settled && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(markers.get == settled)
+    }
+    // `body`'s jobs and the completed stages of those jobs
+    def phase[T](body: => T): (T, Seq[SparkListenerJobStart], Seq[StageInfo]) = {
+      settle()
+      jobs.clear()
+      stages.clear()
+      val res = withJobCount(pin)(body)._1
+      settle()
+      val js = jobs.asScala.toSeq
+      val ids = js.flatMap(_.stageIds).toSet
+      (res, js, stages.asScala.toSeq.filter(s => ids(s.stageId)))
+    }
+    sc.addSparkListener(listener)
+    val ((pairs, callJobs, callStages), (n, actionJobs, actionStages)) = try {
+      val call = phase(Dedup.phashNearDup(phashCorpus, "id", "ph", maxHamming = 3, maxBucket = 6))
+      (call, phase(call._1.collect().length))
+    } finally sc.removeSparkListener(listener)
     assert(n > 0)
-    // the pair stage is the last job's result stage; AQE must not have
-    // coalesced it to one task
-    val tracker = spark.sparkContext.statusTracker
-    val lastJob = tracker.getJobIdsForGroup(group).max
-    val pairStage = tracker.getJobInfo(lastJob).get.stageIds.max
-    assert(tracker.getStageInfo(pairStage).get.numTasks == parallelism)
+    // no join: no job of a broadcast exchange (it runs in a group of its
+    // own), no second map stage (a shuffle join), none in the returned plan
+    assert((callJobs ++ actionJobs).forall(j => group(j) == pin))
+    val helper = new AdaptiveSparkPlanHelper {}
+    assert(helper.collect(pairs.queryExecution.executedPlan) { case j: BaseJoinExec => j }.isEmpty)
+    // the call computes the one shuffle map stage (the banded rows) and
+    // counts its runs; the action's one job reads the same shuffle, skips
+    // its map stage and runs only the kernel, as wide as the session
+    def writesShuffle(s: StageInfo) = s.taskMetrics.shuffleWriteMetrics.recordsWritten > 0
+    val mapStages = callStages.filter(writesShuffle)
+    assert(mapStages.length == 1 && callJobs.length == 2, callStages.map(_.name))
+    assert(actionJobs.length == 1 && !actionStages.exists(writesShuffle), actionJobs.map(_.stageIds))
+    // the action's job numbers the map stage anew and skips it: same RDDs
+    val skipped = actionJobs.head.stageInfos.filterNot(s => actionStages.exists(_.stageId == s.stageId))
+    assert(skipped.map(_.rddInfos.map(_.id).toSet) == Seq(mapStages.head.rddInfos.map(_.id).toSet))
+    assert(actionStages.map(_.stageId) == Seq(actionJobs.head.stageIds.max), actionStages.map(_.name))
+    assert(actionStages.head.numTasks == parallelism)
   }
 
   test("minhashCandidates, jaccardPairs, nearDupPairs: one exchange into the kernel, no join") {
@@ -356,6 +409,45 @@ class DedupSpec extends SparkSuite {
     assert(near.exists { case (_, _, x, y) =>
       val c = colliding(x, y); !uncapped(x, c.head) && c.exists(uncapped(x, _)) })
     assert(expected.size < near.length)
+  }
+
+  test("phashNearDup: many buckets over the cap, each member's capped bands read from its hash") {
+    val docs = phashCorpus.as[(Long, Long)].collect().toSeq
+    val (hA, hB, hC, hD) =
+      (0x1111222233334444L, 0x5555666677778888L, 0x99990000bbbbccccL, 0x0f0f1e1e2d2d3c3cL)
+    for (maxBucket <- Seq(1, 2)) {
+      // the corpus (most buckets over a cap this low), NULL hashes, a NULL
+      // id, a duplicated id; exact-hash buckets of maxBucket docs, of
+      // maxBucket docs plus a NULL id and of maxBucket + 1 docs; and a pair
+      // (2300, 2301) colliding on bands 0-2 whose band-0 and band-1 buckets
+      // a NULL-id row tips over a cap of 2, so it comes back from band 2
+      val edge: Seq[(Option[Long], Option[Long])] =
+        docs.map { case (i, p) => (Some(i), Some(p)) } ++
+          Seq((Some(1000L), None), (None, None), (Some(5L), Some(docs(5)._2 ^ 1L))) ++
+          (0 until maxBucket).map(k => (Some(2000L + k), Some(hA))) ++
+          (0 until maxBucket).map(k => (Some(2100L + k), Some(hB))) ++ Seq((None, Some(hB))) ++
+          (0 to maxBucket).map(k => (Some(2200L + k), Some(hC))) ++
+          Seq((Some(2300L), Some(hD)), (Some(2301L), Some(hD ^ (1L << 63))), (None, Some(hD ^ (1L << 40))))
+      val over = edge.collect { case (_, Some(h)) => h }
+        .flatMap(h => (0 until 4).map(b => (b, (h >>> (16 * b)) & 0xffffL)))
+        .groupBy(identity).count(_._2.length > maxBucket)
+      assert(over > 100, s"$over buckets over a cap of $maxBucket")
+      val expected = cappedPairs(edge, maxHamming = 3, bits = 64, maxBucket)
+      if (maxBucket == 2) {
+        assert(expected.contains((2300L, 2301L, 1)) && expected.contains((2000L, 2001L, 0)))
+        assert(!expected.exists(p => p._1 >= 2100L && p._1 < 2300L))
+      }
+      val asText = edge.map { case (i, p) => (i.map(_.toString), p) }
+      val expectedText = cappedPairs(asText, maxHamming = 3, bits = 64, maxBucket)
+      for (parts <- Seq(1, 8)) {
+        val longs = Dedup.phashNearDup(edge.toDF("id", "ph").repartition(parts), "id", "ph",
+          maxHamming = 3, maxBucket = maxBucket).as[(Long, Long, Int)].collect()
+        assert(longs.sorted.toSeq == expected.sorted, s"long ids, maxBucket $maxBucket, $parts partitions")
+        val texts = Dedup.phashNearDup(asText.toDF("id", "ph").repartition(parts), "id", "ph",
+          maxHamming = 3, maxBucket = maxBucket).as[(String, String, Int)].collect()
+        assert(texts.sorted.toSeq == expectedText.sorted, s"string ids, maxBucket $maxBucket, $parts partitions")
+      }
+    }
   }
 
   test("phashNearDup: capped calls leave no cached frame behind") {

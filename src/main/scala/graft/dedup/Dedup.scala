@@ -2,7 +2,9 @@ package graft.dedup
 
 import graft.functions.{TextFunctions => TF}
 import graft.util.Chars.isRegexSpace
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -219,7 +221,7 @@ object Dedup {
   }
 
   /** [[BucketPairs]] for [[minhashCandidates]]: n_equal >= minEqual. */
-  private final class MinhashPairs(minEqual: Int, maxBucket: Long) extends BucketPairs(maxBucket) {
+  private final class MinhashPairs(minEqual: Int, maxBucket: Long) extends BucketPairs.OfRows(maxBucket) {
     private val sigs = scala.collection.mutable.ArrayBuffer[Array[Long]]()
     protected def hold(m: Int, row: Row): Unit = {
       val sig = row.getSeq[Long](2).toArray
@@ -340,12 +342,17 @@ object Dedup {
     * a_id < b_id, one row per pair (`idCol` is a key); NULL hashes and NULL
     * ids are never paired.
     *
-    * One exchange into the [[BucketPairs]] kernel, read twice: the banded
-    * rows `(bucket, id, band, hash)`, keyed by the packed `(band, seg)`,
-    * are shuffled once, at call time, into one run per bucket. One job
-    * counts the runs (NULL ids too, as q28's window count does); the
-    * caller's action runs only the kernel, which pairs each run's members
-    * directly. No join, nothing persisted.
+    * One exchange into the [[BucketPairs]] kernel, read as Catalyst rows
+    * (`toRdd`, no `Row` conversion): the banded rows `(bucket, id, band,
+    * hash)`, keyed by the packed `(band, seg)`, are shuffled once, at call
+    * time, into one run per bucket. A hashed doc gives exactly one row per
+    * band, so no bucket holds more than `rows / bands` rows, read from the
+    * exchange's own runtime row count. When that bound is within
+    * `maxBucket`, no bucket is over the cap and nothing is counted: the
+    * call runs one job, the map stage. Otherwise, or with no statistic
+    * (AQE off), one more job counts the runs (NULL ids too, as q28's window
+    * count does). The caller's action runs only the kernel, which pairs
+    * each run's members directly. No join, nothing persisted.
     *
     * A pair within maxHamming collides on every band where its hashes'
     * XOR has a zero segment. It is kept only on its LOWEST uncapped
@@ -381,23 +388,43 @@ object Dedup {
         .as(Seq("band", "seg")), col("a_id"), col("a_ph"))
       .select(call_function("shiftleft", col("band").cast("long"), lit(width)).bitwiseOR(col("seg"))
         .as("bucket"), col("a_id"), col("band"), col("a_ph"))
-    val runs = BucketPairs.runs(rows).rdd
-    val over = BucketPairs.overCap(runs, maxBucket).map(_.asInstanceOf[Long]).sorted
-    val shared = if (over.isEmpty) None else Some(runs.sparkContext.broadcast(over))
-    BucketPairs.frame(rows, Seq(StructField("dist", IntegerType, nullable = false)), Some(runs))(
-      () => new PhashPairs(maxHamming, width, maxBucket, shared.fold(Array.emptyLongArray)(_.value)))
+    val runs = BucketPairs.runs(rows).queryExecution
+    val read = runs.toRdd // under AQE this runs the map stage, now
+    // a hashed doc gives one row per band, so no (band, seg) bucket holds
+    // more than rows / bands; with that bound within the cap, no bucket is
+    // over it and nothing is counted
+    val fits = shuffledRows(runs).exists(_ / bands <= maxBucket)
+    val over = if (fits) Array.emptyLongArray else BucketPairs.overCap(read, maxBucket).sorted
+    val shared = if (over.isEmpty) None else Some(read.sparkContext.broadcast(over))
+    val idType = rows.schema("a_id").dataType
+    BucketPairs.frame(rows, Seq(StructField("dist", IntegerType, nullable = false)), read)(() =>
+      new PhashPairs(maxHamming, width, maxBucket, idType, shared.fold(Array.emptyLongArray)(_.value)))
   }
 
-  /** [[BucketPairs]] for [[phashNearDup]], on primitive arrays: within
-    * `maxHamming`, on its lowest uncapped colliding band (first doc's
-    * mask). `over` holds the over-cap bucket keys, sorted. */
-  private final class PhashPairs(maxHamming: Int, width: Int, maxBucket: Long, over: Array[Long])
-      extends BucketPairs(maxBucket) {
+  /** The rows the top shuffle of `qe` wrote, once AQE has run it as a
+    * query stage (its runtime statistic, as AQE's own rules read it); none
+    * without AQE. An exchange inside the input is a stage below it. */
+  private def shuffledRows(qe: org.apache.spark.sql.execution.QueryExecution): Option[BigInt] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, ShuffleQueryStageExec}
+    new AdaptiveSparkPlanHelper {}.collectFirst(qe.executedPlan) {
+      case s: ShuffleQueryStageExec => s.getRuntimeStatistics.rowCount
+    }.flatten
+  }
+
+  /** [[BucketPairs]] for [[phashNearDup]], on Catalyst rows and primitive
+    * arrays: within `maxHamming`, on its lowest uncapped colliding band
+    * (first doc's mask). `over` holds the over-cap bucket keys, sorted. */
+  private[dedup] final class PhashPairs(maxHamming: Int, width: Int, maxBucket: Long, idType: DataType,
+      over: Array[Long]) extends BucketPairs[InternalRow](maxBucket) {
     private val mask = -1L >>> (64 - width)
+    private val idOf = InternalRow.getAccessor(idType)
     private var band = 0
     private var phs = new Array[Long](64)
     private var caps = new Array[Long](64)
-    protected def hold(m: Int, row: Row): Unit = {
+    protected def key(row: InternalRow): Any = row.getLong(0)
+    // a string id is a view into the sorted run's shared buffer: copied
+    protected def id(row: InternalRow): Any = InternalRow.copyValue(idOf(row, 1))
+    protected def hold(m: Int, row: InternalRow): Unit = {
       if (m == phs.length) {
         phs = java.util.Arrays.copyOf(phs, 2 * m)
         caps = java.util.Arrays.copyOf(caps, 2 * m)
@@ -406,10 +433,12 @@ object Dedup {
       phs(m) = row.getLong(3)
       caps(m) = if (over.isEmpty) 0L else capMask(phs(m))
     }
-    protected def pair(i: Int, j: Int): Row = {
+    protected def pair(i: Int, j: Int): InternalRow = {
       val xor = phs(i) ^ phs(j)
       val dist = java.lang.Long.bitCount(xor)
-      if (dist <= maxHamming && lowest(xor, caps(i))) Row(ids(i), ids(j), dist) else null
+      if (dist <= maxHamming && lowest(xor, caps(i)))
+        new GenericInternalRow(Array[Any](ids(i), ids(j), dist))
+      else null
     }
     // bit c set = the hash's bucket on band c < `band` is over the cap
     private def capMask(ph: Long): Long = {
@@ -548,9 +577,12 @@ object Dedup {
     * union-find task ([[SpanningForest.labels]]): no shuffle, no rounds. */
   private def oneTaskLabels(eA: DataFrame, idType: DataType): DataFrame = {
     val asLong = StructType(Seq(StructField("id", LongType), StructField("label", LongType)))
-    val labels = eA.select(col("src").cast(LongType), col("dst").cast(LongType))
+    val ends = eA.select(col("src").cast(LongType), col("dst").cast(LongType)).coalesce(1)
+    // the wrapped rows state their one partition again, so the labels keep
+    // SinglePartition and an aggregate over them needs no exchange
+    val labels = org.apache.spark.sql.GraftSqlBridge.internalFrame(eA.sparkSession,
+        ends.queryExecution.toRdd.mapPartitions(SpanningForest.labels), asLong)
       .coalesce(1)
-      .mapPartitions(SpanningForest.labels)(Encoders.row(asLong))
       .select(col("id").cast(idType), col("label").cast(idType))
       .localCheckpoint(true)
     freeCheckpoint(eA)
@@ -725,8 +757,9 @@ object Dedup {
       case idType if integral(idType) =>
         val asLong = StructType(Seq(
           StructField("a_id", LongType), StructField("b_id", LongType)))
-        ends.select(col("a_id").cast(LongType), col("b_id").cast(LongType))
-          .mapPartitions(SpanningForest.contract)(Encoders.row(asLong))
+        val longs = ends.select(col("a_id").cast(LongType), col("b_id").cast(LongType))
+        org.apache.spark.sql.GraftSqlBridge.internalFrame(edges.sparkSession,
+            longs.queryExecution.toRdd.mapPartitions(SpanningForest.contract), asLong)
           .select(col("a_id").cast(idType), col("b_id").cast(idType))
       case _ => ends
     }
@@ -761,7 +794,7 @@ object Dedup {
   }
 
   /** [[BucketPairs]] for [[jaccardPairs]]: one common token. */
-  private final class JaccardPairs extends BucketPairs(Long.MaxValue) {
+  private final class JaccardPairs extends BucketPairs.OfRows(Long.MaxValue) {
     private val order: java.util.Comparator[Array[Byte]] = java.util.Arrays.compareUnsigned(_, _)
     private val toks = scala.collection.mutable.ArrayBuffer[Array[Array[Byte]]]()
     protected def hold(m: Int, row: Row): Unit = {

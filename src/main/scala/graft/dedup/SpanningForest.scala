@@ -1,8 +1,11 @@
 package graft.dedup
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 
-/** Union-find passes for [[Dedup.connectedComponents]].
+/** Union-find passes for [[Dedup.connectedComponents]], on Catalyst rows
+  * of two long ids: the caller reads its input plan's own rows (`toRdd`)
+  * and wraps the output as it is, so no row is converted to or from `Row`.
   *
   * [[contract]] is the per-partition spanning-forest pre-pass: a partition's
   * `(a_id, b_id)` edges become one `(x, root(x))` edge per non-root node,
@@ -17,7 +20,8 @@ import org.apache.spark.sql.Row
   *    self-loops needs at least one and emits one `(a, a)`, so it stays in
   *    the caller's node set;
   *  - rows with a NULL endpoint pass through unchanged (they connect
-  *    nothing, but the caller's labelling of them is defined on the raw row);
+  *    nothing, but the caller's labelling of them is defined on the raw row),
+  *    each held as a copy: an input row may share its plan's buffer;
   *  - memory is bounded: after [[MaxNodes]] distinct nodes (plus passed-
   *    through rows) the chunk is emitted and a fresh union-find starts. The
   *    union of per-chunk forests still spans the same components, so a flush
@@ -35,15 +39,15 @@ private[dedup] object SpanningForest {
     * each, so a task holds at most ~25 MB. */
   final val MaxNodes = 1 << 18
 
-  def contract(rows: Iterator[Row]): Iterator[Row] =
-    new Iterator[Iterator[Row]] {
+  def contract(rows: Iterator[InternalRow]): Iterator[InternalRow] =
+    new Iterator[Iterator[InternalRow]] {
       def hasNext: Boolean = rows.hasNext
-      def next(): Iterator[Row] = {
+      def next(): Iterator[InternalRow] = {
         val uf = new UnionFind
-        val nulls = scala.collection.mutable.ArrayBuffer[Row]()
+        val nulls = scala.collection.mutable.ArrayBuffer[InternalRow]()
         while (rows.hasNext && uf.size + nulls.size < MaxNodes) {
           val r = rows.next()
-          if (r.isNullAt(0) || r.isNullAt(1)) nulls += r
+          if (r.isNullAt(0) || r.isNullAt(1)) nulls += r.copy()
           else uf.add(r.getLong(0), r.getLong(1))
         }
         nulls.iterator ++ uf.forest
@@ -56,7 +60,7 @@ private[dedup] object SpanningForest {
     * itself is labelled with the smallest label among its partners (NULL if
     * it has none). A node seen only in self-loops keeps its own id.
     */
-  def labels(rows: Iterator[Row]): Iterator[Row] = {
+  def labels(rows: Iterator[InternalRow]): Iterator[InternalRow] = {
     val uf = new UnionFind
     val nullPartners = scala.collection.mutable.ArrayBuffer[Long]()
     var nullNode = false
@@ -67,8 +71,10 @@ private[dedup] object SpanningForest {
       } else uf.add(r.getLong(0), if (r.isNullAt(1)) r.getLong(0) else r.getLong(1))
     }
     val nullLabel = if (nullPartners.isEmpty) null else nullPartners.iterator.map(uf.min).min
-    uf.labels ++ (if (nullNode) Iterator.single(Row(null, nullLabel)) else Iterator.empty)
+    uf.labels ++ (if (nullNode) Iterator.single(row(null, nullLabel)) else Iterator.empty)
   }
+
+  private def row(a: Any, b: Any): InternalRow = new GenericInternalRow(Array(a, b))
 
   /** Union-find over dense node indices; the root of a set is its smallest
     * id, so `find` answers the component minimum directly. */
@@ -113,12 +119,12 @@ private[dedup] object SpanningForest {
     /** The smallest id in the component of a known node. */
     def min(x: Long): Long = ids(find(index(x)))
 
-    def labels: Iterator[Row] = Iterator.range(0, size).map(i => Row(ids(i), ids(find(i))))
+    def labels: Iterator[InternalRow] = Iterator.range(0, size).map(i => row(ids(i), ids(find(i))))
 
-    def forest: Iterator[Row] = Iterator.range(0, size).flatMap { i =>
+    def forest: Iterator[InternalRow] = Iterator.range(0, size).flatMap { i =>
       val r = find(i)
-      if (r != i) Iterator.single(Row(ids(i), ids(r)))
-      else if (!linked(i)) Iterator.single(Row(ids(i), ids(i)))
+      if (r != i) Iterator.single(row(ids(i), ids(r)))
+      else if (!linked(i)) Iterator.single(row(ids(i), ids(i)))
       else Iterator.empty
     }
   }

@@ -297,7 +297,7 @@ object Similarity {
   }
 
   /** [[graft.dedup.BucketPairs]] for [[nearDupPairs]]. */
-  private final class CosinePairs(threshold: Double) extends graft.dedup.BucketPairs(Long.MaxValue) {
+  private final class CosinePairs(threshold: Double) extends graft.dedup.BucketPairs.OfRows(Long.MaxValue) {
     private val vecs = scala.collection.mutable.ArrayBuffer[Array[Double]]()
     private val norms = scala.collection.mutable.ArrayBuffer[Double]()
     // Σ x(j)·y(j), left to right in double, as vector_cosine accumulates

@@ -1,6 +1,9 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.StructType
 
 /** Bridge to Spark 4's `private[sql]` Column ↔ Expression converters
   * (`org.apache.spark.sql.classic.ExpressionUtils`). Needed by
@@ -31,4 +34,11 @@ object GraftSqlBridge {
     * blocks, so the clone reads the same materialized rows. */
   def withSession(df: DataFrame, s: SparkSession): DataFrame =
     classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession], df.queryExecution.logical)
+
+  /** A DataFrame over Catalyst rows of `schema` as they are
+    * (`internalCreateDataFrame` is private[sql]): no `Row` serializer runs,
+    * which `createDataFrame(RDD[Row], schema)` would apply to every row.
+    * The scan gives no partitioning; a caller that needs one states it. */
+  def internalFrame(s: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
+    s.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 }

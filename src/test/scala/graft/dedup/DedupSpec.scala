@@ -341,6 +341,86 @@ class DedupSpec extends SparkSuite {
     assert(actionStages.head.numTasks == parallelism)
   }
 
+  test("phashNearDup: with no bucket able to pass the cap, the call runs the map stage alone") {
+    import org.apache.spark.scheduler._
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val (call, action, marker) = ("phash-no-count", "phash-no-count-action", "phash-no-count-marker")
+    def group(j: SparkListenerJobStart) = j.properties.getProperty("spark.jobGroup.id")
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
+    val markers = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (group(e) == marker) markers.incrementAndGet() else jobs.add(e)
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = stages.add(e.stageInfo)
+    }
+    sc.addSparkListener(listener)
+    val pairs = try {
+      // 300 docs under a cap of 300: the exchange's 1,200 rows (one per doc
+      // and band) bound every bucket within the cap, so no job counts them
+      val pairs = withJobCount(call)(Dedup.phashNearDup(phashCorpus, "id", "ph", maxHamming = 3,
+        maxBucket = 300))._1
+      val got = withJobCount(action)(pairs.as[(Long, Long, Int)].collect())._1
+      // the bus delivers in order: once the marker job has started, the
+      // listener has seen every event of the two groups, their stages too
+      withJobCount(marker)(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 30000000000L
+      while (markers.get == 0 && System.nanoTime() < deadline) Thread.sleep(10)
+      got
+    } finally sc.removeSparkListener(listener)
+    val docs = phashCorpus.as[(Long, Long)].collect().toSeq.map { case (i, h) => (Some(i), Some(h)) }
+    assert(pairs.sorted.toSeq == cappedPairs(docs, maxHamming = 3, bits = 64, maxBucket = 300).sorted)
+    def writesShuffle(s: StageInfo) = s.taskMetrics.shuffleWriteMetrics.recordsWritten > 0
+    val done = stages.asScala.toSeq
+    val callJobs = jobs.asScala.toSeq.filter(group(_) == call)
+    val actionJobs = jobs.asScala.toSeq.filter(group(_) == action)
+    // the call's one job is the one shuffle map stage
+    assert(callJobs.length == 1, callJobs.map(_.stageIds))
+    val map = done.filter(s => callJobs.head.stageIds.contains(s.stageId))
+    assert(map.length == 1 && writesShuffle(map.head), map.map(_.name))
+    // the action's one job skips that stage (same RDDs) and runs the kernel
+    assert(actionJobs.length == 1, actionJobs.map(_.stageIds))
+    val ran = done.filter(s => actionJobs.head.stageIds.contains(s.stageId))
+    assert(ran.length == 1 && !writesShuffle(ran.head), ran.map(_.name))
+    val skipped = actionJobs.head.stageInfos.filterNot(_.stageId == ran.head.stageId)
+    assert(skipped.map(_.rddInfos.map(_.id).toSet) == Seq(map.head.rddInfos.map(_.id).toSet))
+  }
+
+  test("phashNearDup: the no-count path and the count path (AQE off) match the brute force") {
+    // long string ids, long ids, NULL hashes, NULL ids, a duplicated id and
+    // an exact-hash bucket; a cap above the doc count, so with AQE no job
+    // counts the buckets, and without AQE (no runtime row count) one does
+    val docs = phashCorpus.as[(Long, Long)].collect().toSeq
+    val hA = 0x1111222233334444L
+    val edge: Seq[(Option[Long], Option[Long])] =
+      docs.map { case (i, p) => (Some(i), Some(p)) } ++
+        Seq((Some(1000L), None), (None, None), (None, Some(docs(3)._2)), (Some(5L), Some(docs(5)._2 ^ 1L))) ++
+        (0 until 12).map(k => (Some(2000L + k), Some(hA)))
+    val maxBucket = edge.length
+    val expected = cappedPairs(edge, maxHamming = 3, bits = 64, maxBucket).sorted
+    val asText = edge.map { case (i, p) => (i.map(n => f"near-duplicate-doc-$n%012d"), p) }
+    val expectedText = cappedPairs(asText, maxHamming = 3, bits = 64, maxBucket).sorted
+    assert(expected.length > 100 && expected.exists(p => p._1 == 5L || p._2 == 5L))
+    val noAqe = spark.newSession()
+    noAqe.conf.set("spark.sql.adaptive.enabled", "false")
+    for ((session, adaptive) <- Seq((spark, true), (noAqe, false)); parts <- Seq(1, 8)) {
+      val what = s"adaptive $adaptive, $parts partitions"
+      def run(in: org.apache.spark.sql.DataFrame) = {
+        val (out, jobs) = withJobCount(s"phash-paths, $what, ${in.schema("id").dataType}")(
+          Dedup.phashNearDup(org.apache.spark.sql.GraftSqlBridge.withSession(in.repartition(parts), session),
+            "id", "ph", maxHamming = 3, maxBucket = maxBucket))
+        // with AQE the call runs the input's exchange and the one map stage,
+        // and no count; without AQE it runs the count alone
+        assert(jobs == (if (adaptive) 2 else 1), s"$what: $jobs jobs at call time")
+        out
+      }
+      assert(run(edge.toDF("id", "ph")).as[(Long, Long, Int)].collect().sorted.toSeq == expected, what)
+      assert(run(asText.toDF("id", "ph")).as[(String, String, Int)].collect().sorted.toSeq == expectedText,
+        what)
+    }
+  }
+
   test("minhashCandidates, jaccardPairs, nearDupPairs: one exchange into the kernel, no join") {
     val parallelism = spark.sparkContext.defaultParallelism
     // a range as wide as the session is scan-shaped, so q11 adds no spread
@@ -642,6 +722,18 @@ class DedupSpec extends SparkSuite {
     assert((cached -- before).isEmpty)
   }
 
+  test("connectedComponents: one-task labels keep their one partition, so a count is one job") {
+    // the labels are Catalyst rows wrapped as a frame: without the stated
+    // single partition, an aggregate over them would add an exchange (2 jobs)
+    val edges = (0L until 500L).map(i => (i, (i * 7) % 500)).toDF("a_id", "b_id").repartition(4)
+    val (labels, rounds, _) = Dedup.connectedComponentsStats(edges)
+    assert(rounds == 0)
+    val (n, jobs) = withJobCount("graft_cc_labels_count")(labels.count())
+    assert(n == 500L)
+    assert(jobs == 1, s"$jobs jobs")
+    Dedup.freeCheckpoint(labels)
+  }
+
   test("spanningForest: never more rows than its input, fewer on redundant edges") {
     // a path is a tree: every edge is needed, so the forest keeps the count
     val n = 4096L
@@ -667,7 +759,9 @@ class DedupSpec extends SparkSuite {
     // per-chunk forests must still be one component rooted at 0
     val n = SpanningForest.MaxNodes + 1000L
     val rows = (0L until n).iterator.flatMap(i =>
-      Iterator(org.apache.spark.sql.Row(i, i + 1), org.apache.spark.sql.Row(i + 1, i)))
+      Iterator[org.apache.spark.sql.catalyst.InternalRow](
+        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](i, i + 1)),
+        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](i + 1, i))))
     val out = SpanningForest.contract(rows).map(r => (r.getLong(0), r.getLong(1))).toArray
     assert(out.length < n + 10) // the repeats are gone: ~n edges, not 2n
     val parent = scala.collection.mutable.LongMap[Long]()
@@ -680,6 +774,29 @@ class DedupSpec extends SparkSuite {
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
     assert((0L to n).forall(find(_) == 0L))
+  }
+
+  test("Catalyst-row passes keep what they hold past a reused row buffer") {
+    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    // a projection writes every row into one buffer, as a sorted run's
+    // reader may: the phash kernel's string ids and the forest's
+    // NULL-endpoint rows must be copies, or they all read the last row
+    val phash = UnsafeProjection.create(Array[DataType](LongType, StringType, IntegerType, LongType))
+    val ids = (0 until 5).map(i => f"near-duplicate-doc-$i%012d")
+    val bucket = ids.iterator.map(id =>
+      phash(new GenericInternalRow(Array[Any](7L, UTF8String.fromString(id), 0, 0x10L))))
+    val kernel = new Dedup.PhashPairs(maxHamming = 3, width = 16, maxBucket = 10, StringType,
+      Array.emptyLongArray)
+    val got = kernel.pairs(bucket).map(r => (r.getUTF8String(0).toString, r.getUTF8String(1).toString))
+    assert(got.toSet == ids.combinations(2).map(p => (p(0), p(1))).toSet)
+    val edge = UnsafeProjection.create(Array[DataType](LongType, LongType))
+    val edges = Iterator[Array[Any]](Array(1L, null), Array(null, 2L), Array(3L, 4L))
+      .map(e => edge(new GenericInternalRow(e)))
+    val forest = SpanningForest.contract(edges)
+      .map(r => (Option(r.get(0, LongType)), Option(r.get(1, LongType)))).toSet
+    assert(forest == Set((Some(1L), None), (None, Some(2L)), (Some(4L), Some(3L))))
   }
 
   test("size-gated newRows: anti-join path above the sketch gate, exact semantics") {
